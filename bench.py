@@ -3,9 +3,11 @@
 line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
-Each query is materialized with a full-result action (count on the
-final plan) after a warm-up of the session; timings include plan
-optimization + execution, not session startup.
+Each query is materialized by writing its full result to Spark's
+``noop`` sink, which evaluates every column (``count`` would let
+Catalyst prune them), after a warm-up of the session; timings include
+plan optimization + execution, not session startup. The end-to-end
+flows in ``FLOWS`` run their own actions.
 """
 
 from __future__ import annotations

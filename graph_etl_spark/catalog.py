@@ -7,7 +7,10 @@ same nested-dict catalog, but dtypes are derived from Spark
 ``StructType`` and bridged to the reference's polars-style strings so
 the DB loaders' substring matching keeps working.
 
-Everything here is driver-side plain Python — no Spark jobs.
+Everything here is driver-side plain Python — no Spark jobs. The one
+exception is the staged-write pool: a parser's saves hand their write
+to ``CatalogStore.stage``, which overlaps them on a shared thread pool
+and registers them, in call order, at the next barrier.
 """
 
 from __future__ import annotations
@@ -16,9 +19,13 @@ import json
 import logging
 import os
 import shutil
+import threading
 import time
-from typing import Any
+from concurrent.futures import Future, ThreadPoolExecutor, wait
+from contextlib import contextmanager
+from typing import Any, Callable, Iterator
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import types as T
 
 logger = logging.getLogger("graph_etl_spark")
@@ -84,6 +91,26 @@ def schema_to_ref_types(schema: T.StructType) -> dict[str, str]:
 
 
 # ---------------------------------------------------------------------------
+# Staged-write pool. One per process, so re-running init()/parse() never
+# adds threads. Each staged write is one Spark job that may use every
+# core on its own; a few writers in flight are enough to hide the
+# per-job driver latency that dominates small saves.
+# ---------------------------------------------------------------------------
+
+STAGING_WRITERS = 4
+_POOL: ThreadPoolExecutor | None = None
+_POOL_LOCK = threading.Lock()
+
+
+def _staging_pool() -> ThreadPoolExecutor:
+    global _POOL
+    with _POOL_LOCK:
+        if _POOL is None:
+            _POOL = ThreadPoolExecutor(STAGING_WRITERS, thread_name_prefix="getl-staging")
+        return _POOL
+
+
+# ---------------------------------------------------------------------------
 # Catalog store (same nested-dict shape as reference configs.json:
 #   {nodes: {label: {primary_key, constraints, indexs, properties_type,
 #                    files: {file: {metadatas, count}}}},
@@ -115,6 +142,9 @@ class CatalogStore:
         self.spark = None  # set by init()
         self.staging_format = "parquet"  # "parquet" (canonical) | "csv" (DB handoff)
         self.deterministic = True  # deterministic dedup survivor (SURVEY.md §7.4.1)
+        # staged writes in flight: (future, dataset path, register(count))
+        self._pending: list[tuple[Future, str, Callable[[int], None]]] = []
+        self._write_scopes = 0  # open overlapped_writes() scopes
 
     # -- filesystem layout ---------------------------------------------------
 
@@ -125,6 +155,7 @@ class CatalogStore:
 
     def clear(self) -> None:
         """Remove the whole output folder (reference ``clear()``)."""
+        self.barrier()
         if os.path.isdir(self.output_folder):
             shutil.rmtree(self.output_folder)
 
@@ -138,11 +169,68 @@ class CatalogStore:
             self._spark_schemas = data.get("_spark_schemas", {})
 
     def flush_configs(self) -> None:
+        self.barrier()
         self.ensure_dirs()
         payload = dict(self._configs)
         payload["_spark_schemas"] = self._spark_schemas
         with open(self.configs_path, "w") as f:
             json.dump(payload, f, indent=4, default=str)
+
+    # -- overlapped staged writes ------------------------------------------------
+
+    @contextmanager
+    def overlapped_writes(self) -> Iterator[None]:
+        """Scope (one parser run) whose staged writes overlap. Its exit is
+        a barrier: every write completes and is registered there, and the
+        first write failure is raised there, also when the body raised."""
+        self._write_scopes += 1
+        try:
+            yield
+        finally:
+            self._write_scopes -= 1
+            self.barrier()
+
+    def stage(self, path: str, write: Callable[[], int], register: Callable[[int], None]) -> None:
+        """Run ``write`` — the one Spark action of a save, writing the
+        dataset at ``path`` and returning its row count — and pass the
+        count to ``register``. Inside ``overlapped_writes`` the write goes
+        to the shared pool, carrying the caller's job group and other
+        Spark local properties, and ``register`` waits for the next
+        barrier; outside it both run now."""
+        if not self._write_scopes:
+            register(write())
+            return
+        if any(p == path for _, p, _ in self._pending):
+            self.barrier()  # a rewrite of one dataset must follow its first write
+        future = _staging_pool().submit(inheritable_thread_target(self.spark)(write))
+        self._pending.append((future, path, register))
+
+    def barrier(self) -> None:
+        """Wait for every pending staged write, then register them in
+        call order on this thread. If one failed, raise the first
+        failure and leave what a sequential run would have left: the
+        saves before it stay registered, and it and every later save
+        are removed from disk and not registered."""
+        pending, self._pending = self._pending, []
+        wait([future for future, _, _ in pending])
+        for i, (future, _, register) in enumerate(pending):
+            error = future.exception()
+            if error is not None:
+                for _, path, _ in pending[i:]:
+                    shutil.rmtree(path, ignore_errors=True)
+                raise error
+            register(future.result())
+
+    def staged_schema(self, path: str) -> T.StructType | None:
+        """The schema recorded for the staged dataset at ``path``, or
+        None when this catalog staged no dataset there."""
+        parent, name = os.path.split(os.path.abspath(path))
+        kind = {
+            os.path.abspath(self.nodes_dir): "nodes",
+            os.path.abspath(self.edges_dir): "edges",
+        }.get(parent)
+        schema_json = self._spark_schemas.get(f"{kind}/{name}") if kind else None
+        return T.StructType.fromJson(json.loads(schema_json)) if schema_json else None
 
     # -- node/edge registration ------------------------------------------------
 

@@ -5,6 +5,11 @@
 P4 null-drop → staged write + catalog update); ``map_ids`` registers a
 remap table applied later by the mapping engine (pipeline.py).
 
+Inside a parser the staged writes of its saves overlap: a save returns
+once its plan is built, its write runs on the catalog's staging pool,
+and the catalog entry is made when the parser ends, in call order. A
+write error surfaces there, at the parser's end (``CatalogStore.stage``).
+
 Spark-first deltas from the reference (SURVEY.md §1.4, §7.4):
   * staging is Parquet (canonical) or ';'-CSV (DB-handoff parity),
     chunked via the writer's ``maxRecordsPerFile`` instead of a global
@@ -18,13 +23,14 @@ from __future__ import annotations
 
 import logging
 import uuid
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .catalog import CatalogStore, schema_to_ref_types
 from .functions import dedup_by_key, flatten_string_arrays, strip_control_chars
+from .loaders.base import read_staged
 
 logger = logging.getLogger("graph_etl_spark")
 
@@ -73,6 +79,12 @@ class Context:
         indexs: list[str] | None = None,
         file_name: str | None = None,
     ) -> None:
+        """Normalize ``nodes`` and stage them as one dataset of ``label``.
+
+        Validation, callbacks and the plan run now. Inside a parser the
+        write completes, and the catalog entry is made, when the parser
+        ends; a write error is raised there. Outside a parser the write
+        runs before this returns."""
         if not self.store:
             return  # dummy context (filtered-out parser), context.py:103
         constraints = list(constraints or [])
@@ -91,6 +103,7 @@ class Context:
         df = strip_control_chars(df)
         df = dedup_by_key(df, [primary_key], deterministic=self.store.deterministic)
         df = df.na.drop(subset=[primary_key])
+        schema_json = df.schema.json()
 
         # pk is always a unique constraint (reference context.py:131-134)
         if primary_key not in constraints:
@@ -101,27 +114,32 @@ class Context:
         # overwrite-mode write and the dict-keyed catalog entry then make
         # a re-delivered save a true overwrite, not a second copy.
         file_name = file_name or f"FILE_{uuid.uuid4().hex}_{label}"
-        prev_count = (
-            self.store._configs["nodes"]
-            .get(label, {})
-            .get("files", {})
-            .get(file_name, {})
-            .get("count", 0)
-        )
-        count = self._write_staged(df, self.store.nodes_dir, file_name, NODE_CHUNK_ROWS)
-        self.store.register_node_file(
-            label=label,
-            file_name=file_name,
-            primary_key=primary_key,
-            properties_type=ref_types,
-            constraints=constraints,
-            indexs=indexs,
-            metadatas=self.metadatas,
-            count=count,
-            schema_json=df.schema.json(),
-        )
-        self.store._stats["nodes"] += count - prev_count
-        logger.info("saved %d %s nodes -> %s", count, label, file_name)
+        store = self.store
+
+        def register(count: int) -> None:
+            prev_count = (
+                store._configs["nodes"]
+                .get(label, {})
+                .get("files", {})
+                .get(file_name, {})
+                .get("count", 0)
+            )
+            store.register_node_file(
+                label=label,
+                file_name=file_name,
+                primary_key=primary_key,
+                properties_type=ref_types,
+                constraints=constraints,
+                indexs=indexs,
+                metadatas=self.metadatas,
+                count=count,
+                schema_json=schema_json,
+            )
+            store._stats["nodes"] += count - prev_count
+            logger.info("saved %d %s nodes -> %s", count, label, file_name)
+
+        path = f"{store.nodes_dir}/{file_name}"
+        store.stage(path, self._staged_write(df, path, NODE_CHUNK_ROWS), register)
 
     # -- edge save (reference context.py:200-250) ------------------------------
 
@@ -133,6 +151,8 @@ class Context:
         end_id: str,
         ignore_mapping: bool = False,
     ) -> None:
+        """Normalize ``edges`` and stage them as one dataset of
+        ``edge_type``; when the write completes is as for ``save_nodes``."""
         if not self.store:
             return
         df = self._to_spark(edges, sample_hint=10_000)
@@ -150,22 +170,28 @@ class Context:
         df = strip_control_chars(df)
         df = dedup_by_key(df, ["start", "end"], deterministic=self.store.deterministic)
         df = df.na.drop(subset=["start", "end"])
+        schema_json = df.schema.json()
 
         file_name = f"FILE_{uuid.uuid4().hex}_{start_label}{edge_type}{end_label}"
-        count = self._write_staged(df, self.store.edges_dir, file_name, EDGE_CHUNK_ROWS)
-        self.store.register_edge_file(
-            edge_type=edge_type,
-            file_name=file_name,
-            start=start_id if ":" in start_id else f"{start_id}:id",
-            end=end_id if ":" in end_id else f"{end_id}:id",
-            properties_type=ref_types,
-            ignore_mapping=ignore_mapping,
-            metadatas=self.metadatas,
-            count=count,
-            schema_json=df.schema.json(),
-        )
-        self.store._stats["edges"] += count
-        logger.info("saved %d %s edges -> %s", count, edge_type, file_name)
+        store = self.store
+
+        def register(count: int) -> None:
+            store.register_edge_file(
+                edge_type=edge_type,
+                file_name=file_name,
+                start=start_id if ":" in start_id else f"{start_id}:id",
+                end=end_id if ":" in end_id else f"{end_id}:id",
+                properties_type=ref_types,
+                ignore_mapping=ignore_mapping,
+                metadatas=self.metadatas,
+                count=count,
+                schema_json=schema_json,
+            )
+            store._stats["edges"] += count
+            logger.info("saved %d %s edges -> %s", count, edge_type, file_name)
+
+        path = f"{store.edges_dir}/{file_name}"
+        store.stage(path, self._staged_write(df, path, EDGE_CHUNK_ROWS), register)
 
     # -- id mapping registration (reference context.py:50-59) ------------------
 
@@ -187,43 +213,36 @@ class Context:
 
     # -- staged write ----------------------------------------------------------
 
-    def _write_staged(
-        self, df: DataFrame, base_dir: str, file_name: str, chunk_rows: int
-    ) -> int:
-        """Write one staged dataset; returns row count.
+    def _staged_write(self, df: DataFrame, path: str, chunk_rows: int) -> Callable[[], int]:
+        """Plan one staged write; return its action, which writes the
+        dataset and returns its row count.
 
         Chunking by ``maxRecordsPerFile`` (no global row_number shuffle —
         SURVEY.md §2.5 W1 note). The catalog row count rides the write
         itself via ``df.observe`` — ONE Spark action per save, no
-        persist/count double-pass and no cache memory pressure at scale
-        (previously: persist + count + write sharing a cached lineage).
+        persist/count double-pass and no cache memory pressure at scale.
         """
         self.store.ensure_dirs()
-        path = f"{base_dir}/{file_name}"
-        observation = Observation(f"staged_rows_{file_name}")
+        observation = Observation(f"staged_rows_{path.rsplit('/', 1)[-1]}")
         df = df.observe(observation, F.count(F.lit(1)).alias("rows"))
         writer = df.write.mode("overwrite").option("maxRecordsPerFile", chunk_rows)
         if self.store.staging_format == "csv":
-            writer.option("sep", ";").option("header", True).csv(path)
+            writer = writer.format("csv").option("sep", ";").option("header", True)
         else:
-            writer.parquet(path)
-        return observation.get["rows"]
+            writer = writer.format("parquet")
+
+        def write() -> int:
+            writer.save(path)
+            return observation.get["rows"]
+
+        return write
 
     # -- staged read -----------------------------------------------------------
 
     def read_staged(self, kind: str, file_name: str) -> DataFrame:
         """Re-read a staged dataset with its exact recorded schema — no
-        inference drift (SURVEY.md §7.4.3)."""
-        from pyspark.sql.types import StructType
-
+        inference drift (SURVEY.md §7.4.3) and no inference job. Pending
+        staged writes complete first."""
+        self.store.barrier()
         base = self.store.nodes_dir if kind == "nodes" else self.store.edges_dir
-        path = f"{base}/{file_name}"
-        key = f"{kind}/{file_name}"
-        schema_json = self.store._spark_schemas.get(key)
-        reader = self.store.spark.read
-        if self.store.staging_format == "csv":
-            reader = reader.option("sep", ";").option("header", True)
-            if schema_json:
-                return reader.schema(StructType.fromJson(__import__("json").loads(schema_json))).csv(path)
-            return reader.option("inferSchema", True).csv(path)
-        return reader.parquet(path)
+        return read_staged(self.store.spark, f"{base}/{file_name}")

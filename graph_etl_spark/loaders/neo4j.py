@@ -18,11 +18,10 @@ Staged parquet is converted to the ';'-CSV handoff files APOC expects.
 
 from __future__ import annotations
 
-import glob
 import os
 from typing import Any
 
-from .base import Loader
+from .base import Loader, staged_csv_files
 
 # reference type_mapping (neo4j_loader.py:14-33): dtype-string substring →
 # (cypher converter, csv header type)
@@ -81,25 +80,6 @@ class Neo4JLoader(Loader):
             c = summary.counters
             return (c.nodes_created or 0) + (c.relationships_created or 0)
 
-    def _csv_files(self, file_path: str) -> list[str]:
-        """Staged dataset dir → list of CSV file URIs for apoc.load.csv.
-        Parquet staging is converted once to ';'-CSV handoff files."""
-        csvs = sorted(glob.glob(f"{file_path}/*.csv"))
-        if csvs:
-            return csvs
-        if self.spark is not None and os.path.isdir(file_path):
-            handoff = file_path + "__csv"
-            if not os.path.isdir(handoff):
-                (
-                    self.spark.read.parquet(file_path)
-                    .write.mode("overwrite")
-                    .option("sep", ";")
-                    .option("header", True)
-                    .csv(handoff)
-                )
-            return sorted(glob.glob(f"{handoff}/*.csv"))
-        return [file_path]
-
     # -- metadata clause (D3, neo4j_loader.py:157-175) ------------------------------
 
     def _metadata_clause(self, metadatas: dict[str, Any]) -> str:
@@ -140,7 +120,7 @@ class Neo4JLoader(Loader):
         )
         set_clause = f" SET {sets}" if sets else ""
         total = 0
-        for f in self._csv_files(file_path):
+        for f in staged_csv_files(self.spark, file_path):
             stmt = (
                 f"CALL apoc.periodic.iterate("
                 f"\"CALL apoc.load.csv('file://{os.path.abspath(f)}', "
@@ -185,7 +165,7 @@ class Neo4JLoader(Loader):
             if col not in ("start", "end", "mapped_from")
         )
         total = 0
-        for f in self._csv_files(file_path):
+        for f in staged_csv_files(self.spark, file_path):
             stmt = (
                 f"CALL apoc.periodic.iterate("
                 f"\"CALL apoc.load.csv('file://{os.path.abspath(f)}', "

@@ -15,19 +15,25 @@ Scale notes: node tables are written partitioned-by-label directory
 layout; the semi/anti joins broadcast the smaller side under AQE. The
 P6 non-empty-endpoint predicate is applied before the join so nulls
 from J1's full-outer remap don't reach the sink tables.
+
+Staged inputs are read with their catalog schema, and the loader's own
+node tables with the schema it wrote them with, so no load re-infers a
+schema from parquet footers (one Spark job per inference).
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 from typing import Any
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions import non_empty_endpoints
-from .base import Loader
+from .base import Loader, read_staged
 
 
 class SparkNativeGraphLoader(Loader):
@@ -44,18 +50,29 @@ class SparkNativeGraphLoader(Loader):
         self.metadata_strategy = metadata_strategy
         self._node_keys: dict[str, str] = {}  # label -> primary_key
         self._metadata_rows: list[dict[str, Any]] = []
+        self._table_schemas: dict[str, StructType] = {}  # node table path -> schema
 
     # -- helpers -----------------------------------------------------------------
 
-    def _read_staged(self, file_path: str) -> DataFrame:
-        if any(f.endswith(".csv") for f in os.listdir(file_path)):
-            return (
-                self.spark.read.option("sep", ";")
-                .option("header", True)
-                .option("inferSchema", True)
-                .csv(file_path)
-            )
-        return self.spark.read.parquet(file_path)
+    def _read_table(self, path: str) -> DataFrame:
+        """A node table of this sink, read with the schema this loader
+        wrote it with; a table that existed before is inferred once."""
+        schema = self._table_schemas.get(path)
+        if schema is None:
+            df = self.spark.read.parquet(path)
+            self._table_schemas[path] = df.schema
+            return df
+        return self.spark.read.schema(schema).parquet(path)
+
+    def _wrote_table(self, path: str, schema: StructType, existed: bool) -> None:
+        """Record the schema of rows just appended to the node table at
+        ``path``. An append whose columns differ from the recorded ones
+        drops the record, so the next read infers the mixed table."""
+        known = self._table_schemas.get(path)
+        if not existed:
+            self._table_schemas[path] = schema
+        elif known is not None and known.simpleString() != schema.simpleString():
+            del self._table_schemas[path]
 
     def _node_table_path(self, label: str) -> str:
         return f"{self.graph_dir}/nodes/{label}"
@@ -71,17 +88,19 @@ class SparkNativeGraphLoader(Loader):
         via ``df.observe`` (guide §1 — the old count-then-write pair
         executed the whole semi/anti-join pipeline twice per file).
         Behavior parity with the old ``if count: append`` gate: a
-        zero-row append must not conjure an empty table directory into
-        existence (``os.path.isdir`` gates MATCH/upsert semantics), so
-        a path this call CREATED for zero rows is removed again."""
-        existed = os.path.isdir(path)
+        zero-row append leaves the table as it was. A path this call
+        CREATED is removed again (``os.path.isdir`` gates MATCH/upsert
+        semantics); in an existing table the files it added are."""
+        before = set(os.listdir(path)) if os.path.isdir(path) else None
         obs = Observation(f"loader_rows_{uuid.uuid4().hex}")
         self._append(df.observe(obs, F.count(F.lit(1)).alias("rows")), path)
         count = int(obs.get["rows"])
-        if count == 0 and not existed:
-            import shutil
-
-            shutil.rmtree(path, ignore_errors=True)
+        if count == 0:
+            if before is None:
+                shutil.rmtree(path, ignore_errors=True)
+            else:
+                for name in set(os.listdir(path)) - before:
+                    os.remove(os.path.join(path, name))
         return count
 
     # -- Loader interface -----------------------------------------------------------
@@ -96,7 +115,7 @@ class SparkNativeGraphLoader(Loader):
         constraints: list[str],
         indexs: list[str],
     ) -> int:
-        df = self._read_staged(file_path)
+        df = read_staged(self.spark, file_path)
         if self.metadata_strategy == "as_property":
             for k, v in (metadatas or {}).items():
                 df = df.withColumn(f"meta_{k}", F.lit(v))
@@ -107,10 +126,13 @@ class SparkNativeGraphLoader(Loader):
 
         path = self._node_table_path(label)
         # D1 upsert semantics: MERGE on pk ≙ anti-join existing table then append
-        if os.path.isdir(path):
-            existing = self.spark.read.parquet(path).select(primary_key)
+        existed = os.path.isdir(path)
+        if existed:
+            existing = self._read_table(path).select(primary_key)
             df = df.join(existing, on=primary_key, how="left_anti")
         count = self._append_counted(df, path)
+        if count:
+            self._wrote_table(path, df.schema, existed)
         self._node_keys[label] = primary_key
         return count
 
@@ -123,7 +145,7 @@ class SparkNativeGraphLoader(Loader):
         metadatas: dict[str, Any],
         properties_type: dict[str, str],
     ) -> int:
-        df = self._read_staged(file_path)
+        df = read_staged(self.spark, file_path)
         df = non_empty_endpoints(df)  # P6
         start_label, _, start_prop = start.partition(":")
         end_label, _, end_prop = end.partition(":")
@@ -135,11 +157,11 @@ class SparkNativeGraphLoader(Loader):
             if self.node_finding_strategy == "match":
                 if not nodes_exist:
                     return 0  # no endpoint nodes loaded → no edges (MATCH semantics)
-                nodes = self.spark.read.parquet(npath).select(F.col(prop).alias(side))
+                nodes = self._read_table(npath).select(F.col(prop).alias(side))
                 df = df.join(nodes, on=side, how="left_semi")  # J3
             else:  # 'create' (J4): synthesize blank endpoint nodes
                 if nodes_exist:
-                    nodes = self.spark.read.parquet(npath).select(F.col(prop).alias(side))
+                    nodes = self._read_table(npath).select(F.col(prop).alias(side))
                     missing = df.join(nodes, on=side, how="left_anti")
                 else:
                     missing = df
@@ -150,16 +172,15 @@ class SparkNativeGraphLoader(Loader):
                 )
                 if blanks.limit(1).count():
                     if nodes_exist:
-                        existing_df = self.spark.read.parquet(npath)
+                        existing_df = self._read_table(npath)
                         merged = existing_df.unionByName(blanks, allowMissingColumns=True)
                         tmp = npath + "__tmp"
                         merged.write.mode("overwrite").parquet(tmp)
-                        import shutil
-
                         shutil.rmtree(npath)
                         os.rename(tmp, npath)
                     else:
                         blanks.write.mode("overwrite").parquet(npath)
+                    self._table_schemas.pop(npath, None)  # rewritten table
 
         df = df.withColumn("__edge_type", F.lit(edge_type))
         if self.metadata_strategy == "as_property":

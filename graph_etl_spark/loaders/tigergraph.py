@@ -15,11 +15,10 @@ endpoint declarations are rejected (tigergraph_loader.py:215-216).
 
 from __future__ import annotations
 
-import glob
 import os
 from typing import Any
 
-from .base import Loader
+from .base import Loader, staged_csv_files
 
 # dtype-string substring → GSQL type (tigergraph_loader.py:14-31)
 _GSQL_TYPES: list[tuple[str, str]] = [
@@ -69,23 +68,6 @@ class TigerGraphLoader(Loader):
         self._conn.gsql(stmt)
         return 0
 
-    def _csv_files(self, file_path: str) -> list[str]:
-        csvs = sorted(glob.glob(f"{file_path}/*.csv"))
-        if csvs:
-            return csvs
-        if self.spark is not None and os.path.isdir(file_path):
-            handoff = file_path + "__csv"
-            if not os.path.isdir(handoff):
-                (
-                    self.spark.read.parquet(file_path)
-                    .write.mode("overwrite")
-                    .option("sep", ";")
-                    .option("header", True)
-                    .csv(handoff)
-                )
-            return sorted(glob.glob(f"{handoff}/*.csv"))
-        return [file_path]
-
     def load_nodes(
         self,
         file_path: str,
@@ -113,7 +95,7 @@ class TigerGraphLoader(Loader):
 
         cols = ", ".join(f"${c}" for c in properties_type)
         total = 0
-        for f in self._csv_files(file_path):
+        for f in staged_csv_files(self.spark, file_path):
             job = (
                 f"CREATE LOADING JOB load_{label} FOR GRAPH {self.graph_name} {{ "
                 f'DEFINE FILENAME f = "{os.path.abspath(f)}"; '
@@ -157,7 +139,7 @@ class TigerGraphLoader(Loader):
         prop_cols = [c for c in properties_type if c not in ("mapped_from",)]
         cols = ", ".join(f"${c}" for c in prop_cols)
         total = 0
-        for f in self._csv_files(file_path):
+        for f in staged_csv_files(self.spark, file_path):
             job = (
                 f"CREATE LOADING JOB load_{edge_type} FOR GRAPH {self.graph_name} {{ "
                 f'DEFINE FILENAME f = "{os.path.abspath(f)}"; '

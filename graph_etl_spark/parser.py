@@ -13,6 +13,11 @@ Two usage forms, same as the reference:
 The decorated form registers the function for ``parse()``; the
 ``with`` form runs inline and applies the mapping engine on exit
 (reference utils.py:278-283).
+
+The staged writes of one parser's saves overlap and complete at the
+parser's end — the return of the decorated function or the exit of the
+``with`` block, also when it raises. Write errors surface there, and a
+parser with a failed write is not ledgered.
 """
 
 from __future__ import annotations
@@ -20,6 +25,7 @@ from __future__ import annotations
 import inspect
 import logging
 import os
+from contextlib import ExitStack
 from typing import Any, Callable
 
 from .catalog import get_store
@@ -35,6 +41,7 @@ class Parser:
         self.sources_path = sources_path or []
         self.metadatas = dict(metadatas)
         self._fn_id: str | None = None
+        self._writes = ExitStack()  # the open with-form's overlapped_writes scope
 
     # -- shared skip logic (reference utils.py:255-269) --------------------------
 
@@ -72,7 +79,8 @@ class Parser:
             if reason:
                 logger.info("skip %s: %s", fn_id, reason)
                 return
-            fn(Context(store, self.metadatas))
+            with store.overlapped_writes():
+                fn(Context(store, self.metadatas))
             store.flush_configs()
             store.ledger_append(PARSER_LEDGER, fn_id)
 
@@ -93,9 +101,11 @@ class Parser:
         if reason:
             logger.info("skip inline parser: %s", reason)
             return Context(None, None)  # dummy: saves are no-ops
+        self._writes.enter_context(store.overlapped_writes())
         return Context(store, self.metadatas)
 
     def __exit__(self, exc_type, exc, tb) -> bool:
+        self._writes.__exit__(exc_type, exc, tb)  # pending writes complete here
         if exc_type is None:
             from .pipeline import _map_property
 

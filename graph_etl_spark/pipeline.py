@@ -140,6 +140,7 @@ def _map_property(store) -> None:
     registrations, then J2 natural-key auto-maps."""
     from .functions import coalesce_remap
 
+    store.barrier()
     ctx = Context(store, {})
     for edge_type, files in list(store._configs["edges"].items()):
         for file_name, info in list(files.items()):
@@ -217,6 +218,7 @@ def load(loader, clear_source: bool = False) -> dict[str, int]:
     """Materialize staged graph into a sink. Nodes first, then edges
     (ordering is load-bearing for the 'match' endpoint strategy)."""
     store = get_store()
+    store.barrier()
     totals = {"nodes": 0, "edges": 0}
 
     for label, cfg in store._configs["nodes"].items():

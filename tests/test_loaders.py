@@ -5,6 +5,8 @@ on generated statements; the SparkNative loader is asserted end-to-end).
 
 from __future__ import annotations
 
+import os
+
 import graph_etl_spark as getl
 from graph_etl_spark import Neo4JLoader, SparkNativeGraphLoader, TigerGraphLoader
 from graph_etl_spark.catalog import get_store
@@ -54,6 +56,29 @@ def test_spark_native_create_blank_nodes(spark, output_dir):
     assert nodes.count() == 3
     blanks = [r for r in nodes.collect() if r.asDict().get("__blank_node")]
     assert len(blanks) == 1 and blanks[0]["id"] == 99
+
+
+def test_spark_native_zero_row_append_leaves_table_unchanged(spark, output_dir):
+    _stage_small_graph(spark, output_dir)
+    loader = SparkNativeGraphLoader(spark, graph_dir=f"{output_dir}/graph")
+    getl.load(loader)
+    table = f"{output_dir}/graph/nodes/Person"
+    before = sorted(os.listdir(table))
+    store = get_store()
+    cfg = store._configs["nodes"]["Person"]
+    (file_name,) = cfg["files"]
+    # the same staged file again: the upsert anti-join keeps no row
+    n = loader.load_nodes(
+        file_path=f"{store.nodes_dir}/{file_name}",
+        label="Person",
+        primary_key="id",
+        metadatas={},
+        properties_type=cfg["properties_type"],
+        constraints=[],
+        indexs=[],
+    )
+    assert n == 0
+    assert sorted(os.listdir(table)) == before
 
 
 def test_neo4j_dry_run_statements(spark, output_dir):
