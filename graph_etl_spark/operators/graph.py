@@ -2116,6 +2116,12 @@ def ktruss(
     for _ in range(max(1, int(max_iter))):
         sup = _triangle_edge_support(e).localCheckpoint(eager=False)
         keep = sup.filter(F.col("support") >= need).select("u", "v")
+        # pruned's EAGER checkpoint runs the job that also materializes
+        # sup's lazy pin (keep reads sup, and a lazy local checkpoint
+        # fills its blocks as a side effect of the first job over it).
+        # That is what makes the next two steps safe: releasing e (sup
+        # no longer needs it), and reusing sup as final_sup at the
+        # fixpoint. Keep this checkpoint eager and ahead of both.
         pruned = e.join(keep, ["u", "v"], "left_semi").localCheckpoint()
         n_pruned = pruned.count()
         release_checkpoint(e)

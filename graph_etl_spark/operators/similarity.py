@@ -9,6 +9,16 @@ of a top-k search is small by construction and broadcast; brute force
 is then a map-side cross of every data partition with the broadcast
 queries followed by a per-query top-k (one shuffle on query id).
 IVF cuts the scanned fraction to ~1/nlist per probe.
+
+Every per-query top-k here ranks through ONE primitive, ``_topk``. It
+fixes the tie order (score, then neighbor id ascending) and the
+NULL/NaN contract (a row whose score is NULL or NaN is dropped before
+ranking, so an undefined score never takes a rank). It has two
+strategies with bit-identical results: the reference plan, one rank
+window over every scored row of a query; and the partial plan, which
+first cuts each map partition to k rows per query with an
+Arrow-batched ``mapInPandas`` reducer and then runs the same window
+over those survivors.
 """
 
 from __future__ import annotations
@@ -43,6 +53,95 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def _topk(
+    scored: DataFrame,
+    k: int,
+    score: str,
+    asc: bool,
+    *,
+    partial: bool = False,
+    rank: str = "rank",
+) -> DataFrame:
+    """The k best rows of ``scored`` per ``query_id``, numbered 1..k in
+    column ``rank``: ``score`` ascending when ``asc`` (a distance),
+    descending otherwise (a similarity), ties on ``neighbor_id``
+    ascending — unique per query, so the order is total. Every column
+    passes through; callers select their output.
+
+    Rows with a NULL or NaN score are dropped before ranking. A NULL
+    embedding makes any score NULL, a zero-norm side makes a cosine
+    NULL (non-ANSI 0/0) or NaN, and a NaN component makes it NaN.
+    Spark orders NaN above every number and NULL first ascending, so
+    a kept row would take rank 1 of a descending search (NaN) or of a
+    distance search (NULL).
+
+    ``partial=False`` ranks every scored row of a query in one window
+    partitioned by query_id: the reference plan, one reducer per
+    query. ``partial=True`` first reduces each map partition to k rows
+    per query with ``mapInPandas`` (a running per-batch top-k, so state
+    is bounded at queries × k rows whatever the partition size); the
+    exchange then carries partitions × queries × k rows and the same
+    window ranks them. Both stages use the same tie order, so the two
+    strategies return bit-identical rows."""
+    kk = int(k)
+    # NULL counts as NaN, so one test that evaluates the score once
+    # drops both
+    nan = F.lit(float("nan"))
+    scored = scored.filter(~F.isnan(F.coalesce(F.col(score).cast("double"), nan)))
+    if partial:
+        by = ["query_id", score, "neighbor_id"]
+
+        def local_topk(batches):
+            import pandas as pd
+
+            acc = None
+            for pdf in batches:
+                both = pdf if acc is None else pd.concat((acc, pdf), ignore_index=True)
+                both = both.sort_values(by, ascending=[True, asc, True])
+                acc = both.groupby("query_id", sort=False).head(kk)
+            if acc is not None and len(acc):
+                yield acc
+
+        scored = scored.mapInPandas(local_topk, scored.schema)
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score).asc() if asc else F.col(score).desc(),
+        F.col("neighbor_id").asc(),
+    )
+    return scored.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= kk)
+
+
+def _hoisted_cosine(round_to: int) -> Column:
+    """Rounded cosine of ``__qvec`` and ``__dvec`` whose norms are
+    already hoisted into per-row columns ``__qn`` and ``__dn``: the
+    per-pair cosine is dot/(qn·dn), identical arithmetic in identical
+    order to ``cosine``, so it is bit-equal while the O(dim) norm fold
+    runs once per row instead of once per pair."""
+    return F.round(
+        dot(F.col("__qvec"), F.col("__dvec")) / (F.col("__qn") * F.col("__dn")),
+        round_to,
+    )
+
+
+def _cosine_scored(
+    data: DataFrame, queries: DataFrame, id_col: str, vec_col: str, round_to: int
+) -> DataFrame:
+    """Every query × data pair except a vector with itself, scored by
+    rounded ``cos_sim``: the exact cosine scan both brute-force
+    strategies rank. The query side is broadcast (small by
+    construction); the data side streams map-side."""
+    q = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
+    ).withColumn("__qn", norm(F.col("__qvec")))
+    d = fan_out(data).select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__dvec")
+    ).withColumn("__dn", norm(F.col("__dvec")))
+    return (
+        d.crossJoin(F.broadcast(q))
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .withColumn("cos_sim", _hoisted_cosine(round_to))
+    )
+
+
 def brute_force_topk(
     data: DataFrame,
     queries: DataFrame,
@@ -54,45 +153,15 @@ def brute_force_topk(
     """Exact cosine top-k: for each query vector, the k nearest data
     vectors (excluding itself). Deterministic ranking: rounded cosine
     desc, then neighbor id asc — engine-stable even at float-precision
-    ties.
+    ties. Pairs with an undefined cosine (zero-norm or NULL side) are
+    dropped (``_topk``'s NULL/NaN contract).
 
     The queries side is broadcast (small by construction); the heavy
     side streams map-side.
     """
-    # norms are hoisted to one column per ROW; the per-pair cosine is
-    # then dot/(qn·dn) — identical arithmetic in identical order, so the
-    # result is bit-equal while the O(dim) norm fold runs n_q + n_d
-    # times instead of n_q × n_d times
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
-    ).withColumn("__qn", norm(F.col("__qvec")))
-    d = fan_out(data).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__dvec")
-    ).withColumn("__dn", norm(F.col("__dvec")))
-    scored = (
-        d.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cos_sim",
-            F.round(
-                dot(F.col("__qvec"), F.col("__dvec")) / (F.col("__qn") * F.col("__dn")),
-                round_to,
-            ),
-        )
-        # cosine is undefined for a zero-norm side (0/0 = NaN under
-        # permissive eval). Drop such rows HERE, in both exact paths:
-        # Spark's window orderBy desc ranks NaN greatest while pandas
-        # sort_values places NaN last, so leaving them in would make
-        # the scale path silently diverge from this reference path.
-        .filter(~F.isnan("cos_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    scored = _cosine_scored(data, queries, id_col, vec_col, round_to)
+    return _topk(scored, k, "cos_sim", asc=False).select(
+        "query_id", "neighbor_id", "cos_sim", "rank"
     )
 
 
@@ -385,66 +454,16 @@ def brute_force_topk_scale(
     round_to: int = 4,
 ) -> DataFrame:
     """Exact cosine top-k, cluster-scale plan — identical results to
-    ``brute_force_topk``, different physical strategy.
-
-    ``brute_force_topk``'s final window partitions by query_id, so ONE
-    reducer ranks all n scored rows of a query — fine as the oracle
-    reference path, a straggler at 100 TB. Here every map partition
-    first reduces its local candidates to k per query (Arrow-batched
-    ``mapInPandas`` with a running per-batch top-k, so state is bounded
-    at queries × k rows regardless of partition size); the exchange
-    then carries only partitions × queries × k rows and the final
-    window ranks that tiny set. Scoring stays JVM-side; only the
+    ``brute_force_topk``, different physical strategy: the same scan
+    ranked by ``_topk``'s partial strategy, so no single reducer ranks
+    all scored rows of a query. Scoring stays JVM-side; only the
     3-column (query_id, neighbor_id, cos_sim) candidates cross the
-    Arrow boundary. Ties break identically in both stages
-    ((cos_sim desc, neighbor_id asc) — neighbor_id is unique per query)
-    so the result is bit-identical to the reference path."""
-    # same per-row norm hoist as the reference path — bit-identical
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
-    ).withColumn("__qn", norm(F.col("__qvec")))
-    d = fan_out(data).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__dvec")
-    ).withColumn("__dn", norm(F.col("__dvec")))
-    scored = (
-        d.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cos_sim",
-            F.round(
-                dot(F.col("__qvec"), F.col("__dvec")) / (F.col("__qn") * F.col("__dn")),
-                round_to,
-            ),
-        )
-        # same NaN drop as the reference path (see brute_force_topk):
-        # keeps the two paths bit-identical even on zero-norm vectors
-        .filter(~F.isnan("cos_sim"))
-        .select("query_id", "neighbor_id", "cos_sim")
+    Arrow boundary."""
+    scored = _cosine_scored(data, queries, id_col, vec_col, round_to).select(
+        "query_id", "neighbor_id", "cos_sim"
     )
-    out_schema = scored.schema
-
-    def local_topk(batches):
-        import pandas as pd
-
-        acc = None
-        for pdf in batches:
-            both = pdf if acc is None else pd.concat((acc, pdf), ignore_index=True)
-            both = both.sort_values(
-                ["query_id", "cos_sim", "neighbor_id"],
-                ascending=[True, False, True],
-            )
-            acc = both.groupby("query_id", sort=False).head(k)
-        if acc is not None and len(acc):
-            yield acc
-
-    part = scored.mapInPandas(local_topk, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        part.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    return _topk(scored, k, "cos_sim", asc=False, partial=True).select(
+        "query_id", "neighbor_id", "cos_sim", "rank"
     )
 
 
@@ -1045,19 +1064,10 @@ def ivf_topk(
     scored = (
         assigned.join(F.broadcast(probes), "list_id")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cos_sim",
-            F.round(
-                dot(F.col("__qvec"), F.col("__dvec")) / (F.col("__qn") * F.col("__dn")),
-                round_to,
-            ),
-        )
+        .withColumn("cos_sim", _hoisted_cosine(round_to))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    return _topk(scored, k, "cos_sim", asc=False).select(
+        "query_id", "neighbor_id", "cos_sim", "rank"
     )
 
 
@@ -1549,13 +1559,8 @@ def pq_adc_topk(
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_dist", "rank")
+    return _topk(scored, k, "adc_dist", asc=True).select(
+        "query_id", "neighbor_id", "adc_dist", "rank"
     )
 
 
@@ -1624,13 +1629,8 @@ def pq_refine_topk(
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("l2_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        refined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "l2_dist", "rank")
+    return _topk(refined, k, "l2_dist", asc=True).select(
+        "query_id", "neighbor_id", "l2_dist", "rank"
     )
 
 
@@ -1809,13 +1809,8 @@ def ivfpq_topk(
             ),
         )
     )
-    w_sl = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("neighbor_id").asc()
-    )
-    sl = (
-        candidates.withColumn("__r", F.row_number().over(w_sl))
-        .filter(F.col("__r") <= shortlist)
-        .select("query_id", "neighbor_id")
+    sl = _topk(candidates, shortlist, "adc_dist", asc=True, rank="__r").select(
+        "query_id", "neighbor_id"
     )
 
     d_full = data.select(
@@ -1830,13 +1825,8 @@ def ivfpq_topk(
             F.round(_l2sq(F.col("__qvec"), F.col("__dvec")), round_to),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("l2_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        refined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "l2_dist", "rank")
+    return _topk(refined, k, "l2_dist", asc=True).select(
+        "query_id", "neighbor_id", "l2_dist", "rank"
     )
 
 
@@ -2109,12 +2099,8 @@ def mips_topk(
     product, self excluded. Deterministic ranking: rounded dot desc,
     then neighbor id asc.
 
-    ``scale=False`` is the reference plan (per-query rank window over
-    all scored rows); ``scale=True`` is the cluster plan — the same
-    Arrow-batched per-partition top-k reduction as
-    ``brute_force_topk_scale`` (bounded queries × k state per
-    partition, exchange carries partitions × queries × k rows), ties
-    broken identically so the two plans are bit-equal.
+    ``scale`` picks ``_topk``'s strategy: ``False`` the reference rank
+    window, ``True`` the partial per-partition reduction — bit-equal.
 
     At 100 TB the standard ANN reduction applies: augment each data
     vector with sqrt(M² − ‖x‖²) (M = max norm) and each query with 0,
@@ -2137,33 +2123,8 @@ def mips_topk(
         )
         .select("query_id", "neighbor_id", "dot_sim")
     )
-    if scale:
-        out_schema = scored.schema
-
-        def local_topk(batches):
-            import pandas as pd
-
-            acc = None
-            for pdf in batches:
-                both = (
-                    pdf if acc is None else pd.concat((acc, pdf), ignore_index=True)
-                )
-                both = both.sort_values(
-                    ["query_id", "dot_sim", "neighbor_id"],
-                    ascending=[True, False, True],
-                )
-                acc = both.groupby("query_id", sort=False).head(k)
-            if acc is not None and len(acc):
-                yield acc
-
-        scored = scored.mapInPandas(local_topk, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot_sim", "rank")
+    return _topk(scored, k, "dot_sim", asc=False, partial=scale).select(
+        "query_id", "neighbor_id", "dot_sim", "rank"
     )
 
 
@@ -2231,37 +2192,20 @@ def mips_ivf_topk(
             F.col("neighbor_id").alias("cent_id"), F.col("__daug").alias("cent_vec")
         )
     )
-    cent_rows = centroids.collect()  # nlist rows — tiny, deliberate
-    cent_arr = F.array(
-        *[
-            F.struct(
-                F.lit(r["cent_id"]).alias("cent_id"),
-                F.array(*[F.lit(float(x)) for x in r["cent_vec"]]).alias("cvec"),
-            )
-            for r in cent_rows
-        ]
-    )
-
-    def nearest_lists(vec: Column, n: int) -> Column:
-        scored = F.transform(
-            cent_arr,
-            lambda c: F.struct(
-                F.round(cosine(vec, c["cvec"]), 6).alias("sim"),
-                c["cent_id"].alias("cent_id"),
-            ),
-        )
-        return F.slice(F.reverse(F.array_sort(scored)), 1, n)
-
+    cent_arr = _ivf_cent_arr(centroids.collect())  # nlist rows — tiny, deliberate
     assigned = d.select(
         "neighbor_id",
         "__dvec",
-        nearest_lists(F.col("__daug"), 1)[0]["cent_id"].alias("list_id"),
+        _ivf_nearest_lists(cent_arr, F.col("__daug"), 1)[0]["cent_id"].alias("list_id"),
     )
     probes = q.select(
         "query_id",
         "__qvec",
         F.explode(
-            F.transform(nearest_lists(F.col("__qaug"), nprobe), lambda s: s["cent_id"])
+            F.transform(
+                _ivf_nearest_lists(cent_arr, F.col("__qaug"), nprobe),
+                lambda s: s["cent_id"],
+            )
         ).alias("list_id"),
     )
     scored = (
@@ -2272,13 +2216,8 @@ def mips_ivf_topk(
             F.round(dot(F.col("__qvec"), F.col("__dvec")), round_to),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot_sim", "rank")
+    return _topk(scored, k, "dot_sim", asc=False).select(
+        "query_id", "neighbor_id", "dot_sim", "rank"
     )
 
 
@@ -2298,10 +2237,8 @@ def l2_topk(
     excluded. Deterministic ranking: rounded distance ASC, then
     neighbor id ASC.
 
-    ``scale=True`` swaps in the Arrow-batched per-partition top-k
-    reduction (bounded queries × k state, exchange carries
-    partitions × queries × k rows) — bit-equal to the reference rank
-    window because both stages share the tie order."""
+    ``scale`` picks ``_topk``'s strategy: ``False`` the reference rank
+    window, ``True`` the partial per-partition reduction — bit-equal."""
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
     )
@@ -2326,33 +2263,8 @@ def l2_topk(
         .withColumn("l2_dist", F.round(dist, round_to))
         .select("query_id", "neighbor_id", "l2_dist")
     )
-    if scale:
-        out_schema = scored.schema
-
-        def local_topk(batches):
-            import pandas as pd
-
-            acc = None
-            for pdf in batches:
-                both = (
-                    pdf if acc is None else pd.concat((acc, pdf), ignore_index=True)
-                )
-                both = both.sort_values(
-                    ["query_id", "l2_dist", "neighbor_id"],
-                    ascending=[True, True, True],
-                )
-                acc = both.groupby("query_id", sort=False).head(k)
-            if acc is not None and len(acc):
-                yield acc
-
-        scored = scored.mapInPandas(local_topk, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("l2_dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "l2_dist", "rank")
+    return _topk(scored, k, "l2_dist", asc=True, partial=scale).select(
+        "query_id", "neighbor_id", "l2_dist", "rank"
     )
 
 
@@ -2513,9 +2425,6 @@ def mmr_rerank(
     )
     rel = cands.localCheckpoint(eager=False)
 
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__score").desc(), F.col("neighbor_id").asc()
-    )
     selected: DataFrame | None = None
     for step in range(1, int(k) + 1):
         if selected is None:
@@ -2548,8 +2457,7 @@ def mmr_rerank(
                 - (F.lit(1.0) - F.lit(lam)) * F.col("__ms"),
             )
         pick = (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
+            _topk(scored, 1, "__score", asc=False, rank="__rn")
             .select(
                 "query_id",
                 F.lit(step).alias("step"),
@@ -2623,13 +2531,9 @@ def hamming_topk(
     Output: (query_id, neighbor_id, hamming, rank).
 
     Scale: packing is map-side and the query side broadcasts either
-    way. ``scale=False`` ranks with the per-query window (the oracle
-    reference shape — one reducer per query); ``scale=True`` is the
-    cluster plan: every map partition first reduces its own candidates
-    to k per query (Arrow-batched ``mapInPandas``, state bounded at
-    queries × k rows), the exchange carries only partitions × queries
-    × k rows, and the final window ranks that tiny set. Integer
-    distances + id tie-break make the two paths bit-identical."""
+    way. ``scale`` picks ``_topk``'s strategy: ``False`` the reference
+    rank window (the oracle shape), ``True`` the partial per-partition
+    reduction — bit-identical."""
     d = binarize_embeddings(data, dim, id_col=id_col, vec_col=vec_col).select(
         F.col(id_col).alias("neighbor_id"), F.col("words").alias("__dw")
     )
@@ -2651,36 +2555,8 @@ def hamming_topk(
         .withColumn("hamming", ham)
         .select("query_id", "neighbor_id", "hamming")
     )
-    if scale:
-        out_schema = scored.schema
-        kk = int(k)
-
-        def local_topk(batches):
-            import pandas as pd
-
-            acc = None
-            for pdf in batches:
-                both = (
-                    pdf
-                    if acc is None
-                    else pd.concat((acc, pdf), ignore_index=True)
-                )
-                both = both.sort_values(
-                    ["query_id", "hamming", "neighbor_id"],
-                    ascending=[True, True, True],
-                )
-                acc = both.groupby("query_id", sort=False).head(kk)
-            if acc is not None and len(acc):
-                yield acc
-
-        scored = scored.mapInPandas(local_topk, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("hamming").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= int(k))
-        .select("query_id", "neighbor_id", "hamming", "rank")
+    return _topk(scored, k, "hamming", asc=True, partial=scale).select(
+        "query_id", "neighbor_id", "hamming", "rank"
     )
 
 
@@ -2706,8 +2582,8 @@ def binary_rerank_topk(
     boundary is deterministic and engine-identical.
     Stage 2: the shortlist joins back to the raw vectors and re-ranks
     by exact cosine (``round_to``-dp rounded, desc, id tie-break);
-    zero-norm candidates (NaN cosine) drop in the rerank — the
-    ``brute_force_topk`` contract.
+    candidates with an undefined cosine drop in the rerank — the
+    ``_topk`` NULL/NaN contract.
 
     Output: (query_id, neighbor_id, hamming, cos_sim, rank ≤ k).
 
@@ -2736,23 +2612,10 @@ def binary_rerank_topk(
     scored = (
         dvec.join(F.broadcast(cand), "neighbor_id")
         .join(F.broadcast(qvec), "query_id")
-        .withColumn(
-            "cos_sim",
-            F.round(
-                dot(F.col("__qvec"), F.col("__dvec"))
-                / (F.col("__qn") * F.col("__dn")),
-                int(round_to),
-            ),
-        )
-        .filter(~F.isnan("cos_sim"))
+        .withColumn("cos_sim", _hoisted_cosine(int(round_to)))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= int(k))
-        .select("query_id", "neighbor_id", "hamming", "cos_sim", "rank")
+    return _topk(scored, k, "cos_sim", asc=False).select(
+        "query_id", "neighbor_id", "hamming", "cos_sim", "rank"
     )
 
 

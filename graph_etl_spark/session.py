@@ -8,9 +8,12 @@ Arrow enabled for the pandas-UDF extension operators.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+logger = logging.getLogger("graph_etl_spark")
 
 
 def get_spark(
@@ -110,13 +113,19 @@ def release_checkpoint(df) -> None:
     frame per round (Louvain's gated movers, labeled-degree joins)
     otherwise accumulate checkpoint blocks linearly with round count
     (ADVICE r17) — call this once the round's consumers have
-    materialized. Safe no-op on any other plan shape or if the
-    internal accessor ever drifts: worst case the blocks live until
-    the context's usual cleanup, exactly as before."""
+    materialized.
+
+    The frame must have NO live consumer: the checkpoint truncated its
+    lineage, so the dropped blocks cannot be recomputed and any later
+    action on ``df`` (or on a frame built from it) fails with a missing
+    checkpoint block, far from this call. On any other plan shape, or
+    if the internal accessor ever drifts, this is a no-op (logged at
+    debug level on the ``graph_etl_spark`` logger): worst case the
+    blocks live until the context's usual cleanup, exactly as before."""
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:  # pragma: no cover - internal API drift
-        pass
+    except Exception as exc:
+        logger.debug("release_checkpoint: nothing to release (%s)", exc)
 
 
 def stats_free_checkpoint(df):

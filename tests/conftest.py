@@ -31,3 +31,21 @@ def output_dir(tmp_path):
 @pytest.fixture()
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture()
+def nan_null_vectors(spark):
+    """Six 2-d vectors, one with a NaN component (id 4) and one NULL
+    embedding (id 5), plus the query frame (id 0). Scores against ids
+    4 and 5 are NaN or NULL; every similarity top-k must drop them,
+    whichever strategy ranks."""
+    rows = [
+        (0, [1.0, 0.0]),
+        (1, [0.9, 0.1]),
+        (2, [0.0, 1.0]),
+        (3, [-1.0, 0.0]),
+        (4, [float("nan"), 1.0]),
+        (5, None),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    return df, df.filter("vec_id = 0")

@@ -217,9 +217,10 @@ def test_stream_save_nodes(spark, output_dir, tmp_path):
     assert sum(f["count"] for f in files.values()) == 10
 
 
-def test_topk_scale_matches_reference_path(spark, sf_dir):
+def test_topk_scale_matches_reference_path(spark, sf_dir, nan_null_vectors):
     """brute_force_topk_scale is the same exact operator under a
-    different physical plan — results must be bit-identical."""
+    different physical plan — results must be bit-identical, also
+    when some cosines are NaN or NULL (both drop them)."""
     from graph_etl_spark import operators as ops
     from pyspark.sql import functions as F
 
@@ -228,6 +229,17 @@ def test_topk_scale_matches_reference_path(spark, sf_dir):
     ref = ops.brute_force_topk(e, q, k=5).orderBy("query_id", "rank").collect()
     scale = ops.brute_force_topk_scale(e, q, k=5).orderBy("query_id", "rank").collect()
     assert ref == scale
+
+    df, q = nan_null_vectors
+    ref = ops.brute_force_topk(df, q, k=3).orderBy("query_id", "rank").collect()
+    scale = ops.brute_force_topk_scale(df, q, k=3).orderBy("query_id", "rank").collect()
+    # no NULL or NaN score is ranked (NaN != NaN)
+    assert all(
+        r["cos_sim"] is not None and r["cos_sim"] == r["cos_sim"]
+        for r in ref + scale
+    )
+    assert ref == scale
+    assert [r["neighbor_id"] for r in ref] == [1, 2, 3]
 
 
 def test_read_table_and_queries_are_conf_neutral(spark, sf_dir):

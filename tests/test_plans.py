@@ -782,15 +782,24 @@ def test_rake_wordstats_broadcast(spark, entry):
 
 
 def test_mips_and_l2_scale_paths_partial_reduce(spark, entry):
-    """The MIPS/L2 cluster plans must carry the Arrow per-partition
-    top-k stage (MapInPandas) so the exchange is partitions x queries
-    x k, and route the probe set via broadcast."""
-    for q in (entry.q_sim_mips_topk, entry.q_sim_l2_topk):
+    """The MIPS/L2/Hamming cluster plans must carry the Arrow
+    per-partition top-k stage (MapInPandas) so the exchange is
+    partitions x queries x k, and route the probe set via broadcast.
+    The reference entries must rank in the window alone: a strategy
+    mix-up in the shared top-k fails one side or the other."""
+    for q in (
+        entry.q_sim_mips_topk,
+        entry.q_sim_l2_topk,
+        entry.q_sim_hamming_topk_scale,
+    ):
         df = q(spark, SF)
         p = plan_string(df)
         assert "MapInPandas" in p, p[:2000]
         st = plan_stats(df)
         assert st.sort_merge_joins == 0
+    for q in (entry.q_sim_cosine_topk, entry.q_sim_hamming_topk):
+        p = plan_string(q(spark, SF))
+        assert "MapInPandas" not in p, p[:2000]
 
 
 def test_node2vec_per_step_joins_no_cartesian(spark, entry):

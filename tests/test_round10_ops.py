@@ -817,10 +817,11 @@ def test_rake_keywords_validation(spark):
         rake_keywords(df, top_k=0)
 
 
-def test_mips_topk_scale_matches_reference(spark):
+def test_mips_topk_scale_matches_reference(spark, nan_null_vectors):
     """The Arrow per-partition reduction plan must be bit-equal to the
     reference rank-window plan, and MIPS must rank by magnitude (a
-    longer vector in the same direction wins over a closer unit one)."""
+    longer vector in the same direction wins over a closer unit one).
+    NaN and NULL dot products are dropped by both plans."""
     from graph_etl_spark.operators import mips_topk
 
     rows = [
@@ -837,6 +838,18 @@ def test_mips_topk_scale_matches_reference(spark):
     key = lambda r: (r["query_id"], r["rank"], r["neighbor_id"], r["dot_sim"])
     assert sorted(map(key, ref)) == sorted(map(key, sc))
     # magnitude wins: neighbor 1 (dot 10) over 2 (dot 0.9) over 3 (0)
+    order = [r["neighbor_id"] for r in sorted(ref, key=lambda r: r["rank"])]
+    assert order == [1, 2, 3]
+
+    df, q = nan_null_vectors
+    ref = mips_topk(df, q, k=3, scale=False).collect()
+    sc = mips_topk(df, q, k=3, scale=True).collect()
+    # no NULL or NaN score is ranked (NaN != NaN)
+    assert all(
+        r["dot_sim"] is not None and r["dot_sim"] == r["dot_sim"]
+        for r in ref + sc
+    )
+    assert sorted(map(key, ref)) == sorted(map(key, sc))
     order = [r["neighbor_id"] for r in sorted(ref, key=lambda r: r["rank"])]
     assert order == [1, 2, 3]
 
@@ -1095,7 +1108,7 @@ def test_mg_heavy_hitters_guarantees(spark):
         mg_heavy_hitters(spark.createDataFrame(rows[:1], "key string"), "key", k=0)
 
 
-def test_l2_topk_scale_matches_reference_and_metric(spark):
+def test_l2_topk_scale_matches_reference_and_metric(spark, nan_null_vectors):
     from graph_etl_spark.operators import l2_topk
 
     rows = [
@@ -1113,6 +1126,19 @@ def test_l2_topk_scale_matches_reference_and_metric(spark):
     assert sorted(map(key, ref)) == sorted(map(key, sc))
     order = [(r["neighbor_id"], r["l2_dist"]) for r in sorted(ref, key=lambda r: r["rank"])]
     assert order == [(1, 1.0), (2, 2.0), (3, 5.0)]
+
+    # a NULL embedding must not rank as the nearest neighbour
+    df, q = nan_null_vectors
+    ref = l2_topk(df, q, k=3, scale=False).collect()
+    sc = l2_topk(df, q, k=3, scale=True).collect()
+    # no NULL or NaN score is ranked (NaN != NaN)
+    assert all(
+        r["l2_dist"] is not None and r["l2_dist"] == r["l2_dist"]
+        for r in ref + sc
+    )
+    assert sorted(map(key, ref)) == sorted(map(key, sc))
+    order = [r["neighbor_id"] for r in sorted(ref, key=lambda r: r["rank"])]
+    assert order == [1, 2, 3]
 
 
 def test_seasonal_anomaly_integer_flag(spark):

@@ -520,7 +520,7 @@ def test_domain_shift_properties(spark):
         ops.domain_shift(a, b, n_buckets=0)
 
 
-def test_hamming_scale_path_bit_identical(spark):
+def test_hamming_scale_path_bit_identical(spark, nan_null_vectors):
     emb = spark.createDataFrame(
         [(i, [float(((i * 13 + j * 7) % 17) - 8) for j in range(64)]) for i in range(40)],
         "vec_id long, embedding array<float>",
@@ -535,6 +535,17 @@ def test_hamming_scale_path_bit_identical(spark):
         for r in ops.hamming_topk(emb, q, dim=64, k=5, scale=True).collect()
     )
     assert ref == sc
+
+    df, q = nan_null_vectors
+    ref = ops.hamming_topk(df, q, dim=2, k=3).collect()
+    sc = ops.hamming_topk(df, q, dim=2, k=3, scale=True).collect()
+    # no NULL or NaN score is ranked (NaN != NaN)
+    assert all(
+        r["hamming"] is not None and r["hamming"] == r["hamming"]
+        for r in ref + sc
+    )
+    key = lambda r: (r["query_id"], r["rank"], r["neighbor_id"], r["hamming"])
+    assert sorted(map(key, ref)) == sorted(map(key, sc))
 
 
 def test_as_of_join_directions(spark):
