@@ -15,10 +15,14 @@ size matters).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import release_checkpoint, stats_free_checkpoint
+from ..session import (
+    observed_checkpoint,
+    release_checkpoint,
+    stats_free_checkpoint,
+)
 
 
 def degrees(
@@ -57,8 +61,9 @@ def connected_components(
     neighborhood, (2) pointer-jump (component := component's component
     — the Shiloach-Vishkin shortcut), so label distance roughly doubles
     per round and convergence is ~O(log diameter) rounds, not
-    O(diameter). Two shuffles per round, early-exit via an
-    AGGREGATE-only convergence check (no collect of data rows).
+    O(diameter). Two shuffles per round; the round's eager checkpoint
+    also counts the vertices whose label changed (an ``observe`` probe
+    riding the same job), and the loop exits when that count is 0.
 
     Raises RuntimeError if ``max_iter`` rounds pass without reaching
     the fixpoint — a silently-partial labeling would propagate wrong
@@ -113,18 +118,16 @@ def connected_components(
                 F.col("component"), F.coalesce("__cc", F.col("component"))
             ).alias("component"),
         )
-        # ONE materialization pass per round: the eager checkpoint both
-        # truncates lineage and is the only full computation; the
-        # convergence probe then scans the checkpointed blocks (no
-        # shuffles, no recompute — previously this was a separate
-        # old-vs-new join that re-materialized the round's result)
-        snap = jumped.localCheckpoint(eager=True)
-        changed = (
-            snap.filter(F.col("__old") != F.col("component")).limit(1).count()
+        # ONE job per round: the eager checkpoint truncates lineage
+        # and the changed-label count rides it as an observe probe
+        snap, probe = observed_checkpoint(
+            jumped,
+            "connected_components",
+            {"changed": F.count_if(F.col("__old") != F.col("component"))},
         )
         labels.unpersist()
         labels = snap.select(id_col, "component")
-        if changed == 0:
+        if probe["changed"] == 0:
             converged = True
             break
     sym.unpersist()
@@ -450,17 +453,19 @@ def kcore(
     Algorithm: iterative peeling. Each round computes undirected
     degrees over the surviving edge set and drops vertices under k;
     edges incident to a dropped endpoint go with them. Converges when
-    a round removes nothing (checked with an aggregate-only count
-    compare — no data-row collect). The result is the classic
+    a round removes nothing: each round's eager checkpoint also counts
+    the surviving edges (an ``observe`` probe riding the same job), so
+    the check costs no job of its own. The result is the classic
     fixpoint, independent of peel order.
 
     Scale: each round is one map-side edge symmetrization, one degree
     aggregation, and two semi-joins — all shuffling on vertex id; the
     surviving frame localCheckpoints per round to truncate lineage
-    (the connected_components discipline). Rounds are bounded by
-    ``max_iter`` (the peel usually stabilizes in a handful of rounds
-    on power-law graphs: each round removes the entire current
-    sub-``k`` shell, not one vertex)."""
+    (the connected_components discipline) and the superseded round's
+    blocks are released, so only the edge set the result reads stays
+    pinned. Rounds are bounded by ``max_iter`` (the peel usually
+    stabilizes in a handful of rounds on power-law graphs: each round
+    removes the entire current sub-``k`` shell, not one vertex)."""
     # undirected simple graph: canonical-order the endpoints, dedupe,
     # drop self-loops (a self-loop would count itself twice and can
     # never be peeled)
@@ -471,8 +476,9 @@ def kcore(
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint()
     )
+    e, probe = observed_checkpoint(e, "kcore")
+    n_edges = probe["rows"]
     for _ in range(max(1, max_iter)):
         deg = (
             e.select(F.col("a").alias("id"))
@@ -481,16 +487,18 @@ def kcore(
             .agg(F.count(F.lit(1)).alias("degree"))
         )
         keep = deg.filter(F.col("degree") >= int(k)).select("id")
-        pruned = (
-            e.join(keep, e.a == keep.id, "left_semi")
-            .join(keep, e.b == keep.id, "left_semi")
-            .localCheckpoint()
+        pruned, probe = observed_checkpoint(
+            e.join(keep, e.a == keep.id, "left_semi").join(
+                keep, e.b == keep.id, "left_semi"
+            ),
+            "kcore",
         )
-        # aggregate-only convergence check (1-row collect)
-        if pruned.count() == e.count():
-            e = pruned
-            break
+        # pruned is materialized, so nothing reads e any more
+        release_checkpoint(e)
         e = pruned
+        if probe["rows"] == n_edges:
+            break
+        n_edges = probe["rows"]
     deg = (
         e.select(F.col("a").alias("id"))
         .unionAll(e.select(F.col("b").alias("id")))
@@ -595,9 +603,9 @@ def bfs_distances(
             .select(F.col("b").alias("id"))
             .distinct()
             .join(visited.select("id"), "id", "left_anti")
-            .localCheckpoint()
         )
-        if nxt.limit(1).count() == 0:
+        nxt, probe = observed_checkpoint(nxt, "bfs_distances")
+        if probe["rows"] == 0:
             break
         visited = visited.unionByName(
             nxt.withColumn("distance", F.lit(hop))
@@ -1542,7 +1550,7 @@ def louvain_communities(
         rev = gated.select(
             F.col("__old").alias("__ro"), F.col("__new").alias("__rn")
         ).distinct()
-        applied = (
+        applied, probe = observed_checkpoint(
             gated.join(
                 rev,
                 (F.col("__old") == F.col("__rn"))
@@ -1550,11 +1558,11 @@ def louvain_communities(
                 "left",
             )
             .filter(F.col("__ro").isNull() | (F.col("__new") < F.col("__old")))
-            .select("id", "__new")
-            .localCheckpoint(eager=True)
+            .select("id", "__new"),
+            "louvain_communities",
         )
         pins.append(applied)
-        if applied.count() == 0:
+        if probe["rows"] == 0:
             for p in pins:
                 release_checkpoint(p)
             zero_streak += 1
@@ -1787,17 +1795,21 @@ def louvain_multilevel(
             .distinct()
             .select("id", F.col("id").alias("community"))
         )
-        comm_l = louvain_communities(
-            cur,
-            seed,
-            max_rounds=rounds_per_level,
-            src="c_src",
-            dst="c_dst",
-            weight_col="weight",
-        ).localCheckpoint(eager=True)
+        comm_l, probe = observed_checkpoint(
+            louvain_communities(
+                cur,
+                seed,
+                max_rounds=rounds_per_level,
+                src="c_src",
+                dst="c_dst",
+                weight_col="weight",
+            ),
+            "louvain_multilevel",
+            {"moved": F.count_if(F.col("community") != F.col("id"))},
+        )
         # singleton-seeded level: zero applied moves == identity
         # labeling == every deeper level is a no-op (docstring proof)
-        if comm_l.filter(F.col("community") != F.col("id")).count() == 0:
+        if probe["moved"] == 0:
             break
         up = comm_l.select(
             F.col("id").alias("community"), F.col("community").alias("__up")
@@ -1898,9 +1910,9 @@ def betweenness_sample(
             .join(visited, ["s", "id"], "left_anti")
             .groupBy("s", "id")
             .agg(F.sum("sigma").alias("sigma"))
-            .localCheckpoint()
         )
-        if nxt.limit(1).count() == 0:
+        nxt, probe = observed_checkpoint(nxt, "betweenness_sample")
+        if probe["rows"] == 0:
             break
         levels.append(nxt)
         visited = visited.unionByName(nxt.select("s", "id")).localCheckpoint()
@@ -2071,9 +2083,11 @@ def ktruss(
     counts per-edge triangle support over the SURVIVING edges (the
     ``triangle_count`` wedge enumeration, each triangle crediting its
     three edges) and drops edges under k-2; converges when a round
-    removes nothing (aggregate-only check, the kcore convention —
-    extra rounds past the fixpoint are no-ops, so an oracle unrolls a
-    fixed budget). The fixpoint is peel-order independent.
+    removes nothing (the kcore convention: the round's eager
+    checkpoint also counts the surviving edges as an ``observe``
+    probe, so the check costs no extra job; extra rounds past the
+    fixpoint are no-ops, so an oracle unrolls a fixed budget). The
+    fixpoint is peel-order independent.
 
     Output: (u, v, support) — the surviving canonical edges with
     their in-truss support (recomputed at the fixpoint).
@@ -2100,18 +2114,18 @@ def ktruss(
             & (F.col("u") != F.col("v"))
         )
         .distinct()
-        .localCheckpoint()
     )
     need = int(k) - 2
-    # n_edges tracks |e| across rounds so the fixpoint test costs one
-    # count (of the just-checkpointed pruned frame) instead of two;
+    # every checkpoint of e also counts its rows (an observe probe on
+    # the same job), so the fixpoint test costs no job of its own;
     # sup is pinned per round so that at the fixpoint the final
     # support recompute — the most expensive pass, a full wedge
     # enumeration — reuses the round's already-materialized support
     # (pre-prune e == post-prune e there, so the frames are identical
     # by construction). Guide §2.4: don't recompute what the loop
     # already proved.
-    n_edges = e.count()
+    e, probe = observed_checkpoint(e, "ktruss")
+    n_edges = probe["rows"]
     final_sup = None
     for _ in range(max(1, int(max_iter))):
         sup = _triangle_edge_support(e).localCheckpoint(eager=False)
@@ -2122,8 +2136,10 @@ def ktruss(
         # That is what makes the next two steps safe: releasing e (sup
         # no longer needs it), and reusing sup as final_sup at the
         # fixpoint. Keep this checkpoint eager and ahead of both.
-        pruned = e.join(keep, ["u", "v"], "left_semi").localCheckpoint()
-        n_pruned = pruned.count()
+        pruned, probe = observed_checkpoint(
+            e.join(keep, ["u", "v"], "left_semi"), "ktruss"
+        )
+        n_pruned = probe["rows"]
         release_checkpoint(e)
         e = pruned
         if n_pruned == n_edges:
@@ -2202,9 +2218,9 @@ def closeness_sample(
             .select("s", F.col("b").alias("id"))
             .distinct()
             .join(visited, ["s", "id"], "left_anti")
-            .localCheckpoint(eager=True)
         )
-        if nxt.isEmpty():
+        nxt, probe = observed_checkpoint(nxt, "closeness_sample")
+        if probe["rows"] == 0:
             break
         level_counts.append(
             nxt.groupBy("s").agg(
@@ -2329,15 +2345,14 @@ def _min_label_fixpoint(
         seeded = labels.select(
             "id", F.col("lbl").alias("__old"), "lbl"
         )
-        obs = Observation()
-        snap = stats_free_checkpoint(
-            step(seeded).observe(
-                obs,
-                F.count_if(F.col("__old") != F.col("lbl")).alias("changed"),
-            )
+        snap, probe = observed_checkpoint(
+            step(seeded),
+            what,
+            {"changed": F.count_if(F.col("__old") != F.col("lbl"))},
+            fresh_stats=True,
         )
         labels = snap.select("id", "lbl")
-        if obs.get["changed"] == 0:
+        if probe["changed"] == 0:
             return labels
     raise RuntimeError(
         f"{what}: label propagation did not converge within "
@@ -2430,15 +2445,14 @@ def strongly_connected_components(
             vertices.select(F.col(id_col).alias("id"))
         ).distinct()
     active_v = stats_free_checkpoint(verts)
-    obs0 = Observation()
-    active_e = stats_free_checkpoint(
-        named.filter(F.col("a") != F.col("b"))
-        .distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("n_edges"))
+    active_e, probe = observed_checkpoint(
+        named.filter(F.col("a") != F.col("b")).distinct(),
+        "strongly_connected_components",
+        fresh_stats=True,
     )
-    # live edge count, threaded through observe metrics so trim's
+    # live edge count, threaded through observe probes so trim's
     # stability check never needs its own count job
-    n_edges = obs0.get["n_edges"]
+    n_edges = probe["rows"]
     # accumulated (id, comp) frames; comp is the settling phase's root
     # id — renamed to the component's numeric min at the end
     settled_parts: list[DataFrame] = []
@@ -2471,16 +2485,15 @@ def strongly_connected_components(
                 .select("id")
             )
             av = stats_free_checkpoint(active_v.join(both, "id", "left_semi"))
-            obs = Observation()
-            active_e = stats_free_checkpoint(
+            active_e, probe = observed_checkpoint(
                 active_e.join(
                     av.select(F.col("id").alias("a")), "a", "left_semi"
-                )
-                .join(av.select(F.col("id").alias("b")), "b", "left_semi")
-                .observe(obs, F.count(F.lit(1)).alias("n_edges"))
+                ).join(av.select(F.col("id").alias("b")), "b", "left_semi"),
+                "strongly_connected_components(trim)",
+                fresh_stats=True,
             )
             active_v = av
-            new_n = obs.get["n_edges"]
+            new_n = probe["rows"]
             stable = new_n == n_edges
             n_edges = new_n
             if stable:
@@ -2526,15 +2539,14 @@ def strongly_connected_components(
         active_v = stats_free_checkpoint(
             active_v.join(members, "id", "left_anti")
         )
-        obs_r = Observation()
-        active_e = stats_free_checkpoint(
+        active_e, probe = observed_checkpoint(
             active_e.join(
                 active_v.select(F.col("id").alias("a")), "a", "left_semi"
-            )
-            .join(active_v.select(F.col("id").alias("b")), "b", "left_semi")
-            .observe(obs_r, F.count(F.lit(1)).alias("n_edges"))
+            ).join(active_v.select(F.col("id").alias("b")), "b", "left_semi"),
+            "strongly_connected_components",
+            fresh_stats=True,
         )
-        n_edges = obs_r.get["n_edges"]
+        n_edges = probe["rows"]
     if not active_v.isEmpty():
         raise RuntimeError(
             "strongly_connected_components did not settle every vertex "

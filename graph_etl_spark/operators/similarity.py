@@ -12,13 +12,12 @@ IVF cuts the scanned fraction to ~1/nlist per probe.
 
 Every per-query top-k here ranks through ONE primitive, ``_topk``. It
 fixes the tie order (score, then neighbor id ascending) and the
-NULL/NaN contract (a row whose score is NULL or NaN is dropped before
-ranking, so an undefined score never takes a rank). It has two
-strategies with bit-identical results: the reference plan, one rank
-window over every scored row of a query; and the partial plan, which
-first cuts each map partition to k rows per query with an
-Arrow-batched ``mapInPandas`` reducer and then runs the same window
-over those survivors.
+NULL/NaN contract (a row whose score is NULL or NaN never takes a
+rank). It has two strategies with bit-identical results: the reference
+plan, one rank window over every scored row of a query; and the
+partial plan, which first cuts each map partition to k rows per query
+with an Arrow-batched ``mapInPandas`` reducer and then runs the same
+window over those survivors.
 """
 
 from __future__ import annotations
@@ -68,12 +67,20 @@ def _topk(
     ascending — unique per query, so the order is total. Every column
     passes through; callers select their output.
 
-    Rows with a NULL or NaN score are dropped before ranking. A NULL
-    embedding makes any score NULL, a zero-norm side makes a cosine
-    NULL (non-ANSI 0/0) or NaN, and a NaN component makes it NaN.
-    Spark orders NaN above every number and NULL first ascending, so
-    a kept row would take rank 1 of a descending search (NaN) or of a
-    distance search (NULL).
+    Rows with a NULL or NaN score never take a rank. A NULL embedding
+    makes any score NULL, a zero-norm side makes a cosine NULL
+    (non-ANSI 0/0) or NaN, and a NaN component makes it NaN. Spark
+    orders NaN above every number and NULL first ascending, so such a
+    row would take rank 1 of a descending search (NaN) or of a
+    distance search (NULL). The window therefore sorts them after
+    every valid row and the filter above it drops them, so valid rows
+    take ranks 1..m in the same order as if they had been dropped
+    first. The guard sits ABOVE the window on purpose: a filter on the
+    score below it is pushed through the projection that defines the
+    score, Catalyst substitutes the aliased score expression into the
+    pushed-down predicate (into the cross-join condition of a brute
+    force scan), and every pair's kernel then runs twice. A filter
+    over a window's output is not pushed below it.
 
     ``partial=False`` ranks every scored row of a query in one window
     partitioned by query_id: the reference plan, one reducer per
@@ -84,10 +91,8 @@ def _topk(
     window ranks them. Both stages use the same tie order, so the two
     strategies return bit-identical rows."""
     kk = int(k)
-    # NULL counts as NaN, so one test that evaluates the score once
-    # drops both
-    nan = F.lit(float("nan"))
-    scored = scored.filter(~F.isnan(F.coalesce(F.col(score).cast("double"), nan)))
+    # NULL counts as NaN, so one test covers both
+    bad = F.isnan(F.coalesce(F.col(score).cast("double"), F.lit(float("nan"))))
     if partial:
         by = ["query_id", score, "neighbor_id"]
 
@@ -96,6 +101,8 @@ def _topk(
 
             acc = None
             for pdf in batches:
+                # pandas reads a NULL and a NaN score both as NA
+                pdf = pdf[pdf[score].notna()]
                 both = pdf if acc is None else pd.concat((acc, pdf), ignore_index=True)
                 both = both.sort_values(by, ascending=[True, asc, True])
                 acc = both.groupby("query_id", sort=False).head(kk)
@@ -104,10 +111,13 @@ def _topk(
 
         scored = scored.mapInPandas(local_topk, scored.schema)
     w = Window.partitionBy("query_id").orderBy(
+        bad.asc(),
         F.col(score).asc() if asc else F.col(score).desc(),
         F.col("neighbor_id").asc(),
     )
-    return scored.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= kk)
+    return scored.withColumn(rank, F.row_number().over(w)).filter(
+        (F.col(rank) <= kk) & ~bad
+    )
 
 
 def _hoisted_cosine(round_to: int) -> Column:

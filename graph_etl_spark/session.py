@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import logging
 import os
+import time
 
 from pyspark.sql import SparkSession
 
@@ -165,3 +166,40 @@ def stats_free_checkpoint(df):
         return DataFrame(jdf, spark)
     except Exception:  # pragma: no cover - internal API drift
         return snap
+
+
+def observed_checkpoint(df, what: str, probes=None, *, fresh_stats: bool = False):
+    """Eager localCheckpoint of ``df`` that also computes named
+    aggregate probes over its rows, both in ONE Spark job.
+
+    A fixpoint round wants two things from the frame it just built:
+    the pinned snapshot (lineage truncated) and a convergence number
+    (rows left, labels changed). Asking ``count()``, ``isEmpty()`` or
+    ``limit(1).count()`` of the snapshot afterwards is a second job
+    over blocks that were just written. Here the probes ride the
+    checkpoint job as an ``observe`` metric instead.
+
+    ``probes`` maps a name to an aggregate Column; the default is the
+    row count under ``"rows"``. ``fresh_stats`` checkpoints through
+    ``stats_free_checkpoint`` (for loops whose size estimate would
+    otherwise compound round over round). Returns ``(snap, values)``
+    with ``values`` a dict of probe name to value. Each call logs one
+    DEBUG line on the ``graph_etl_spark`` logger: ``what`` (the
+    caller's name), the values and the round's milliseconds."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    if probes is None:
+        probes = {"rows": F.count(F.lit(1))}
+    obs = Observation()
+    t0 = time.perf_counter()
+    observed = df.observe(obs, *[c.alias(n) for n, c in probes.items()])
+    if fresh_stats:
+        snap = stats_free_checkpoint(observed)
+    else:
+        snap = observed.localCheckpoint(eager=True)
+    values = obs.get
+    logger.debug(
+        "%s: %s in %.1f ms", what, values, (time.perf_counter() - t0) * 1e3
+    )
+    return snap, values

@@ -802,6 +802,24 @@ def test_mips_and_l2_scale_paths_partial_reduce(spark, entry):
         assert "MapInPandas" not in p, p[:2000]
 
 
+def test_topk_scores_each_pair_once(spark, entry):
+    """The top-k NULL/NaN guard sits above the rank window, so the
+    optimized plan evaluates the similarity kernel once per pair: no
+    copy of it inlined into a join condition."""
+    for q in (
+        entry.q_sim_cosine_topk,
+        entry.q_sim_cosine_topk_scale,
+        entry.q_sim_mips_topk,
+        entry.q_sim_l2_topk,
+        entry.q_sim_hamming_topk,
+        entry.q_sim_hamming_topk_scale,
+    ):
+        opt = q(spark, SF)._jdf.queryExecution().optimizedPlan().toString()
+        assert opt.count("zip_with(") == 1, opt[:3000]
+        joins = [line for line in opt.splitlines() if "Join" in line]
+        assert not any("isnan" in line for line in joins), joins
+
+
 def test_node2vec_per_step_joins_no_cartesian(spark, entry):
     """Biased walks: every step is a pair of key-joins (candidates on
     vertex id, triangle test on (prev, cand)) — no cartesian
