@@ -8,21 +8,26 @@ driver loop over joins), PageRank (power iteration).
 
 Scale notes: each CC/PageRank iteration is one shuffle on the vertex
 id; iteration counts are O(log n) for CC small-star. Frames are
-checkpoint-persisted per iteration to truncate lineage (else the plan
-doubles every round and the driver OOMs on plan size long before data
-size matters).
+checkpointed per iteration to truncate lineage (else the plan doubles
+every round and the driver OOMs on plan size long before data size
+matters).
+
+Every frame an operator pins goes through the call's one
+``session.Pins`` scope (private helpers take the caller's). A round is
+``pins.advance(prev, plan, probes)``: the eager checkpoint with its
+convergence probes in one job, then the release of the superseded
+state (a Pregel superstep, Malewicz et al. 2010). The call returns
+``pins.result(out)``, so only the pins ``out`` reads outlive it.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import (
-    observed_checkpoint,
-    release_checkpoint,
-    stats_free_checkpoint,
-)
+from ..session import Pins
 
 
 def degrees(
@@ -45,6 +50,20 @@ def degrees(
                 "degree"
             ),
         )
+    )
+
+
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """(a, b) in both directions for every edge of the simple
+    undirected graph: NULL endpoints and self-loops dropped, duplicates
+    collapsed."""
+    return (
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        .filter(
+            F.col("a").isNotNull() & F.col("b").isNotNull() & (F.col("a") != F.col("b"))
+        )
+        .distinct()
     )
 
 
@@ -74,17 +93,20 @@ def connected_components(
     # a plan whose top is fresh compute (a cell-join cosine generator)
     # executes twice — such callers pin their pair frame first
     # (see semantic_dedup_survivors).
-    sym = (
+    pins = Pins("connected_components")
+    sym = pins.pin(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .distinct()
-        .persist()
+        .distinct(),
+        cache=True,
     )
     verts = sym.select(F.col("a").alias(id_col)).distinct()
     if vertices is not None:
         verts = verts.unionByName(vertices.select(id_col)).distinct()
-    labels = verts.select(id_col, F.col(id_col).alias("component")).persist()
+    labels = pins.pin(
+        verts.select(id_col, F.col(id_col).alias("component")), cache=True
+    )
 
     converged = False
     for _ in range(max_iter):
@@ -120,24 +142,23 @@ def connected_components(
         )
         # ONE job per round: the eager checkpoint truncates lineage
         # and the changed-label count rides it as an observe probe
-        snap, probe = observed_checkpoint(
+        snap, probe = pins.advance(
+            labels,
             jumped,
-            "connected_components",
             {"changed": F.count_if(F.col("__old") != F.col("component"))},
         )
-        labels.unpersist()
         labels = snap.select(id_col, "component")
         if probe["changed"] == 0:
             converged = True
             break
-    sym.unpersist()
     if not converged:
+        pins.result(None)
         raise RuntimeError(
             f"connected_components did not converge within max_iter={max_iter} "
             "rounds; labels would be silently wrong — raise max_iter "
             "(rounds needed ≈ log2(graph diameter) + 2)"
         )
-    return labels
+    return pins.result(labels)
 
 
 def dedup_clusters(
@@ -182,33 +203,62 @@ def pagerank(
     ``collect()`` job per round. Expression grouping mirrors the
     oracle's ``(1-d)/n + d*dangling/n + d*in_sum`` left-to-right so the
     IEEE-double results stay bit-identical."""
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-        F.col("a").isNotNull() & F.col("b").isNotNull()
-    ).localCheckpoint(eager=False)
-    out_deg = e.groupBy(F.col("a").alias("id")).agg(F.count(F.lit(1)).alias("out_deg"))
-    # Loop-invariant hoisting (optimization guide §2.4): the edge list,
-    # the out-degree join, and the dangling-vertex set never change
-    # across iterations. Pre-join out_deg into the edges ONCE (each
-    # round then pays a single rank join instead of two), and mark the
-    # dangling vertices (no out-edge) with a static flag carried on the
-    # rank frame — the per-round anti-join disappears; the dangling sum
-    # aggregates the SAME rank values, just located by flag.
-    ew = e.join(out_deg.withColumnRenamed("id", "a"), "a").localCheckpoint(
-        eager=False
-    )
-    verts = (
+    pins = Pins("pagerank")
+    e, out_deg, ew = _out_edges(pins, edges, src, dst)
+    # cached, not checkpointed: every round joins verts, and its actual
+    # size (not the checkpoint's compounded estimate) keeps the rank
+    # joins broadcast
+    verts = pins.pin(
         e.select(F.col("a").alias("id"))
         .unionByName(e.select(F.col("b").alias("id")))
         .distinct()
         .join(
             out_deg.select("id", F.lit(True).alias("__has_out")), "id", "left"
-        )
-        .persist()
+        ),
+        cache=True,
     )
     n = verts.count()
-    ranks = verts.withColumn("rank", F.lit(1.0 / n))
+    rank_expr = (
+        F.lit((1.0 - damping) / n)
+        + F.lit(damping) * F.col("__dangling") / F.lit(float(n))
+        + F.lit(damping) * F.coalesce("in_sum", F.lit(0.0))
+    )
+    ranks = _rank_rounds(
+        pins, ew, verts, verts.withColumn("rank", F.lit(1.0 / n)), rank_expr, max_iter
+    )
+    return pins.result(
+        ranks.select("id", F.round("rank", round_to).alias("pagerank"))
+    )
 
-    for _ in range(max_iter):
+
+def _out_edges(pins: Pins, edges: DataFrame, src: str, dst: str):
+    """(e, out_deg, ew) of a power iteration: the pinned non-NULL (a, b)
+    edges, their out-degree table, and the edges with out_deg joined
+    in. Loop-invariant hoisting (optimization guide §2.4): the edge
+    list, the out-degree join, and the dangling-vertex set never change
+    across iterations. Pre-joining out_deg ONCE means each round pays a
+    single rank join instead of two; the callers mark the dangling
+    vertices (no out-edge) with a static flag carried on the rank
+    frame, so the per-round anti-join disappears and the dangling sum
+    aggregates the SAME rank values, just located by flag."""
+    e = pins.pin(
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
+            F.col("a").isNotNull() & F.col("b").isNotNull()
+        ),
+        eager=False,
+    )
+    out_deg = e.groupBy(F.col("a").alias("id")).agg(F.count(F.lit(1)).alias("out_deg"))
+    ew = pins.pin(e.join(out_deg.withColumnRenamed("id", "a"), "a"), eager=False)
+    return e, out_deg, ew
+
+
+def _rank_rounds(pins, ew, verts, ranks, rank_expr, max_iter):
+    """``max_iter`` power-iteration rounds over ``ranks`` (``verts``'
+    columns plus ``rank``): per round one rank join and one
+    aggregate, the dangling-rank sum as an in-plan 1-row broadcast,
+    and one eager checkpoint. ``rank_expr`` reads the round's
+    ``in_sum`` and ``__dangling``."""
+    for i in range(max_iter):
         contrib = (
             ew.join(ranks.select(F.col("id").alias("a"), "rank"), "a")
             .select(F.col("b").alias("id"), (F.col("rank") / F.col("out_deg")).alias("c"))
@@ -219,23 +269,15 @@ def pagerank(
             ranks.filter(F.col("__has_out").isNull())
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dangling"))
         )
-        rank_expr = (
-            F.lit((1.0 - damping) / n)
-            + F.lit(damping) * F.col("__dangling") / F.lit(float(n))
-            + F.lit(damping) * F.coalesce("in_sum", F.lit(0.0))
-        )
-        prev = ranks
-        ranks = (
+        # the superseded rank frame is released; round 0's ranks is a
+        # projection of verts, which every round reads
+        ranks, _ = pins.advance(
+            ranks if i else None,
             verts.join(contrib, "id", "left")
             .crossJoin(F.broadcast(dangling))
-            .select("id", "__has_out", rank_expr.alias("rank"))
-            .localCheckpoint(eager=True)
+            .select(*verts.columns, rank_expr.alias("rank")),
         )
-        # superseded rank frame: release its blocks (ADVICE r17 —
-        # per-round checkpoints otherwise accumulate across max_iter)
-        release_checkpoint(prev)
-    verts.unpersist()
-    return ranks.select("id", F.round("rank", round_to).alias("pagerank"))
+    return ranks
 
 
 def _forward_edges(und: DataFrame) -> DataFrame:
@@ -280,7 +322,7 @@ def _forward_edges(und: DataFrame) -> DataFrame:
     )
 
 
-def _enumerate_triangles(und: DataFrame) -> DataFrame:
+def _enumerate_triangles(und: DataFrame, pins: Pins) -> DataFrame:
     """Each triangle of the canonical simple graph exactly once, as
     (x, y, z) in DEGREE-RANK order — the compact-forward enumeration:
     orient edges low-rank→high-rank (``_forward_edges``), wedge-join
@@ -289,10 +331,11 @@ def _enumerate_triangles(und: DataFrame) -> DataFrame:
     forward edge between the two higher corners (which IS oriented
     y→z because rank(y) < rank(z)). Both the canonical frame (feeds
     the two degree-union legs plus the edge join) and the oriented
-    frame (feeds three join branches) are localCheckpointed so
-    Catalyst doesn't re-instantiate the dedup subplan per branch."""
-    und = und.localCheckpoint()
-    fwd = _forward_edges(und).localCheckpoint()
+    frame (feeds three join branches) are checkpointed in the caller's
+    scope so Catalyst doesn't re-instantiate the dedup subplan per
+    branch."""
+    und = pins.pin(und)
+    fwd = pins.pin(_forward_edges(und))
     e1, e2, e3 = fwd.alias("e1"), fwd.alias("e2"), fwd.alias("e3")
     rank_lt = (F.col("e1.bd") < F.col("e2.bd")) | (
         (F.col("e1.bd") == F.col("e2.bd")) & (F.col("e1.b") < F.col("e2.b"))
@@ -339,8 +382,9 @@ def triangle_count(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    tris = _enumerate_triangles(und)
-    return (
+    pins = Pins("triangle_count")
+    tris = _enumerate_triangles(und, pins)
+    return pins.result(
         tris.select(F.explode(F.array("x", "y", "z")).alias("id"))
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("n_triangles"))
@@ -386,11 +430,11 @@ def link_prediction_scores(
     logprob oracles."""
     u = F.least(F.col(src), F.col(dst))
     v = F.greatest(F.col(src), F.col(dst))
-    und = (
+    pins = Pins("link_prediction_scores")
+    und = pins.pin(
         edges.select(u.alias("u"), v.alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint()
     )
     adj = und.select(F.col("u").alias("z"), F.col("v").alias("x")).unionByName(
         und.select(F.col("v").alias("z"), F.col("u").alias("x"))
@@ -421,7 +465,7 @@ def link_prediction_scores(
     )
     deg_a = deg.select(F.col("z").alias("a"), F.col("deg").alias("__da"))
     deg_b = deg.select(F.col("z").alias("b"), F.col("deg").alias("__db"))
-    return (
+    return pins.result(
         pair.join(deg_a, "a")
         .join(deg_b, "b")
         .select(
@@ -460,7 +504,7 @@ def kcore(
 
     Scale: each round is one map-side edge symmetrization, one degree
     aggregation, and two semi-joins — all shuffling on vertex id; the
-    surviving frame localCheckpoints per round to truncate lineage
+    surviving frame is checkpointed per round to truncate lineage
     (the connected_components discipline) and the superseded round's
     blocks are released, so only the edge set the result reads stays
     pinned. Rounds are bounded by ``max_iter`` (the peel usually
@@ -477,35 +521,33 @@ def kcore(
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    e, probe = observed_checkpoint(e, "kcore")
-    n_edges = probe["rows"]
-    for _ in range(max(1, max_iter)):
-        deg = (
+
+    def core(e):
+        """(id, degree) of the vertices of degree >= k in ``e``."""
+        return (
             e.select(F.col("a").alias("id"))
             .unionAll(e.select(F.col("b").alias("id")))
             .groupBy("id")
             .agg(F.count(F.lit(1)).alias("degree"))
+            .filter(F.col("degree") >= int(k))
         )
-        keep = deg.filter(F.col("degree") >= int(k)).select("id")
-        pruned, probe = observed_checkpoint(
+
+    pins = Pins("kcore")
+    e, probe = pins.advance(None, e)
+    n_edges = probe["rows"]
+    for _ in range(max(1, max_iter)):
+        keep = core(e).select("id")
+        # pruned is materialized, so nothing reads e any more
+        e, probe = pins.advance(
+            e,
             e.join(keep, e.a == keep.id, "left_semi").join(
                 keep, e.b == keep.id, "left_semi"
             ),
-            "kcore",
         )
-        # pruned is materialized, so nothing reads e any more
-        release_checkpoint(e)
-        e = pruned
         if probe["rows"] == n_edges:
             break
         n_edges = probe["rows"]
-    deg = (
-        e.select(F.col("a").alias("id"))
-        .unionAll(e.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
-    return deg.filter(F.col("degree") >= int(k))
+    return pins.result(core(e))
 
 
 def label_propagation(
@@ -529,23 +571,15 @@ def label_propagation(
 
     Output: (id, label). Scale: per round one neighbor-join, one
     (id, label) count aggregation, and one per-id argmax window — all
-    shuffling on vertex id; labels localCheckpoint per round (the
+    shuffling on vertex id; labels checkpoint per round (the
     connected_components lineage discipline)."""
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull() & (F.col("a") != F.col("b")))
-        .distinct()
-        .localCheckpoint()
-    )
-    labels = (
+    pins = Pins("label_propagation")
+    sym = pins.pin(_undirected(edges, src, dst))
+    labels = pins.pin(
         sym.select(F.col("a").alias("id")).distinct()
         .withColumn("label", F.col("id"))
-        .localCheckpoint()
     )
-    from pyspark.sql import Window as _W
-
-    argmax = _W.partitionBy("id").orderBy(
+    argmax = Window.partitionBy("id").orderBy(
         F.col("votes").desc(), F.col("label").asc()
     )
     for _ in range(max(1, int(n_iter))):
@@ -556,13 +590,13 @@ def label_propagation(
             .groupBy("id", "label")
             .agg(F.count(F.lit(1)).alias("votes"))
         )
-        labels = (
+        labels, _ = pins.advance(
+            labels,
             votes.withColumn("__rn", F.row_number().over(argmax))
             .filter(F.col("__rn") == 1)
-            .select("id", "label")
-            .localCheckpoint()
+            .select("id", "label"),
         )
-    return labels
+    return pins.result(labels)
 
 
 def bfs_distances(
@@ -582,36 +616,30 @@ def bfs_distances(
     last round (the frontier), anti-joins away already-visited
     vertices, and stops early when the frontier empties — per round
     one join shuffle on vertex id, with visited/frontier frames
-    localCheckpointed to truncate lineage. At 100 TB the frontier and
-    visited sets are vertex-sized (<< edge count) and the single big
-    edge frame is only ever the probe side of the expansion join."""
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull() & (F.col("a") != F.col("b")))
-        .distinct()
-        .localCheckpoint()
-    )
+    checkpointed to truncate lineage and the superseded ones released.
+    At 100 TB the frontier and visited sets are vertex-sized (<< edge
+    count) and the single big edge frame is only ever the probe side
+    of the expansion join."""
+    pins = Pins("bfs_distances")
+    sym = pins.pin(_undirected(edges, src, dst))
     [src_col] = sources.columns
-    frontier = (
-        sources.select(F.col(src_col).alias("id")).distinct().localCheckpoint()
-    )
-    visited = frontier.withColumn("distance", F.lit(0)).localCheckpoint()
+    frontier = pins.pin(sources.select(F.col(src_col).alias("id")).distinct())
+    visited = pins.pin(frontier.withColumn("distance", F.lit(0)))
     for hop in range(1, max(1, int(max_hops)) + 1):
-        nxt = (
+        frontier, probe = pins.advance(
+            frontier,
             sym.join(frontier.withColumnRenamed("id", "a"), "a")
             .select(F.col("b").alias("id"))
             .distinct()
-            .join(visited.select("id"), "id", "left_anti")
+            .join(visited.select("id"), "id", "left_anti"),
         )
-        nxt, probe = observed_checkpoint(nxt, "bfs_distances")
         if probe["rows"] == 0:
             break
-        visited = visited.unionByName(
-            nxt.withColumn("distance", F.lit(hop))
-        ).localCheckpoint()
-        frontier = nxt
-    return visited
+        visited, _ = pins.advance(
+            visited,
+            visited.unionByName(frontier.withColumn("distance", F.lit(hop))),
+        )
+    return pins.result(visited)
 
 
 def hits(
@@ -638,25 +666,46 @@ def hits(
 
     Scale: per round two edge-join aggregations shuffling on vertex
     id and two 1-row max aggregates that stay IN the plan (broadcast
-    crossJoin — no driver collect); scores localCheckpoint per round
-    (the connected_components lineage discipline)."""
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-        F.col("a").isNotNull() & F.col("b").isNotNull()
-    ).distinct().localCheckpoint()
-    verts = (
+    crossJoin — no driver collect); scores checkpoint per round (the
+    connected_components lineage discipline)."""
+    pins = Pins("hits")
+    e = pins.pin(
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
+            F.col("a").isNotNull() & F.col("b").isNotNull()
+        ).distinct()
+    )
+    verts = pins.pin(
         e.select(F.col("a").alias("id"))
         .unionByName(e.select(F.col("b").alias("id")))
         .distinct()
-        .localCheckpoint()
     )
     scores = verts.select(
         "id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("authority")
     )
 
-    def _dec(c):
-        return F.round(c, 9).cast("decimal(28,9)")
+    def half(scores, frm, to, score, name):
+        """(raw, normalized): the edge-keyed sum of ``score`` from the
+        ``frm`` endpoint onto the ``to`` endpoint (exact decimals), and
+        its max-normalization as ``name``, 9 dp."""
+        raw = pins.pin(
+            e.join(scores.withColumnRenamed("id", frm), frm)
+            .groupBy(F.col(to).alias("id"))
+            .agg(
+                F.sum(F.round(F.col(score), 9).cast("decimal(28,9)"))
+                .cast("double")
+                .alias("__raw")
+            ),
+            eager=False,
+        )
+        top = raw.agg(F.max("__raw").alias("__max"))
+        return raw, verts.join(raw, "id", "left").crossJoin(F.broadcast(top)).select(
+            "id",
+            F.round(F.coalesce(F.col("__raw"), F.lit(0.0)) / F.col("__max"), 9).alias(
+                name
+            ),
+        )
 
-    for _ in range(max(1, int(max_iter))):
+    for i in range(max(1, int(max_iter))):
         # Pin the edge-shuffle aggregates (guide §2.4): auth_raw is
         # read by its own max-agg, by the normalized auth join, and —
         # through auth — by hub_raw AND the round-end scores join;
@@ -665,49 +714,21 @@ def hits(
         # reuse). Pinned, each round pays exactly its two edge-keyed
         # aggregations. Lazy pins: the round-end eager checkpoint
         # materializes them, values bit-identical.
-        auth_raw = (
-            e.join(scores.withColumnRenamed("id", "a"), "a")
-            .groupBy(F.col("b").alias("id"))
-            .agg(F.sum(_dec(F.col("hub"))).cast("double").alias("__raw"))
-            .localCheckpoint(eager=False)
+        auth_raw, auth = half(scores, "a", "b", "hub", "authority")
+        auth = pins.pin(auth, eager=False)
+        hub_raw, hub = half(auth, "b", "a", "authority", "hub")
+        # round frames are dead once the new scores materialize;
+        # round 0's scores is a projection of verts, which every round
+        # reads
+        scores, _ = pins.advance(
+            (auth_raw, auth, hub_raw, scores if i else None),
+            hub.join(auth, "id"),
         )
-        auth_max = auth_raw.agg(F.max("__raw").alias("__amax"))
-        auth = (
-            verts.join(auth_raw, "id", "left")
-            .crossJoin(F.broadcast(auth_max))
-            .select(
-                "id",
-                F.round(
-                    F.coalesce(F.col("__raw"), F.lit(0.0)) / F.col("__amax"), 9
-                ).alias("authority"),
-            )
-            .localCheckpoint(eager=False)
+    return pins.result(
+        scores.select(
+            "id", F.round("hub", round_to).alias("hub"),
+            F.round("authority", round_to).alias("authority"),
         )
-        hub_raw = (
-            e.join(auth.withColumnRenamed("id", "b"), "b")
-            .groupBy(F.col("a").alias("id"))
-            .agg(F.sum(_dec(F.col("authority"))).cast("double").alias("__raw"))
-            .localCheckpoint(eager=False)
-        )
-        hub_max = hub_raw.agg(F.max("__raw").alias("__hmax"))
-        hub = (
-            verts.join(hub_raw, "id", "left")
-            .crossJoin(F.broadcast(hub_max))
-            .select(
-                "id",
-                F.round(
-                    F.coalesce(F.col("__raw"), F.lit(0.0)) / F.col("__hmax"), 9
-                ).alias("hub"),
-            )
-        )
-        prev = scores
-        scores = hub.join(auth, "id").localCheckpoint(eager=True)
-        # round frames are dead once the new scores materialize
-        for p in (auth_raw, auth, hub_raw, prev):
-            release_checkpoint(p)
-    return scores.select(
-        "id", F.round("hub", round_to).alias("hub"),
-        F.round("authority", round_to).alias("authority"),
     )
 
 
@@ -727,19 +748,24 @@ def bellman_ford(
 
     Runs ``max_iter`` relaxation rounds (shortest paths using at most
     that many edges — pass >= the graph's weighted-path hop bound for
-    the exact fixpoint) with an aggregate-only early exit when a round
-    improves nothing. Output: (id, distance) for reached vertices.
+    the exact fixpoint) with an early exit when a round improves
+    nothing. Output: (id, distance) for reached vertices.
 
     Scale: per round, one join of the current distance frame against
     the edge list (shuffling on vertex id) and one min-aggregation;
-    the distance frame is vertex-sized and localCheckpoints per round
-    (the connected_components lineage discipline)."""
+    the distance frame is vertex-sized and checkpoints per round (the
+    connected_components lineage discipline). The round's previous
+    distance rides the min-aggregation as ``__old``, so the
+    convergence probe (a vertex reached for the first time, or
+    brought closer) is an ``observe`` metric on the checkpoint job,
+    not a job of its own."""
     w_col = (
         F.col(weight).cast("long")
         if weight
         else F.lit(1).cast("long")
     )
-    sym = (
+    pins = Pins("bellman_ford")
+    sym = pins.pin(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"), w_col.alias("w"))
         .unionByName(
             edges.select(
@@ -751,38 +777,40 @@ def bellman_ford(
         )
         .groupBy("a", "b")
         .agg(F.min("w").alias("w"))
-        .localCheckpoint()
     )
     [src_col] = sources.columns
-    dist = (
+    dist = pins.pin(
         sources.select(F.col(src_col).alias("id"))
         .distinct()
         .withColumn("distance", F.lit(0).cast("long"))
-        .localCheckpoint()
     )
     for _ in range(max(1, int(max_iter))):
         relaxed = (
             sym.join(dist.withColumnRenamed("id", "a"), "a")
-            .select(F.col("b").alias("id"), (F.col("distance") + F.col("w")).alias("distance"))
-            .unionByName(dist)
-            .groupBy("id")
-            .agg(F.min("distance").alias("distance"))
-            .localCheckpoint()
-        )
-        # aggregate-only convergence probe: a round that adds no vertex
-        # and lowers no distance is the fixpoint
-        changed = (
-            relaxed.join(dist.withColumnRenamed("distance", "__old"), "id", "left")
-            .filter(
-                F.col("__old").isNull() | (F.col("distance") < F.col("__old"))
+            .select(
+                F.col("b").alias("id"),
+                (F.col("distance") + F.col("w")).alias("distance"),
+                F.lit(None).cast("long").alias("__old"),
             )
-            .limit(1)
-            .count()
+            .unionByName(dist.withColumn("__old", F.col("distance")))
+            .groupBy("id")
+            .agg(F.min("distance").alias("distance"), F.min("__old").alias("__old"))
         )
-        dist = relaxed
-        if changed == 0:
+        # a round that adds no vertex and lowers no distance is the
+        # fixpoint
+        snap, probe = pins.advance(
+            dist,
+            relaxed,
+            {
+                "changed": F.count_if(
+                    F.col("__old").isNull() | (F.col("distance") < F.col("__old"))
+                )
+            },
+        )
+        dist = snap.select("id", "distance")
+        if probe["changed"] == 0:
             break
-    return dist
+    return pins.result(dist)
 
 
 def neighbor_stats(
@@ -801,14 +829,7 @@ def neighbor_stats(
     join of the symmetrized edges against the vertex-sized degree
     frame plus one aggregation — everything shuffles on vertex id,
     nothing is ever all-pairs."""
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(
-            F.col("a").isNotNull() & F.col("b").isNotNull() & (F.col("a") != F.col("b"))
-        )
-        .distinct()
-    )
+    sym = _undirected(edges, src, dst)
     deg = sym.groupBy(F.col("a").alias("id")).agg(
         F.count(F.lit(1)).alias("degree")
     )
@@ -831,6 +852,34 @@ def neighbor_stats(
             ),
             "max_neighbor_degree",
         )
+    )
+
+
+def _walk_starts(sym: DataFrame, walks_per_node: int) -> DataFrame:
+    """(walk_id, start_id, node): ``walks_per_node`` walks starting at
+    every vertex of the symmetrized edge frame ``sym``."""
+    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
+
+    verts = sym.select(F.col("a").alias("node")).distinct()
+    node_type = sym.schema["a"].dataType
+    if isinstance(node_type, (ByteType, ShortType, IntegerType, LongType)):
+        walk_id = F.col("node") * int(walks_per_node) + F.col("__w")
+    else:
+        # string/decimal/etc ids: integer arithmetic would cast to
+        # NULL and merge all walks into one window partition — use a
+        # unique string key instead
+        walk_id = F.concat_ws(
+            ":", F.col("node").cast("string"), F.col("__w").cast("string")
+        )
+    return verts.select(
+        F.explode(
+            F.sequence(F.lit(0), F.lit(int(walks_per_node) - 1))
+        ).alias("__w"),
+        "node",
+    ).select(
+        walk_id.alias("walk_id"),
+        F.col("node").alias("start_id"),
+        F.col("node"),
     )
 
 
@@ -861,7 +910,7 @@ def random_walks(
     Scale: per step, ONE join of the frontier (|V| x walks rows)
     against the edge list on the current node followed by a per-walk
     argmin — the join shuffles on vertex id, the argmin window on
-    walk_id; frontier localCheckpoints per step (lineage discipline).
+    walk_id; frontier checkpoints per step (lineage discipline).
     """
     from .text import h56
 
@@ -870,39 +919,9 @@ def random_walks(
             "random_walks: walk_length and walks_per_node must be >= 1 "
             f"(got {walk_length}, {walks_per_node})"
         )
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(
-            F.col("a").isNotNull() & F.col("b").isNotNull() & (F.col("a") != F.col("b"))
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    verts = sym.select(F.col("a").alias("node")).distinct()
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
-    node_type = sym.schema["a"].dataType
-    if isinstance(node_type, (ByteType, ShortType, IntegerType, LongType)):
-        walk_id = F.col("node") * int(walks_per_node) + F.col("__w")
-    else:
-        # string/decimal/etc ids: integer arithmetic would cast to
-        # NULL and merge all walks into one window partition — use a
-        # unique string key instead
-        walk_id = F.concat_ws(
-            ":", F.col("node").cast("string"), F.col("__w").cast("string")
-        )
-    frontier = verts.select(
-        F.explode(
-            F.sequence(F.lit(0), F.lit(int(walks_per_node) - 1))
-        ).alias("__w"),
-        "node",
-    ).select(
-        walk_id.alias("walk_id"),
-        F.col("node").alias("start_id"),
-        F.col("node"),
-    )
-    out = frontier.withColumn("step", F.lit(0)).localCheckpoint()
+    pins = Pins("random_walks")
+    sym = pins.pin(_undirected(edges, src, dst))
+    out = pins.pin(_walk_starts(sym, walks_per_node).withColumn("step", F.lit(0)))
     cur = out
     for step in range(1, int(walk_length) + 1):
         cand = cur.join(sym, cur.node == sym.a).select(
@@ -920,14 +939,14 @@ def random_walks(
             ).alias("__h"),
         )
         pick = Window.partitionBy("walk_id").orderBy("__h", "__next")
-        cur = (
+        # every step's frame stays pinned: the result unions them all
+        cur = pins.pin(
             cand.withColumn("__rn", F.row_number().over(pick))
             .filter(F.col("__rn") == 1)
             .select("walk_id", "start_id", F.col("__next").alias("node"))
-            .localCheckpoint()
         )
         out = out.unionByName(cur.withColumn("step", F.lit(step)))
-    return out
+    return pins.result(out)
 
 
 def node2vec_walks(
@@ -958,7 +977,7 @@ def node2vec_walks(
     Scale: per step, one vertex-keyed join for candidates, one
     (prev, candidate)-keyed join against the symmetrized edges for
     the triangle test, and one per-walk argmin window — never
-    all-pairs; the frontier localCheckpoints per step."""
+    all-pairs; the frontier checkpoints per step."""
     from .text import h56
 
     if int(walk_length) < 1 or int(walks_per_node) < 1:
@@ -970,40 +989,15 @@ def node2vec_walks(
         raise ValueError(
             f"node2vec_walks: p and q must be integers in [1, 64] (got {p}, {q})"
         )
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(
-            F.col("a").isNotNull() & F.col("b").isNotNull() & (F.col("a") != F.col("b"))
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    verts = sym.select(F.col("a").alias("node")).distinct()
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
-    node_type = sym.schema["a"].dataType
-    if isinstance(node_type, (ByteType, ShortType, IntegerType, LongType)):
-        walk_id = F.col("node") * int(walks_per_node) + F.col("__w")
-    else:
-        walk_id = F.concat_ws(
-            ":", F.col("node").cast("string"), F.col("__w").cast("string")
-        )
-    frontier = verts.select(
-        F.explode(
-            F.sequence(F.lit(0), F.lit(int(walks_per_node) - 1))
-        ).alias("__w"),
-        "node",
-    ).select(
-        walk_id.alias("walk_id"),
-        F.col("node").alias("start_id"),
-        F.col("node"),
-    )
-    out = frontier.withColumn("step", F.lit(0)).localCheckpoint()
+    pins = Pins("node2vec_walks")
+    sym = pins.pin(_undirected(edges, src, dst))
+    out = pins.pin(_walk_starts(sym, walks_per_node).withColumn("step", F.lit(0)))
     # cur carries (walk_id, start_id, node, prev); prev is NULL at step 0
-    cur = out.select(
-        "walk_id", "start_id", "node", F.lit(None).cast(sym.schema["a"].dataType).alias("prev")
-    ).localCheckpoint()
+    cur = pins.pin(
+        out.select(
+            "walk_id", "start_id", "node", F.lit(None).cast(sym.schema["a"].dataType).alias("prev")
+        )
+    )
     tri = sym.select(F.col("a").alias("__pa"), F.col("b").alias("__pb"))
     for step in range(1, int(walk_length) + 1):
         cand = cur.join(sym, cur.node == sym.a).select(
@@ -1039,7 +1033,8 @@ def node2vec_walks(
             .withColumn("__score", F.col("__h") * F.col("__pen"))
         )
         pick = Window.partitionBy("walk_id").orderBy("__score", "__next")
-        cur = (
+        # every step's frame stays pinned: the result unions them all
+        cur = pins.pin(
             scored.withColumn("__rn", F.row_number().over(pick))
             .filter(F.col("__rn") == 1)
             .select(
@@ -1048,10 +1043,9 @@ def node2vec_walks(
                 F.col("__next").alias("node"),
                 F.col("__at").alias("prev"),
             )
-            .localCheckpoint()
         )
         out = out.unionByName(cur.select("walk_id", "start_id", "node").withColumn("step", F.lit(step)))
-    return out
+    return pins.result(out)
 
 
 def personalized_pagerank(
@@ -1077,29 +1071,19 @@ def personalized_pagerank(
     (1-d)/s + d*dangling/s + d*in_sum left-to-right exactly as the
     unrolled SQL oracle."""
     [seed_col] = seeds.columns
-    sdf = (
+    pins = Pins("personalized_pagerank")
+    sdf = pins.pin(
         seeds.select(F.col(seed_col).alias("id"))
         .distinct()
-        .withColumn("__seed", F.lit(1))
-        .persist()
+        .withColumn("__seed", F.lit(1)),
+        cache=True,
     )
     s = sdf.count()
     if s == 0:
         raise ValueError("personalized_pagerank: seeds must be non-empty")
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-        F.col("a").isNotNull() & F.col("b").isNotNull()
-    ).localCheckpoint(eager=False)
-    out_deg = e.groupBy(F.col("a").alias("id")).agg(
-        F.count(F.lit(1)).alias("out_deg")
-    )
-    # Same loop-invariant hoisting as ``pagerank`` (guide §2.4):
-    # out_deg pre-joined into the edge list once, dangling vertices
-    # located by a static flag on the rank frame instead of a per-round
-    # anti-join — the per-round plan is one rank join + one aggregate.
-    ew = e.join(out_deg.withColumnRenamed("id", "a"), "a").localCheckpoint(
-        eager=False
-    )
-    verts = (
+    e, out_deg, ew = _out_edges(pins, edges, src, dst)
+    # cached as in pagerank
+    verts = pins.pin(
         e.select(F.col("a").alias("id"))
         .unionByName(e.select(F.col("b").alias("id")))
         .unionByName(sdf.select("id"))
@@ -1107,47 +1091,23 @@ def personalized_pagerank(
         .join(F.broadcast(sdf), "id", "left")
         .join(
             out_deg.select("id", F.lit(True).alias("__has_out")), "id", "left"
-        )
-        .persist()
+        ),
+        cache=True,
+    )
+    rank_expr = (
+        F.when(
+            F.col("__seed").isNotNull(),
+            F.lit((1.0 - damping) / s)
+            + F.lit(damping) * F.col("__dangling") / F.lit(float(s)),
+        ).otherwise(F.lit(0.0))
+        + F.lit(damping) * F.coalesce("in_sum", F.lit(0.0))
     )
     ranks = verts.withColumn(
         "rank",
         F.when(F.col("__seed").isNotNull(), F.lit(1.0 / s)).otherwise(F.lit(0.0)),
-    ).select("id", "__seed", "__has_out", "rank")
-
-    for _ in range(max_iter):
-        contrib = (
-            ew.join(ranks.select(F.col("id").alias("a"), "rank"), "a")
-            .select(
-                F.col("b").alias("id"),
-                (F.col("rank") / F.col("out_deg")).alias("c"),
-            )
-            .groupBy("id")
-            .agg(F.sum("c").alias("in_sum"))
-        )
-        dangling = ranks.filter(F.col("__has_out").isNull()).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dangling")
-        )
-        rank_expr = (
-            F.when(
-                F.col("__seed").isNotNull(),
-                F.lit((1.0 - damping) / s)
-                + F.lit(damping) * F.col("__dangling") / F.lit(float(s)),
-            ).otherwise(F.lit(0.0))
-            + F.lit(damping) * F.coalesce("in_sum", F.lit(0.0))
-        )
-        prev = ranks
-        ranks = (
-            verts.join(contrib, "id", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select("id", "__seed", "__has_out", rank_expr.alias("rank"))
-            .localCheckpoint(eager=True)
-        )
-        # superseded rank frame: release its blocks (ADVICE r17)
-        release_checkpoint(prev)
-    verts.unpersist()
-    sdf.unpersist()
-    return ranks.select("id", F.round("rank", round_to).alias("ppr"))
+    )
+    ranks = _rank_rounds(pins, ew, verts, ranks, rank_expr, max_iter)
+    return pins.result(ranks.select("id", F.round("rank", round_to).alias("ppr")))
 
 
 def modularity(
@@ -1188,22 +1148,11 @@ def modularity(
     comm = communities.select(
         F.col(id_col).alias("__node"), F.col(comm_col).alias("community")
     )
-    e = (
-        edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
-        .join(
-            comm.select(
-                F.col("__node").alias("__s"), F.col("community").alias("__cs")
-            ),
-            "__s",
-            "left",
-        )
-        .join(
-            comm.select(
-                F.col("__node").alias("__d"), F.col("community").alias("__cd")
-            ),
-            "__d",
-            "left",
-        )
+    e = _label_ends(
+        edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d")),
+        communities,
+        id_col,
+        comm_col,
     )
     m_row = e.agg(F.count(F.lit(1)).alias("__m"))
     # degree mass per community: each edge endpoint contributes 1 to
@@ -1249,6 +1198,18 @@ def modularity(
     )
 
 
+def _label_ends(e, communities, id_col, comm_col):
+    """``e`` (endpoint columns __s, __d) with each endpoint's community
+    as __cs / __cd, NULL where ``communities`` has no row for it."""
+
+    def side(end, label):
+        return communities.select(F.col(id_col).alias(end), F.col(comm_col).alias(label))
+
+    return e.join(side("__s", "__cs"), "__s", "left").join(
+        side("__d", "__cd"), "__d", "left"
+    )
+
+
 def _louvain_edges(
     edges: DataFrame, src: str, dst: str, weight_col: str | None
 ) -> DataFrame:
@@ -1290,7 +1251,7 @@ def louvain_move(
     comm_col: str = "community",
     weight_col: str | None = None,
     _prepared: tuple[DataFrame, int, DataFrame] | None = None,
-    _pins: list | None = None,
+    _pins: Pins | None = None,
 ) -> DataFrame:
     """One SYNCHRONIZED round of Louvain local moves (Blondel et al.
     2008, phase-1 step): every node evaluates its neighbors'
@@ -1338,17 +1299,17 @@ def louvain_move(
     the m aggregation, and the degree shuffle every round. Values are
     exact integer sums — identical whichever path computes them.
 
-    ``_pins`` (private, loop callers only): frames this call pins with
-    a lazy localCheckpoint are appended here so the caller can release
-    their blocks (``release_checkpoint``) once the round's consumers
-    have materialized — otherwise a round loop accumulates checkpoint
-    storage linearly with round count (ADVICE r17)."""
+    ``_pins`` (private, loop callers only): the caller's ``Pins``
+    scope. The frames this call pins go into it, and the caller ends
+    the scope once the round's consumers have materialized —
+    otherwise a round loop accumulates checkpoint storage linearly
+    with round count (ADVICE r17). A call without it pins in a scope
+    of its own and returns through that scope's ``result``."""
+    pins = Pins("louvain_move") if _pins is None else _pins
     if _prepared is not None:
         e_raw, m, deg = _prepared
     else:
-        e_raw = _louvain_edges(edges, src, dst, weight_col).localCheckpoint(
-            eager=False
-        )
+        e_raw = pins.pin(_louvain_edges(edges, src, dst, weight_col), eager=False)
         m, deg = _louvain_invariants(e_raw)
     if m == 0:
         raise ValueError("louvain_move: edge set is empty")
@@ -1357,9 +1318,7 @@ def louvain_move(
     )
     # ONE deg⋈comm join shared by tot, the stay-candidate rows, and the
     # argmax attach (previously three separate joins against deg/cur)
-    labeled_deg = deg.join(comm, "__node").localCheckpoint(eager=False)
-    if _pins is not None:
-        _pins.append(labeled_deg)
+    labeled_deg = pins.pin(deg.join(comm, "__node"), eager=False)
     tot = labeled_deg.groupBy("__c").agg(F.sum("__k").alias("__tot"))
     # SELF-LOOPS are excluded from k_{i,c} (but kept in m and deg):
     # a self-loop's mass is community-invariant — it moves WITH the
@@ -1427,7 +1386,7 @@ def louvain_move(
         (F.col("__c") == F.col("__cur")).desc(),
         F.col("__c").asc(),
     )
-    return (
+    moves = (
         scored.withColumn("__rn", F.row_number().over(pick))
         .filter(F.col("__rn") == 1)
         .select(
@@ -1437,6 +1396,7 @@ def louvain_move(
             (F.col("__c") != F.col("__cur")).alias("moved"),
         )
     )
+    return moves if _pins is not None else pins.result(moves)
 
 
 def louvain_communities(
@@ -1490,59 +1450,58 @@ def louvain_communities(
     a node-keyed argmax window) plus one label left-join, eagerly
     checkpointed so lineage stays flat across rounds; convergence is
     one integer count per round — no per-node driver traffic."""
+    pins = Pins("louvain_communities")
+    return pins.result(
+        _louvain_rounds(
+            pins, edges, communities, max_rounds, src, dst, id_col, comm_col, weight_col
+        )
+    )
+
+
+def _louvain_rounds(
+    pins, edges, communities, max_rounds, src, dst, id_col, comm_col, weight_col
+) -> DataFrame:
+    """``louvain_communities``' round loop in the caller's scope: the
+    label frames and the loop invariants are pinned in ``pins``, and
+    each round's own pins (``louvain_move``'s labeled degrees, the
+    gated movers, the applied moves) in a scope of the round, ended
+    once the round's labels are materialized. Returns the (id,
+    community) label frame, a pin of ``pins``."""
     from .text import h56
 
     if int(max_rounds) < 1:
         raise ValueError(
             f"louvain_communities: max_rounds must be >= 1 (got {max_rounds})"
         )
-    comm = communities.select(
-        F.col(id_col).alias("id"), F.col(comm_col).alias("community")
-    ).localCheckpoint(eager=True)
+    comm = pins.pin(
+        communities.select(F.col(id_col).alias("id"), F.col(comm_col).alias("community"))
+    )
     # Loop-invariant hoisting (optimization guide §2.4): the projected
     # edge frame, m, and the degree table never change across rounds —
     # materialize the edges ONCE (the caller's plan can be an expensive
     # self-join) and compute m/deg once, instead of per round. deg is
     # lazily checkpointed so round 2+ reuses round 1's shuffle output.
-    e_raw = _louvain_edges(edges, src, dst, weight_col).localCheckpoint(
-        eager=False
-    )
+    e_raw = pins.pin(_louvain_edges(edges, src, dst, weight_col), eager=False)
     m, deg = _louvain_invariants(e_raw)
-    deg = deg.localCheckpoint(eager=False)
-    prepared = (e_raw, m, deg)
+    prepared = (e_raw, m, pins.pin(deg, eager=False))
     zero_streak = 0
     for r in range(int(max_rounds)):
-        # per-round pinned frames: released at the end of the round,
-        # once their consumers have materialized — unreleased, the
-        # checkpoint blocks accumulate linearly with round count
-        # (ADVICE r17)
-        pins: list = []
-        moves = louvain_move(
-            edges,
-            comm,
-            src=src,
-            dst=dst,
-            id_col="id",
-            comm_col="community",
-            weight_col=weight_col,
-            _prepared=prepared,
-            _pins=pins,
-        )
+        rnd = Pins(pins.what)
+        # with _prepared, louvain_move reads only the label frame
+        moves = louvain_move(edges, comm, _prepared=prepared, _pins=rnd)
         gate = (h56(F.col("id").cast("string")) + F.lit(r)) % 2 == 0
         # pin the gated movers: BOTH the reversed-pair frame and the
         # breaker join below read this frame — unpinned, the whole
         # louvain_move scoring pipeline (joins + argmax window) would
         # execute twice per round
-        gated = (
-            moves.filter(F.col("moved") & gate)
-            .select(
+        gated = rnd.pin(
+            moves.filter(F.col("moved") & gate).select(
                 "id",
                 F.col("old_community").alias("__old"),
                 F.col("new_community").alias("__new"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
-        pins.append(gated)
         # 2-cycle breaker (docstring): if this round also transfers in
         # the REVERSE community direction, keep only the leg moving
         # into the smaller label. The reversed-pair frame is the
@@ -1550,7 +1509,8 @@ def louvain_communities(
         rev = gated.select(
             F.col("__old").alias("__ro"), F.col("__new").alias("__rn")
         ).distinct()
-        applied, probe = observed_checkpoint(
+        applied, probe = rnd.advance(
+            None,
             gated.join(
                 rev,
                 (F.col("__old") == F.col("__rn"))
@@ -1559,37 +1519,38 @@ def louvain_communities(
             )
             .filter(F.col("__ro").isNull() | (F.col("__new") < F.col("__old")))
             .select("id", "__new"),
-            "louvain_communities",
         )
-        pins.append(applied)
-        if probe["rows"] == 0:
-            for p in pins:
-                release_checkpoint(p)
-            zero_streak += 1
-            if zero_streak >= 2:
-                break
-            continue
-        zero_streak = 0
-        prev_comm = comm
-        comm = (
-            comm.join(applied, "id", "left")
-            .select(
-                "id",
-                F.coalesce(F.col("__new"), F.col("community")).alias(
-                    "community"
+        if probe["rows"]:
+            comm, _ = pins.advance(
+                comm,
+                comm.join(applied, "id", "left").select(
+                    "id",
+                    F.coalesce(F.col("__new"), F.col("community")).alias(
+                        "community"
+                    ),
                 ),
             )
-            .localCheckpoint(eager=True)
-        )
-        # the new label frame is materialized: this round's pins and
-        # the superseded label frame are dead weight from here on
-        for p in pins:
-            release_checkpoint(p)
-        release_checkpoint(prev_comm)
-    # loop invariants are consumed; only the returned labels stay pinned
-    release_checkpoint(e_raw)
-    release_checkpoint(deg)
+        # the label frame is materialized: the round's pins are dead
+        # weight from here on
+        rnd.result(comm)
+        zero_streak = 0 if probe["rows"] else zero_streak + 1
+        if zero_streak >= 2:
+            break
     return comm
+
+
+def _coarse_rounds(pins: Pins, coarse: DataFrame, rounds: int) -> DataFrame:
+    """Phase-1 rounds on a contracted (c_src, c_dst, weight) graph,
+    seeded with singleton communities."""
+    seed = (
+        coarse.select(F.col("c_src").alias("id"))
+        .unionByName(coarse.select(F.col("c_dst").alias("id")))
+        .distinct()
+        .select("id", F.col("id").alias("community"))
+    )
+    return _louvain_rounds(
+        pins, coarse, seed, rounds, "c_src", "c_dst", "id", "community", "weight"
+    )
 
 
 def louvain_coarsen(
@@ -1626,28 +1587,8 @@ def louvain_coarsen(
     but community-graph-sized in practice (it IS the next level's
     input); nothing is all-pairs and the agg combines map-side."""
     ctype = communities.schema[comm_col].dataType
-    w = (
-        F.col(weight_col).cast("long")
-        if weight_col is not None
-        else F.lit(1).cast("long")
-    )
-    comm = communities.select(
-        F.col(id_col).alias("__node"), F.col(comm_col).alias("__c")
-    )
-    e = (
-        edges.select(
-            F.col(src).alias("__s"), F.col(dst).alias("__d"), w.alias("__w")
-        )
-        .join(
-            comm.select(F.col("__node").alias("__s"), F.col("__c").alias("__cs")),
-            "__s",
-            "left",
-        )
-        .join(
-            comm.select(F.col("__node").alias("__d"), F.col("__c").alias("__cd")),
-            "__d",
-            "left",
-        )
+    e = _label_ends(
+        _louvain_edges(edges, src, dst, weight_col), communities, id_col, comm_col
     )
     cs = F.coalesce(F.col("__cs"), F.col("__s").cast(ctype))
     cd = F.coalesce(F.col("__cd"), F.col("__d").cast(ctype))
@@ -1695,38 +1636,24 @@ def louvain_two_level(
     the classic Louvain cost profile."""
     # one materialization of the caller's edge plan (often an expensive
     # self-join) shared by phase 1's rounds AND the phase-2 contraction
-    edges = edges.select(src, dst).localCheckpoint(eager=False)
-    comm1 = louvain_communities(
-        edges,
-        communities,
-        max_rounds=rounds1,
-        src=src,
-        dst=dst,
-        id_col=id_col,
-        comm_col=comm_col,
+    pins = Pins("louvain_two_level")
+    edges = pins.pin(edges.select(src, dst), eager=False)
+    comm1 = _louvain_rounds(
+        pins, edges, communities, rounds1, src, dst, id_col, comm_col, None
     )
-    coarse = louvain_coarsen(
-        edges, comm1, src=src, dst=dst, id_col="id", comm_col="community"
-    ).localCheckpoint(eager=True)
-    seed2 = (
-        coarse.select(F.col("c_src").alias("id"))
-        .unionByName(coarse.select(F.col("c_dst").alias("id")))
-        .distinct()
-        .select("id", F.col("id").alias("community"))
+    coarse = pins.pin(
+        louvain_coarsen(
+            edges, comm1, src=src, dst=dst, id_col="id", comm_col="community"
+        )
     )
-    comm2 = louvain_communities(
-        coarse,
-        seed2,
-        max_rounds=rounds2,
-        src="c_src",
-        dst="c_dst",
-        weight_col="weight",
-    )
+    comm2 = _coarse_rounds(pins, coarse, rounds2)
     up = comm2.select(
         F.col("id").alias("community"), F.col("community").alias("__c2")
     )
-    return comm1.join(up, "community", "left").select(
-        "id", F.coalesce(F.col("__c2"), F.col("community")).alias("community")
+    return pins.result(
+        comm1.join(up, "community", "left").select(
+            "id", F.coalesce(F.col("__c2"), F.col("community")).alias("community")
+        )
     )
 
 
@@ -1775,36 +1702,21 @@ def louvain_multilevel(
     # one materialization of the caller's edge plan shared by level 1's
     # rounds AND the first contraction (deeper levels run on eagerly
     # checkpointed contracted graphs already)
-    edges = edges.select(src, dst).localCheckpoint(eager=False)
-    labels = louvain_communities(
-        edges,
-        communities,
-        max_rounds=rounds_per_level,
-        src=src,
-        dst=dst,
-        id_col=id_col,
-        comm_col=comm_col,
+    pins = Pins("louvain_multilevel")
+    edges = pins.pin(edges.select(src, dst), eager=False)
+    labels = _louvain_rounds(
+        pins, edges, communities, rounds_per_level, src, dst, id_col, comm_col, None
     )
-    cur = louvain_coarsen(
-        edges, labels, src=src, dst=dst, id_col="id", comm_col="community"
-    ).localCheckpoint(eager=True)
-    for _level in range(1, int(max_levels)):
-        seed = (
-            cur.select(F.col("c_src").alias("id"))
-            .unionByName(cur.select(F.col("c_dst").alias("id")))
-            .distinct()
-            .select("id", F.col("id").alias("community"))
+    cur = pins.pin(
+        louvain_coarsen(
+            edges, labels, src=src, dst=dst, id_col="id", comm_col="community"
         )
-        comm_l, probe = observed_checkpoint(
-            louvain_communities(
-                cur,
-                seed,
-                max_rounds=rounds_per_level,
-                src="c_src",
-                dst="c_dst",
-                weight_col="weight",
-            ),
-            "louvain_multilevel",
+    )
+    for _level in range(1, int(max_levels)):
+        comm_l = _coarse_rounds(pins, cur, rounds_per_level)
+        comm_l, probe = pins.advance(
+            comm_l,
+            comm_l,
             {"moved": F.count_if(F.col("community") != F.col("id"))},
         )
         # singleton-seeded level: zero applied moves == identity
@@ -1814,27 +1726,31 @@ def louvain_multilevel(
         up = comm_l.select(
             F.col("id").alias("community"), F.col("community").alias("__up")
         )
-        labels = (
-            labels.join(up, "community", "left")
-            .select(
+        labels, _ = pins.advance(
+            labels,
+            labels.join(up, "community", "left").select(
                 "id",
                 F.coalesce(F.col("__up"), F.col("community")).alias(
                     "community"
                 ),
-            )
-            .localCheckpoint(eager=True)
+            ),
         )
         if _level < int(max_levels) - 1:
-            cur = louvain_coarsen(
-                cur,
-                comm_l,
-                src="c_src",
-                dst="c_dst",
-                id_col="id",
-                comm_col="community",
-                weight_col="weight",
-            ).localCheckpoint(eager=True)
-    return labels
+            # the level's contraction is materialized: the previous
+            # community graph and this level's labels are dead
+            cur, _ = pins.advance(
+                (cur, comm_l),
+                louvain_coarsen(
+                    cur,
+                    comm_l,
+                    src="c_src",
+                    dst="c_dst",
+                    id_col="id",
+                    comm_col="community",
+                    weight_col="weight",
+                ),
+            )
+    return pins.result(labels)
 
 
 def betweenness_sample(
@@ -1883,39 +1799,34 @@ def betweenness_sample(
         raise ValueError(
             f"betweenness_sample: max_hops must be >= 1 (got {max_hops})"
         )
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(
-            F.col("a").isNotNull()
-            & F.col("b").isNotNull()
-            & (F.col("a") != F.col("b"))
-        )
-        .distinct()
-        .localCheckpoint()
-    )
+    pins = Pins("betweenness_sample")
+    sym = pins.pin(_undirected(edges, src, dst))
     [src_col] = sources.columns
     seeds = sources.select(F.col(src_col).alias("s")).distinct()
     # forward: levels[l] = (s, id, sigma) — sigma exact integers
-    level0 = seeds.select(
-        "s", F.col("s").alias("id"), F.lit(1).cast("long").alias("sigma")
-    ).localCheckpoint()
+    level0 = pins.pin(
+        seeds.select(
+            "s", F.col("s").alias("id"), F.lit(1).cast("long").alias("sigma")
+        )
+    )
     levels = [level0]
-    visited = level0.select("s", "id").localCheckpoint()
+    visited = pins.pin(level0.select("s", "id"))
     for _ in range(int(max_hops)):
         cur = levels[-1]
-        nxt = (
+        nxt, probe = pins.advance(
+            None,
             cur.join(sym, cur["id"] == sym["a"])
             .select("s", F.col("b").alias("id"), "sigma")
             .join(visited, ["s", "id"], "left_anti")
             .groupBy("s", "id")
-            .agg(F.sum("sigma").alias("sigma"))
+            .agg(F.sum("sigma").alias("sigma")),
         )
-        nxt, probe = observed_checkpoint(nxt, "betweenness_sample")
         if probe["rows"] == 0:
             break
         levels.append(nxt)
-        visited = visited.unionByName(nxt.select("s", "id")).localCheckpoint()
+        visited, _ = pins.advance(
+            visited, visited.unionByName(nxt.select("s", "id"))
+        )
     # backward: delta over levels L-1 .. 0; sources' own rows at
     # level 0 are excluded from the OUTPUT sum for their own sweep
     # (Brandes accumulates only v != s), handled by dropping (s, s)
@@ -1954,11 +1865,15 @@ def betweenness_sample(
                     "s", "id", F.coalesce("delta", F.lit(0.0)).alias("delta")
                 )
             )
-        delta = delta.localCheckpoint(eager=True)
+        # level li+1 is read by nothing once level li's delta is
+        # materialized; every delta stays pinned for the result's union
+        delta, _ = pins.advance(
+            None if delta_next is None else levels[li + 1], delta
+        )
         part = delta.filter(F.col("id") != F.col("s"))
         acc = part if acc is None else acc.unionByName(part)
         delta_next = delta
-    return (
+    return pins.result(
         acc.groupBy("id")
         .agg(F.round(F.sum("delta"), round_to).alias("betweenness"))
     )
@@ -2040,7 +1955,7 @@ def degree_assortativity(
     )
 
 
-def _triangle_edge_support(e: DataFrame) -> DataFrame:
+def _triangle_edge_support(e: DataFrame, pins: Pins) -> DataFrame:
     """Per-edge triangle support over a canonical (u < v) simple edge
     frame: the compact-forward enumeration (``_enumerate_triangles``,
     each triangle found once in degree-rank order), then each triangle
@@ -2049,7 +1964,7 @@ def _triangle_edge_support(e: DataFrame) -> DataFrame:
     higher degree and the caller's edge frame is id-canonical.
     Output: (u, v, support >= 1) — edges in no triangle have no
     row."""
-    tris = _enumerate_triangles(e)
+    tris = _enumerate_triangles(e, pins)
     sides = (
         tris.select(F.col("x").alias("p"), F.col("y").alias("q"))
         .unionAll(tris.select(F.col("y").alias("p"), F.col("z").alias("q")))
@@ -2095,7 +2010,7 @@ def ktruss(
     Scale: each round is the compact-forward wedge join (degree-rank
     oriented — forward fan-out O(sqrt(m)) per vertex, hub-safe; the
     ``_forward_edges`` note) + one (u, v) aggregation + one semi-join;
-    the surviving frame localCheckpoints per round (flat lineage).
+    the surviving frame checkpoints per round (flat lineage).
     Rounds remove whole shells, not single edges. If ``max_iter``
     exhausts before the fixpoint, the final support recompute acts as
     ONE extra prune via a left join (support coalesced to 0), so the
@@ -2124,40 +2039,40 @@ def ktruss(
     # (pre-prune e == post-prune e there, so the frames are identical
     # by construction). Guide §2.4: don't recompute what the loop
     # already proved.
-    e, probe = observed_checkpoint(e, "ktruss")
+    pins = Pins("ktruss")
+    e, probe = pins.advance(None, e)
     n_edges = probe["rows"]
     final_sup = None
     for _ in range(max(1, int(max_iter))):
-        sup = _triangle_edge_support(e).localCheckpoint(eager=False)
+        # the round's triangle frames and support live in a scope of
+        # the round
+        rnd = Pins("ktruss")
+        sup = rnd.pin(_triangle_edge_support(e, rnd), eager=False)
         keep = sup.filter(F.col("support") >= need).select("u", "v")
-        # pruned's EAGER checkpoint runs the job that also materializes
-        # sup's lazy pin (keep reads sup, and a lazy local checkpoint
-        # fills its blocks as a side effect of the first job over it).
-        # That is what makes the next two steps safe: releasing e (sup
-        # no longer needs it), and reusing sup as final_sup at the
-        # fixpoint. Keep this checkpoint eager and ahead of both.
-        pruned, probe = observed_checkpoint(
-            e.join(keep, ["u", "v"], "left_semi"), "ktruss"
-        )
-        n_pruned = probe["rows"]
-        release_checkpoint(e)
-        e = pruned
-        if n_pruned == n_edges:
-            final_sup = sup
+        # the pruning round's EAGER checkpoint runs the job that also
+        # materializes sup's lazy pin (keep reads sup, and a lazy local
+        # checkpoint fills its blocks as a side effect of the first job
+        # over it). That is what lets the fixpoint reuse sup as
+        # final_sup. Keep this checkpoint eager and ahead of it.
+        e, probe = pins.advance(e, e.join(keep, ["u", "v"], "left_semi"))
+        if probe["rows"] == n_edges:
+            final_sup = rnd.result(sup)
             break
-        release_checkpoint(sup)
-        n_edges = n_pruned
+        rnd.result(e)
+        n_edges = probe["rows"]
     if final_sup is None:
-        final_sup = _triangle_edge_support(e)
+        final_sup = _triangle_edge_support(e, pins)
     # LEFT join + coalesce: at the fixpoint every survivor has
     # support >= k-2 >= 1 so this matches the old inner join; when
     # max_iter exhausts first, survivors whose support dropped to 0
     # keep their row (support 0) instead of silently vanishing into
     # a set that is neither the pre- nor post-prune edge set.
-    return e.join(final_sup, ["u", "v"], "left").select(
-        "u",
-        "v",
-        F.coalesce(F.col("support"), F.lit(0).cast("long")).alias("support"),
+    return pins.result(
+        e.join(final_sup, ["u", "v"], "left").select(
+            "u",
+            "v",
+            F.coalesce(F.col("support"), F.lit(0).cast("long")).alias("support"),
+        )
     )
 
 
@@ -2194,32 +2109,23 @@ def closeness_sample(
         raise ValueError(
             f"closeness_sample: max_hops must be >= 1 (got {max_hops})"
         )
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(
-            F.col("a").isNotNull()
-            & F.col("b").isNotNull()
-            & (F.col("a") != F.col("b"))
-        )
-        .distinct()
-        .localCheckpoint()
-    )
+    pins = Pins("closeness_sample")
+    sym = pins.pin(_undirected(edges, src, dst))
     [src_col] = sources.columns
     seeds = sources.select(F.col(src_col).alias("s")).distinct()
-    frontier = seeds.select("s", F.col("s").alias("id")).localCheckpoint(
-        eager=True
-    )
+    frontier = pins.pin(seeds.select("s", F.col("s").alias("id")))
     visited = frontier
     level_counts = []  # (depth, frame of per-source reach counts)
     for d in range(1, int(max_hops) + 1):
-        nxt = (
+        # every level's frontier stays pinned: the result's reach
+        # counts aggregate over them
+        nxt, probe = pins.advance(
+            None,
             frontier.join(sym, frontier["id"] == sym["a"])
             .select("s", F.col("b").alias("id"))
             .distinct()
-            .join(visited, ["s", "id"], "left_anti")
+            .join(visited, ["s", "id"], "left_anti"),
         )
-        nxt, probe = observed_checkpoint(nxt, "closeness_sample")
         if probe["rows"] == 0:
             break
         level_counts.append(
@@ -2234,32 +2140,35 @@ def closeness_sample(
                 F.col("__cnt").cast("long").alias("__reach"),
             )
         )
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
+        visited, _ = pins.advance(visited, visited.unionByName(nxt))
         frontier = nxt
     if not level_counts:
-        return seeds.select(
-            F.col("s").alias("id"),
-            F.lit(0).cast("long").alias("n_reached"),
-            F.lit(0.0).alias("harmonic_closeness"),
+        return pins.result(
+            seeds.select(
+                F.col("s").alias("id"),
+                F.lit(0).cast("long").alias("n_reached"),
+                F.lit(0.0).alias("harmonic_closeness"),
+            )
         )
-    terms = level_counts[0]
-    for lc in level_counts[1:]:
-        terms = terms.unionByName(lc)
+    terms = reduce(DataFrame.unionByName, level_counts)
     per_s = terms.groupBy("s").agg(
         F.sum("__reach").cast("long").alias("n_reached"),
         F.sum("__term").alias("__h"),
     )
-    return seeds.join(per_s, "s", "left").select(
-        F.col("s").alias("id"),
-        F.coalesce("n_reached", F.lit(0).cast("long")).alias("n_reached"),
-        F.coalesce(F.col("__h").cast("double"), F.lit(0.0)).alias(
-            "harmonic_closeness"
-        ),
+    return pins.result(
+        seeds.join(per_s, "s", "left").select(
+            F.col("s").alias("id"),
+            F.coalesce("n_reached", F.lit(0).cast("long")).alias("n_reached"),
+            F.coalesce(F.col("__h").cast("double"), F.lit(0.0)).alias(
+                "harmonic_closeness"
+            ),
+        )
     )
 
 
 
 def _min_label_fixpoint(
+    pins: Pins,
     edges: DataFrame,
     verts: DataFrame,
     max_iter: int,
@@ -2291,15 +2200,17 @@ def _min_label_fixpoint(
     ``id`` column covering every endpoint. Output: (id, lbl) with
     lbl a struct (h, i); lbl.i is the region-root vertex id.
 
-    Rounds checkpoint via ``stats_free_checkpoint``: with the round
-    plan referencing its input several times, the plain checkpoint's
-    inherited size estimate compounds exponentially round over round
-    until Catalyst's stats visitor multiplies million-digit
-    BigIntegers with the driver pinned at 100% single-core.
+    Rounds checkpoint in the caller's scope with ``fresh_stats``
+    (``stats_free_checkpoint``): with the round plan referencing its
+    input several times, the plain checkpoint's inherited size
+    estimate compounds exponentially round over round until
+    Catalyst's stats visitor multiplies million-digit BigIntegers with
+    the driver pinned at 100% single-core. Each round releases the
+    one it supersedes.
 
     Raises RuntimeError when ``max_iter`` rounds pass without a
     fixpoint — a partial labeling would silently mis-assign
-    components downstream."""
+    components downstream; the scope's pins are released first."""
     mk = F.struct(F.xxhash64(F.col("id")).alias("h"), F.col("id").alias("i"))
     labels = verts.select("id", mk.alias("lbl"))
 
@@ -2341,19 +2252,22 @@ def _min_label_fixpoint(
     # round despite fewer jobs. One round per checkpoint, with the
     # convergence probe riding the same job as an observe metric and
     # the double pointer jump keeping rounds-to-fixpoint ~log3(n).
-    for _ in range(int(max_iter)):
+    for i in range(int(max_iter)):
         seeded = labels.select(
             "id", F.col("lbl").alias("__old"), "lbl"
         )
-        snap, probe = observed_checkpoint(
+        # round 0's labels is a projection of verts, which the caller
+        # still reads
+        snap, probe = pins.advance(
+            labels if i else None,
             step(seeded),
-            what,
             {"changed": F.count_if(F.col("__old") != F.col("lbl"))},
             fresh_stats=True,
         )
         labels = snap.select("id", "lbl")
         if probe["changed"] == 0:
             return labels
+    pins.result(None)
     raise RuntimeError(
         f"{what}: label propagation did not converge within "
         f"max_iter={max_iter} rounds; labels would be silently wrong — "
@@ -2426,9 +2340,12 @@ def strongly_connected_components(
     default budget); every round checkpoints eagerly
     through ``stats_free_checkpoint`` (lineage truncated AND the
     compounding size estimate reset — see that helper's docstring)
-    with the convergence probe fused into the materialization job as
-    an ``observe`` metric. The reference repo has no graph module —
-    semantics follow the published FW-BW/coloring papers."""
+    with the convergence probe and the vertex/edge counts fused into
+    the materialization job as ``observe`` metrics. Superseded rounds,
+    trim steps and color frames are released as the loop moves on;
+    after the call only the settled frames the result unions stay
+    pinned. The reference repo has no graph module — semantics follow
+    the published FW-BW/coloring papers."""
     named = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
         F.col("a").isNotNull() & F.col("b").isNotNull()
     )
@@ -2444,28 +2361,39 @@ def strongly_connected_components(
         verts = verts.unionByName(
             vertices.select(F.col(id_col).alias("id"))
         ).distinct()
-    active_v = stats_free_checkpoint(verts)
-    active_e, probe = observed_checkpoint(
-        named.filter(F.col("a") != F.col("b")).distinct(),
-        "strongly_connected_components",
-        fresh_stats=True,
+    # vertex and edge counts ride every checkpoint job as observe
+    # probes, so neither the trim's stability check nor an emptiness
+    # test ever needs a job of its own
+    pins = Pins("strongly_connected_components")
+
+    def restrict(e, v):
+        """The next active edge set: the edges of ``e`` inside ``v``."""
+        return pins.advance(
+            e,
+            e.join(v.select(F.col("id").alias("a")), "a", "left_semi").join(
+                v.select(F.col("id").alias("b")), "b", "left_semi"
+            ),
+            fresh_stats=True,
+        )
+
+    active_v, probe = pins.advance(None, verts, fresh_stats=True)
+    n_verts = probe["rows"]
+    active_e, probe = pins.advance(
+        None, named.filter(F.col("a") != F.col("b")).distinct(), fresh_stats=True
     )
-    # live edge count, threaded through observe probes so trim's
-    # stability check never needs its own count job
     n_edges = probe["rows"]
     # accumulated (id, comp) frames; comp is the settling phase's root
     # id — renamed to the component's numeric min at the end
     settled_parts: list[DataFrame] = []
     for _ in range(int(max_phases)):
-        if active_v.isEmpty():
+        if n_verts == 0:
             break
         # 1. trim: no-in or no-out vertices are singleton SCCs — one
         # materialized peel round at a time (lazy chaining re-executes
-        # shared subframes, see the fixpoint note), stability read
-        # from the edge count riding the checkpoint job as an observe
-        # metric, and the settled singletons reconstructed ONCE per
-        # phase from the before/after vertex sets
-        phase_start_v = active_v
+        # shared subframes, see the fixpoint note), and the settled
+        # singletons reconstructed ONCE per phase from the before/after
+        # vertex sets
+        phase_start_v, phase_n = active_v, n_verts
         for _t in range(int(trim_rounds)):
             roles = active_e.select(
                 F.col("a").alias("id"),
@@ -2484,70 +2412,67 @@ def strongly_connected_components(
                 .filter((F.col("__ho") == 1) & (F.col("__hi") == 1))
                 .select("id")
             )
-            av = stats_free_checkpoint(active_v.join(both, "id", "left_semi"))
-            active_e, probe = observed_checkpoint(
-                active_e.join(
-                    av.select(F.col("id").alias("a")), "a", "left_semi"
-                ).join(av.select(F.col("id").alias("b")), "b", "left_semi"),
-                "strongly_connected_components(trim)",
+            # the phase's starting vertex set stays for the trimmed diff
+            av, probe = pins.advance(
+                None if active_v is phase_start_v else active_v,
+                active_v.join(both, "id", "left_semi"),
                 fresh_stats=True,
             )
+            n_verts = probe["rows"]
+            active_e, probe = restrict(active_e, av)
             active_v = av
             new_n = probe["rows"]
             stable = new_n == n_edges
             n_edges = new_n
             if stable:
                 break
-        trimmed = stats_free_checkpoint(
-            phase_start_v.join(active_v, "id", "left_anti")
-        )
-        if not trimmed.isEmpty():
+        stale = None if active_v is phase_start_v else phase_start_v
+        if n_verts < phase_n:
+            trimmed, _ = pins.advance(
+                stale,
+                phase_start_v.join(active_v, "id", "left_anti"),
+                fresh_stats=True,
+            )
             settled_parts.append(
                 trimmed.select("id", F.col("id").alias("comp"))
             )
-        if active_v.isEmpty():
+            stale = None
+        if n_verts == 0:
             break
         # 2. forward colors over the active subgraph
         colors = _min_label_fixpoint(
-            active_e,
-            active_v,
-            max_iter,
-            "strongly_connected_components(forward)",
+            pins, active_e, active_v, max_iter, "strongly_connected_components(forward)"
         )
         # 3. backward labels within color regions: reverse the
         # same-color edges and propagate again
         ca = colors.select(F.col("id").alias("a"), F.col("lbl").alias("__ca"))
         cb = colors.select(F.col("id").alias("b"), F.col("lbl").alias("__cb"))
-        same_rev = stats_free_checkpoint(
+        same_rev = pins.pin(
             active_e.join(ca, "a")
             .join(cb, "b")
             .filter(F.col("__ca") == F.col("__cb"))
-            .select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        bmin = _min_label_fixpoint(
-            same_rev,
-            active_v,
-            max_iter,
-            "strongly_connected_components(backward)",
-        )
-        members = stats_free_checkpoint(
-            colors.join(bmin.select("id", F.col("lbl").alias("__bl")), "id")
-            .filter(F.col("lbl") == F.col("__bl"))
-            .select("id", F.col("lbl")["i"].alias("comp"))
-        )
-        settled_parts.append(members)
-        active_v = stats_free_checkpoint(
-            active_v.join(members, "id", "left_anti")
-        )
-        active_e, probe = observed_checkpoint(
-            active_e.join(
-                active_v.select(F.col("id").alias("a")), "a", "left_semi"
-            ).join(active_v.select(F.col("id").alias("b")), "b", "left_semi"),
-            "strongly_connected_components",
+            .select(F.col("b").alias("a"), F.col("a").alias("b")),
             fresh_stats=True,
         )
+        bmin = _min_label_fixpoint(
+            pins, same_rev, active_v, max_iter, "strongly_connected_components(backward)"
+        )
+        members, _ = pins.advance(
+            (colors, same_rev, bmin, stale),
+            colors.join(bmin.select("id", F.col("lbl").alias("__bl")), "id")
+            .filter(F.col("lbl") == F.col("__bl"))
+            .select("id", F.col("lbl")["i"].alias("comp")),
+            fresh_stats=True,
+        )
+        settled_parts.append(members)
+        active_v, probe = pins.advance(
+            active_v, active_v.join(members, "id", "left_anti"), fresh_stats=True
+        )
+        n_verts = probe["rows"]
+        active_e, probe = restrict(active_e, active_v)
         n_edges = probe["rows"]
-    if not active_v.isEmpty():
+    if n_verts:
+        pins.result(None)
         raise RuntimeError(
             "strongly_connected_components did not settle every vertex "
             f"within max_phases={max_phases} phases; the labeling would "
@@ -2556,11 +2481,11 @@ def strongly_connected_components(
             "order-descend)"
         )
     if not settled_parts:
-        return verts.select("id", F.col("id").alias("scc_id")).limit(0)
-    settled = settled_parts[0]
-    for p in settled_parts[1:]:
-        settled = settled.unionByName(p)
+        return pins.result(
+            verts.select("id", F.col("id").alias("scc_id")).limit(0)
+        )
+    settled = reduce(DataFrame.unionByName, settled_parts)
     # contract: scc_id = numeric min member id (order-independent),
     # regardless of which root the hashed order elected internally
     mins = settled.groupBy("comp").agg(F.min("id").alias("scc_id"))
-    return settled.join(mins, "comp").select("id", "scc_id")
+    return pins.result(settled.join(mins, "comp").select("id", "scc_id"))

@@ -1,9 +1,13 @@
-"""SparkSession factory tuned for the graph-ETL workload.
+"""SparkSession factory tuned for the graph-ETL workload, and the
+checkpoint helpers of the iterative operators.
 
 Single place to encode the scale posture: AQE on (runtime join-strategy
 selection + skew-join splitting for the remap joins), modest shuffle
 partitioning for local runs (overridable via env for cluster runs),
-Arrow enabled for the pandas-UDF extension operators.
+Arrow enabled for the pandas-UDF extension operators. ``Pins`` is the
+one checkpoint scope of a graph-operator call: it pins, runs rounds
+through ``observed_checkpoint`` and releases what the result does not
+read.
 """
 
 from __future__ import annotations
@@ -11,7 +15,9 @@ from __future__ import annotations
 import logging
 import os
 import time
+from functools import partial
 
+from py4j.protocol import Py4JError
 from pyspark.sql import SparkSession
 
 logger = logging.getLogger("graph_etl_spark")
@@ -105,28 +111,62 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def release_checkpoint(df) -> None:
-    """Unpersist the RDD blocks behind a ``localCheckpoint``-ed frame.
-
-    A checkpointed Dataset's analyzed plan is a ``LogicalRDD`` whose
-    ``rdd`` field IS the persisted RDD, so dropping its blocks is one
-    ``unpersist(blocking=false)`` away. Iterative operators that pin a
-    frame per round (Louvain's gated movers, labeled-degree joins)
-    otherwise accumulate checkpoint blocks linearly with round count
-    (ADVICE r17) — call this once the round's consumers have
-    materialized.
-
-    The frame must have NO live consumer: the checkpoint truncated its
-    lineage, so the dropped blocks cannot be recomputed and any later
-    action on ``df`` (or on a frame built from it) fails with a missing
-    checkpoint block, far from this call. On any other plan shape, or
-    if the internal accessor ever drifts, this is a no-op (logged at
-    debug level on the ``graph_etl_spark`` logger): worst case the
-    blocks live until the context's usual cleanup, exactly as before."""
+def _persisted_rdds(df, *, nearest: bool) -> dict | None:
+    """The persisted RDDs ``df`` reads, ``{rdd id: JVM RDD}``, or None
+    if the internal accessors drift. The walk starts at the
+    ``LogicalRDD`` (checkpoint) and ``InMemoryRelation`` (cache) leaves
+    of ``df``'s plan and follows RDD dependencies; ``nearest`` stops
+    each path at its first persisted RDD, the one behind a pin (also
+    below a ``stats_free_checkpoint`` rebuild). A materialized
+    checkpoint's lineage is truncated, so only a cache or a lazy
+    checkpoint leads the full walk further down."""
     try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception as exc:
-        logger.debug("release_checkpoint: nothing to release (%s)", exc)
+        stack = []
+        leaves = df._jdf.queryExecution().withCachedData().collectLeaves()
+        for leaf in (leaves.apply(i) for i in range(leaves.size())):
+            kind = leaf.getClass().getSimpleName()
+            if kind == "LogicalRDD":
+                stack.append(leaf.rdd())
+            elif kind == "InMemoryRelation":
+                stack.append(leaf.cacheBuilder().cachedColumnBuffers())
+        seen: set[int] = set()
+        found: dict = {}
+        while stack:
+            rdd = stack.pop()
+            if rdd.id() in seen:
+                continue
+            seen.add(rdd.id())
+            if rdd.getStorageLevel().isValid():
+                found[rdd.id()] = rdd
+                if nearest:
+                    continue
+            deps = rdd.dependencies()
+            stack.extend(deps.apply(i).rdd() for i in range(deps.size()))
+        return found
+    except Py4JError as exc:  # pragma: no cover - internal API drift
+        logger.debug("plan walk failed (%s)", exc)
+        return None
+
+
+def release_checkpoint(df) -> None:
+    """Unpersist the blocks behind a ``localCheckpoint``, a
+    ``stats_free_checkpoint`` or a projection of either. The frame must
+    have NO live consumer: its lineage is truncated, so a later action
+    on it fails with a missing checkpoint block, far from this call.
+    Without a checkpoint below it this is a no-op, logged at debug
+    level on the ``graph_etl_spark`` logger."""
+    rdds = _persisted_rdds(df, nearest=True)
+    if not rdds:
+        logger.debug("release_checkpoint: nothing to release")
+    for rdd in (rdds or {}).values():
+        _unpersist(rdd)
+
+
+def _unpersist(rdd) -> None:
+    """Drop a persisted RDD's blocks without blocking. Through the
+    context, not ``RDD.unpersist``, which logs a WARN line for every
+    locally checkpointed RDD it frees."""
+    rdd.context().unpersistRDD(rdd.id(), False)
 
 
 def stats_free_checkpoint(df):
@@ -203,3 +243,70 @@ def observed_checkpoint(df, what: str, probes=None, *, fresh_stats: bool = False
         "%s: %s in %.1f ms", what, values, (time.perf_counter() - t0) * 1e3
     )
     return snap, values
+
+
+class Pins:
+    """The checkpoint scope of one graph-operator call: every frame the
+    call pins goes through it, and it frees them.
+
+    - ``pin(df, eager=True, fresh_stats=False, cache=False)``
+      checkpoints ``df`` (via ``stats_free_checkpoint`` with
+      ``fresh_stats``) and records the RDD behind it. ``cache``
+      persists ``df`` instead, so the optimizer sees its actual size,
+      not a checkpoint's plan estimate (which can turn every later
+      round's joins from broadcast to shuffle).
+    - ``advance(prev, plan, probes=None, fresh_stats=False)`` is one
+      round: ``observed_checkpoint`` of ``plan`` and its probes in one
+      job, then the release of this scope's pins behind ``prev`` (a
+      frame, a sequence of frames, or None): the state the snapshot
+      supersedes, which nothing may read afterwards.
+    - ``result(df)`` releases every pin ``df`` does not read (all of
+      them for None, before a raise) and returns ``df``, so a lazy
+      result keeps exactly the pins it needs. It logs one DEBUG line
+      on the ``graph_etl_spark`` logger: ``what``, the rounds advanced,
+      the last probe values, the pins released and kept."""
+
+    def __init__(self, what: str):
+        self.what, self._held = what, {}
+        self._rounds, self._last, self._released = 0, None, 0
+
+    def _track(self, snap, cached: bool = False):
+        # a cached frame is released through the cache manager, so its
+        # cache entry goes with its blocks
+        for rid, rdd in (_persisted_rdds(snap, nearest=True) or {}).items():
+            self._held[rid] = snap.unpersist if cached else partial(_unpersist, rdd)
+        return snap
+
+    def _release(self, rid):
+        self._held.pop(rid)()
+        self._released += 1
+
+    def pin(self, df, *, eager=True, fresh_stats=False, cache=False):
+        if cache:
+            return self._track(df.persist(), cached=True)
+        if fresh_stats:
+            return self._track(stats_free_checkpoint(df))
+        return self._track(df.localCheckpoint(eager=eager))
+
+    def advance(self, prev, plan, probes=None, *, fresh_stats=False):
+        snap, self._last = observed_checkpoint(
+            plan, self.what, probes, fresh_stats=fresh_stats
+        )
+        self._track(snap)
+        self._rounds += 1
+        for frame in prev if isinstance(prev, (list, tuple)) else [prev]:
+            behind = {} if frame is None else _persisted_rdds(frame, nearest=True)
+            for rid in (behind or {}).keys() & self._held.keys():
+                self._release(rid)
+        return snap, self._last
+
+    def result(self, df):
+        reads = {} if df is None else _persisted_rdds(df, nearest=False)
+        for rid in self._held.keys() - (self._held if reads is None else reads):
+            self._release(rid)
+        logger.debug(
+            "%s pins: %d rounds, last probes %s, %d released, %d kept",
+            self.what, self._rounds, self._last, self._released, len(self._held),
+        )
+        self._held = {}
+        return df

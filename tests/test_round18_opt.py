@@ -48,9 +48,14 @@ def _n_persistent(spark) -> int:
     )
 
 
-def test_release_checkpoint_frees_blocks(spark):
+@pytest.mark.parametrize(
+    "checkpoint",
+    [lambda df: df.localCheckpoint(eager=True), stats_free_checkpoint],
+    ids=["local", "stats_free"],
+)
+def test_release_checkpoint_frees_blocks(spark, checkpoint):
     before = _n_persistent(spark)
-    snap = spark.range(100).localCheckpoint(eager=True)
+    snap = checkpoint(spark.range(100))
     assert snap.count() == 100
     assert _n_persistent(spark) == before + 1
     release_checkpoint(snap)
