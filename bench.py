@@ -818,6 +818,7 @@ def main() -> None:
             "loadavg_end": [round(x, 2) for x in os.getloadavg()],
             "load_gate": load_gate,
             "gate_waited_sec": waited,
+            "cpus": spark.sparkContext.defaultParallelism,
         }
     )
     here = os.path.dirname(os.path.abspath(__file__))
@@ -829,8 +830,11 @@ def main() -> None:
         with open(os.path.join(here, "BENCH_ONLY_SAMPLE.json"), "w") as f:
             json.dump(sidecar, f, indent=1)
     else:
-        with open(os.path.join(here, "BENCH_SUMMARY.json"), "w") as f:
-            json.dump(sidecar, f, indent=1)
+        # one record per core count, so a c8 run keeps the c32 one;
+        # BENCH_SUMMARY.json stays the latest (tools/preflight.py reads it)
+        for name in (f"BENCH_SUMMARY_c{sidecar['cpus']}.json", "BENCH_SUMMARY.json"):
+            with open(os.path.join(here, name), "w") as f:
+                json.dump(sidecar, f, indent=1)
     # The compact summary must be the LAST stdout line and must fit
     # entirely inside the driver's ~2000-char tail capture — three
     # rounds running the record landed parsed:null because the full

@@ -296,9 +296,10 @@ def ngram_jaccard_pairs(
     construction: every kept posting has ≤ cap ids, so candidate
     pairs ≤ C(cap, 2) × kept_shingles, and distinct shingles are
     bounded by total shingle occurrences (≈ total tokens). Audited
-    empirically (tools/ngram_cap_audit.py, r9): at 1×/10×/100× of
-    sf0.01 the capped index generated 13 985 / 135 340 / 1 353 400
-    candidate pairs — 0.97× exact-linear at both scales, with
+    empirically (BENCH_NOTES.md, "ngram_jaccard_pairs candidate-growth
+    audit", r9): at 1×/10×/100× of sf0.01 the capped index generated
+    13 985 / 135 340 / 1 353 400 candidate pairs — 0.97× exact-linear
+    at both scales, with
     observed pairs ≈ 0.86 per kept shingle versus the C(16,2)=120
     worst case. The r8 scale probe's 9.7 runtime ratio at 10× was a
     saturated-32-core linear slope, not pair blowup.

@@ -24,9 +24,13 @@ from __future__ import annotations
 
 from functools import reduce
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
+from .. import session
 from ..session import Pins
 
 
@@ -507,9 +511,19 @@ def kcore(
     surviving frame is checkpointed per round to truncate lineage
     (the connected_components discipline) and the superseded round's
     blocks are released, so only the edge set the result reads stays
-    pinned. Rounds are bounded by ``max_iter`` (the peel usually
-    stabilizes in a handful of rounds on power-law graphs: each round
-    removes the entire current sub-``k`` shell, not one vertex)."""
+    pinned. Rounds are bounded by ``max(1, max_iter)`` (the peel
+    usually stabilizes in a handful of rounds on power-law graphs:
+    each round removes the entire current sub-``k`` shell, not one
+    vertex); a run cut there returns the partial peel, the vertices of
+    degree >= k after its last round.
+
+    Once the deduped edge set has at most ``session.LOCAL_FINISH_ROWS``
+    rows (2^20, fixed: the largest size measured, where one task was
+    3.4x faster; the input checkpoint's probe already counted them),
+    the whole peel runs in numpy in one task instead
+    (``Pins.finish``): the same rounds, counted against the same
+    ``max(1, max_iter)``, so a cut run returns the same rows on both
+    paths. Only larger edge sets take the Spark rounds."""
     # undirected simple graph: canonical-order the endpoints, dedupe,
     # drop self-loops (a self-loop would count itself twice and can
     # never be peeled)
@@ -535,7 +549,11 @@ def kcore(
     pins = Pins("kcore")
     e, probe = pins.advance(None, e)
     n_edges = probe["rows"]
-    for _ in range(max(1, max_iter)):
+    rounds = max(1, max_iter)
+    if n_edges <= session.LOCAL_FINISH_ROWS:
+        peel = _peel(int(k), rounds)
+        return pins.result(pins.finish(e, peel, core(e).schema, n_edges))
+    for _ in range(rounds):
         keep = core(e).select("id")
         # pruned is materialized, so nothing reads e any more
         e, probe = pins.advance(
@@ -548,6 +566,62 @@ def kcore(
             break
         n_edges = probe["rows"]
     return pins.result(core(e))
+
+
+def _peel(k: int, rounds: int):
+    """kcore's peel as a pandas function of an (a, b) edge frame: the
+    Spark loop's synchronous rounds in numpy (each drops every vertex
+    of degree < k at once, and a round that drops nothing ends the
+    peel), at most ``rounds`` of them, then (id, degree) of the
+    vertices of degree >= k, ids in first-appearance order. A closure,
+    so it pickles by value and a worker needs no import of this
+    package."""
+    column = _nan_kept()
+
+    def peel(edges: pd.DataFrame) -> pd.DataFrame:
+        # NaN is one vertex, as Spark groups and joins it
+        codes, ids = pd.factorize(
+            pd.concat([edges["a"], edges["b"]], ignore_index=True),
+            use_na_sentinel=False,
+        )
+        a, b = codes[: len(edges)], codes[len(edges):]
+
+        def degree():
+            return np.bincount(a, minlength=len(ids)) + np.bincount(
+                b, minlength=len(ids)
+            )
+
+        for _ in range(rounds):
+            keep = degree() >= k
+            live = keep[a] & keep[b]
+            if live.all():
+                break
+            a, b = a[live], b[live]
+        deg = degree()
+        core = (deg >= k) & (deg > 0)
+        return pd.DataFrame(
+            {"id": column(ids[core]), "degree": deg[core].astype(np.int64)}
+        )
+
+    return peel
+
+
+def _nan_kept():
+    """A function that makes an id column of a finish's output keep a
+    float NaN as a value: PySpark's Arrow conversion writes NaN in a
+    plain float column as null, but not in an Arrow-backed one. Other
+    dtypes pass through. Nested, so it pickles by value with its
+    caller's closure."""
+
+    def column(values):
+        import pyarrow as pa
+
+        values = np.asarray(values)
+        if values.dtype.kind != "f":
+            return values
+        return pd.arrays.ArrowExtensionArray(pa.array(values))
+
+    return column
 
 
 def label_propagation(
@@ -2344,8 +2418,18 @@ def strongly_connected_components(
     the materialization job as ``observe`` metrics. Superseded rounds,
     trim steps and color frames are released as the loop moves on;
     after the call only the settled frames the result unions stay
-    pinned. The reference repo has no graph module — semantics follow
-    the published FW-BW/coloring papers."""
+    pinned. From the second phase on, once the active vertices plus
+    active edges (both counted by the last checkpoints' probes) are at
+    most ``session.LOCAL_FINISH_ROWS`` (2^20, fixed: the largest size
+    measured, where one task still beat the rounds), the residual
+    finishes in one task instead (``Pins.finish``, the serial finish
+    of Slota et al.): an iterative Tarjan settles all of it, each
+    component named by its min member id, ahead of the final rename.
+    The first phase always runs distributed, so its ``max_iter`` and
+    ``max_phases`` raises are the same on both paths; a residual that
+    finishes locally runs no further round, so no later cut applies to
+    it. The reference repo has no graph module — semantics follow the
+    published FW-BW/coloring papers."""
     named = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
         F.col("a").isNotNull() & F.col("b").isNotNull()
     )
@@ -2385,8 +2469,23 @@ def strongly_connected_components(
     # accumulated (id, comp) frames; comp is the settling phase's root
     # id — renamed to the component's numeric min at the end
     settled_parts: list[DataFrame] = []
-    for _ in range(int(max_phases)):
+    for phase in range(int(max_phases)):
         if n_verts == 0:
+            break
+        if phase and n_verts + n_edges <= session.LOCAL_FINISH_ROWS:
+            # the residual in one task: each active vertex rides as a
+            # self-loop row, which no active edge is
+            residual = active_v.select(
+                F.col("id").alias("a"), F.col("id").alias("b")
+            ).unionByName(active_e)
+            field = active_v.schema["id"]
+            schema = StructType(
+                [field, StructField("comp", field.dataType, field.nullable)]
+            )
+            settled_parts.append(
+                pins.finish(residual, _tarjan(), schema, n_verts + n_edges)
+            )
+            n_verts = 0
             break
         # 1. trim: no-in or no-out vertices are singleton SCCs — one
         # materialized peel round at a time (lazy chaining re-executes
@@ -2489,3 +2588,69 @@ def strongly_connected_components(
     # regardless of which root the hashed order elected internally
     mins = settled.groupBy("comp").agg(F.min("id").alias("scc_id"))
     return pins.result(settled.join(mins, "comp").select("id", "scc_id"))
+
+
+def _tarjan():
+    """(id, comp) for every vertex of an (a, b) frame, comp the min
+    member id of its strongly connected component, as a pandas
+    function: Tarjan (1972) with an explicit stack, over CSR arrays.
+    A row with a == b is a vertex (self-loops never change an SCC).
+    A closure, so it pickles by value (see ``_peel``)."""
+    column = _nan_kept()
+
+    def tarjan(rows: pd.DataFrame) -> pd.DataFrame:
+        # NaN is one vertex (see _peel)
+        codes, ids = pd.factorize(
+            pd.concat([rows["a"], rows["b"]], ignore_index=True),
+            use_na_sentinel=False,
+        )
+        src, dst = codes[: len(rows)], codes[len(rows):]
+        arc = src != dst
+        src, dst = src[arc], dst[arc]
+        n = len(ids)
+        order = np.argsort(src, kind="stable")
+        heads = dst[order].tolist()
+        start = [0, *np.cumsum(np.bincount(src, minlength=n)).tolist()]
+        index, low = [-1] * n, [0] * n
+        on_stack, comp = [False] * n, [-1] * n
+        stack: list[int] = []
+        visited = n_comp = 0
+        for root in range(n):
+            if index[root] >= 0:
+                continue
+            index[root] = low[root] = visited
+            visited += 1
+            stack.append(root)
+            on_stack[root] = True
+            work = [[root, start[root]]]
+            while work:
+                frame = work[-1]
+                v, i = frame
+                if i < start[v + 1]:
+                    frame[1] = i + 1
+                    w = heads[i]
+                    if index[w] < 0:
+                        index[w] = low[w] = visited
+                        visited += 1
+                        stack.append(w)
+                        on_stack[w] = True
+                        work.append([w, start[w]])
+                    elif on_stack[w] and index[w] < low[v]:
+                        low[v] = index[w]
+                    continue
+                work.pop()
+                if work and low[v] < low[work[-1][0]]:
+                    low[work[-1][0]] = low[v]
+                if low[v] == index[v]:
+                    while True:
+                        w = stack.pop()
+                        on_stack[w] = False
+                        comp[w] = n_comp
+                        if w == v:
+                            break
+                    n_comp += 1
+        members = pd.Series(np.asarray(ids))
+        mins = members.groupby(comp).transform("min")
+        return pd.DataFrame({"id": column(members), "comp": column(mins)})
+
+    return tarjan

@@ -6,8 +6,8 @@ selection + skew-join splitting for the remap joins), modest shuffle
 partitioning for local runs (overridable via env for cluster runs),
 Arrow enabled for the pandas-UDF extension operators. ``Pins`` is the
 one checkpoint scope of a graph-operator call: it pins, runs rounds
-through ``observed_checkpoint`` and releases what the result does not
-read.
+through ``observed_checkpoint``, finishes a small residual in one task
+and releases what the result does not read.
 """
 
 from __future__ import annotations
@@ -21,6 +21,17 @@ from py4j.protocol import Py4JError
 from pyspark.sql import SparkSession
 
 logger = logging.getLogger("graph_etl_spark")
+
+# A fixpoint whose residual (the rows its last round observed) is at
+# most this many finishes in one task (``Pins.finish``) instead of
+# paying a Spark job per round. Measured with tools/finish_crossover.py
+# on a 4-vCPU host, local[4] (BENCH_NOTES.md, "Residual finish
+# crossover"): the one task was the faster path at every size from
+# 2^14 to 2^20 rows: kcore 2.5-3.5x (7.9 s -> 2.3 s at 2^20 edges),
+# SCC's whole call 1.39-1.64x (90.6 s -> 65.1 s at 1.4M residual
+# rows), so no crossover was reached. 2^20 is the largest size
+# measured; a larger residual keeps the Spark rounds.
+LOCAL_FINISH_ROWS = 1 << 20
 
 
 def get_spark(
@@ -260,15 +271,24 @@ class Pins:
       job, then the release of this scope's pins behind ``prev`` (a
       frame, a sequence of frames, or None): the state the snapshot
       supersedes, which nothing may read afterwards.
+    - ``finish(frame, fn, schema, rows)`` runs ``fn`` over every row
+      of ``frame`` (a pandas frame in, one out with ``schema``) in ONE
+      task: ``coalesce(1).mapInPandas``, no shuffle, checkpointed in
+      one job. Callers take it once the ``rows`` their last
+      ``advance`` observed are at most ``LOCAL_FINISH_ROWS``, so the
+      check costs no job. It logs one DEBUG line: ``what``, ``rows``
+      and the milliseconds.
     - ``result(df)`` releases every pin ``df`` does not read (all of
       them for None, before a raise) and returns ``df``, so a lazy
       result keeps exactly the pins it needs. It logs one DEBUG line
       on the ``graph_etl_spark`` logger: ``what``, the rounds advanced,
-      the last probe values, the pins released and kept."""
+      the last probe values, whether the call finished locally, the
+      pins released and kept."""
 
     def __init__(self, what: str):
         self.what, self._held = what, {}
         self._rounds, self._last, self._released = 0, None, 0
+        self._local = None
 
     def _track(self, snap, cached: bool = False):
         # a cached frame is released through the cache manager, so its
@@ -300,13 +320,34 @@ class Pins:
                 self._release(rid)
         return snap, self._last
 
+    def finish(self, frame, fn, schema, rows):
+        def run(batches):
+            import pandas as pd
+
+            parts = list(batches)
+            if parts:
+                yield fn(pd.concat(parts, ignore_index=True))
+
+        t0 = time.perf_counter()
+        snap = self.pin(frame.coalesce(1).mapInPandas(run, schema))
+        self._local = rows
+        logger.debug(
+            "%s: local finish of %d rows in %.1f ms",
+            self.what, rows, (time.perf_counter() - t0) * 1e3,
+        )
+        return snap
+
     def result(self, df):
         reads = {} if df is None else _persisted_rdds(df, nearest=False)
         for rid in self._held.keys() - (self._held if reads is None else reads):
             self._release(rid)
+        local = "" if self._local is None else (
+            f", finished locally ({self._local} rows)"
+        )
         logger.debug(
-            "%s pins: %d rounds, last probes %s, %d released, %d kept",
-            self.what, self._rounds, self._last, self._released, len(self._held),
+            "%s pins: %d rounds, last probes %s%s, %d released, %d kept",
+            self.what, self._rounds, self._last, local, self._released,
+            len(self._held),
         )
         self._held = {}
         return df

@@ -527,12 +527,16 @@ def test_q2_min_join_back_no_cartesian(spark, entry):
     assert st.broadcast_hash_joins >= 2  # part + supplier + nation dims
 
 
-def test_kcore_rounds_are_semi_joins(spark):
+def test_kcore_rounds_are_semi_joins(spark, monkeypatch):
     """Each peel round must prune with semi-joins (never materialize
     the degree table against the edges as an inner join duplicating
-    edge rows)."""
+    edge rows). The bound below every row count keeps kcore on its
+    Spark rounds."""
     from graph_etl_spark import operators as ops
+    from graph_etl_spark import session
     from pyspark.sql import functions as F
+
+    monkeypatch.setattr(session, "LOCAL_FINISH_ROWS", -1)
 
     e = spark.createDataFrame(
         [(i, i + 1) for i in range(50)] + [(1, 3), (2, 4)], "src long, dst long"
