@@ -7,7 +7,12 @@ Each query is materialized by writing its full result to Spark's
 ``noop`` sink, which evaluates every column (``count`` would let
 Catalyst prune them), after a warm-up of the session; timings include
 plan optimization + execution, not session startup. The end-to-end
-flows in ``FLOWS`` run their own actions.
+flows in ``FLOWS`` run their own actions. Every sample is one
+``graph_etl_spark.metrics.measure`` call; the sidecar record
+(BENCH_SUMMARY.json, or BENCH_ONLY_SAMPLE.json for a
+SPARK_GRAFT_BENCH_ONLY=<names> run) keeps each entry's metrics record
+(jobs, stages, tasks, executor time, shuffle and spill bytes) of its
+fastest sample under "records".
 """
 
 from __future__ import annotations
@@ -19,7 +24,19 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from graph_etl_spark.metrics import measure  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+# min of RUNS samples per query: the local VM shows multi-second GC /
+# scheduling jitter (same query 1.8s vs 14.9s back-to-back), so a
+# single sample is noise; the min is the reproducible cost. Three
+# samples (not two) so one contended sample still leaves a pair of
+# clean ones to agree with each other (VERDICT r6 #1).
+RUNS = 3
+# Quiet-machine gate (VERDICT r6 #1): wait up to GATE_WAIT seconds for
+# the 1-min load to settle below MAX_LOAD before timing anything.
+MAX_LOAD = 1.0
+GATE_WAIT = 300
 
 # Headline set: the §2 ETL core + analytics + every extension family.
 HEADLINE = [
@@ -336,20 +353,19 @@ def bench_pipeline_flow(spark, sf_dir):
             ).select(F.col("c_name").alias("start"), F.col("o_orderkey").alias("end"))
             ctx.save_edges(placed, "PLACED", "Customer:c_name", "Order:id")
 
-        t0 = time.time()
-        getl.parse(use_mapper=False)
-        phases["stage"] = time.time() - t0
+        def map_phase():
+            store = getl.get_store()
+            _map_property(store)
+            store.flush_configs()  # parse(use_mapper=True) flushes post-map
 
-        t0 = time.time()
-        store = getl.get_store()
-        _map_property(store)
-        store.flush_configs()  # parse(use_mapper=True) flushes post-map
-        phases["map"] = time.time() - t0
+        def load_phase():
+            loader = getl.SparkNativeGraphLoader(spark, graph_dir=f"{workdir}/graph")
+            return getl.load(loader)
 
-        t0 = time.time()
-        loader = getl.SparkNativeGraphLoader(spark, graph_dir=f"{workdir}/graph")
-        totals = getl.load(loader)
-        phases["load"] = time.time() - t0
+        phases["stage"] = measure(spark, lambda: getl.parse(use_mapper=False))[1]["wall_s"]
+        phases["map"] = measure(spark, map_phase)[1]["wall_s"]
+        totals, cost = measure(spark, load_phase)
+        phases["load"] = cost["wall_s"]
         assert totals["edges"] > 0, totals
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
@@ -368,10 +384,10 @@ def bench_profile_fast_op(spark, sf_dir):
         "l_orderkey", "l_quantity", "l_extendedprice", "l_discount",
         "l_returnflag", "l_shipdate", "l_linestatus",
     )
-    t0 = time.time()
-    prof = ops.profile_table(d)  # collects internally (one-row agg)
-    assert prof.count() == 7
-    return {"profile": time.time() - t0}
+    # collects internally (one-row agg)
+    n, cost = measure(spark, lambda: ops.profile_table(d).count())
+    assert n == 7
+    return {"profile": cost["wall_s"]}
 
 
 # end-to-end flows timed alongside the headline queries; these run
@@ -380,56 +396,6 @@ FLOWS = {
     "pipeline_stage_map_load": bench_pipeline_flow,
     "profile_table_fast_op": bench_profile_fast_op,
 }
-
-
-def current_round() -> int | None:
-    """In-progress round number, inferred from the driver's per-round
-    artifacts: CORRECTNESS_r{N}.json exists for every COMPLETED round,
-    so the current round is max(N) + 1. None before round 1 finishes."""
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))
-        if (m := re.search(r"CORRECTNESS_r(\d+)\.json$", p))
-    ]
-    return max(rounds) + 1 if rounds else None
-
-
-def previous_bench() -> dict | None:
-    """Latest COMPLETED round's BENCH_r{N}.json, if any — used to print
-    a per-query delta table so round-over-round regressions are visible
-    per query, not just in the total. Rounds >= the in-progress round
-    are excluded: a re-run within the same round would otherwise pick
-    its own earlier output and print ~0 deltas against itself."""
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    cur = current_round()
-    best, best_n = None, -1
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        if not m:
-            continue
-        n = int(m.group(1))
-        if cur is not None and n >= cur:
-            continue
-        if n > best_n:
-            best, best_n = p, n
-    if best is None:
-        return None
-    try:
-        with open(best) as f:
-            data = json.load(f)
-        # the driver wraps our JSON line under "parsed"
-        if "queries" not in data and isinstance(data.get("parsed"), dict):
-            data = data["parsed"]
-        return {"round": best_n, **data}
-    except Exception:
-        return None
 
 
 def main() -> None:
@@ -500,51 +466,30 @@ def main() -> None:
         .save()
     )
 
-    # min of N runs per query: the local VM shows multi-second GC /
-    # scheduling jitter (same query 1.8s vs 14.9s back-to-back), so a
-    # single sample is noise; the min is the reproducible cost. Three
-    # samples (not two) so one contended sample still leaves a pair of
-    # clean ones to agree with each other (VERDICT r6 #1).
-    runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    timings: dict[str, float] = {}
-    all_samples: dict[str, list[float]] = {}
-    all_sample_loads: dict[str, list[float]] = {}
     # Quiet-machine gate (VERDICT r6 #1): a contended host inflates
     # whole stretches of samples (r6 official run started at loadavg
     # 8.87 and its record could not substantiate the round's claim).
-    # Wait for the 1-min load to settle below the threshold before
-    # timing anything; proceed with a loud warning if it never does —
-    # an inflated-but-flagged record beats no record (rc must stay 0).
+    # Proceed with a loud warning if the load never settles — an
+    # inflated-but-flagged record beats no record (rc must stay 0).
     # r8's official run started at loadavg 1.96 — a hair under the old
     # gate of 2.0 — and its tail was load-contaminated (six phantom
-    # regressions vs the quiet record). Gate at 1.0 and wait longer;
-    # the loud-warning fallback still guarantees rc=0 on a busy host.
-    load_gate = float(os.environ.get("SPARK_GRAFT_BENCH_MAX_LOAD", "1.0"))
-    gate_wait = float(os.environ.get("SPARK_GRAFT_BENCH_GATE_WAIT", "300"))
+    # regressions vs the quiet record), hence the gate of 1.0.
     waited = 0.0
-    while os.getloadavg()[0] > load_gate and waited < gate_wait:
+    while os.getloadavg()[0] > MAX_LOAD and waited < GATE_WAIT:
         print(
-            f"# loadavg {os.getloadavg()[0]:.2f} > gate {load_gate}; "
-            f"waiting ({waited:.0f}s/{gate_wait:.0f}s)",
+            f"# loadavg {os.getloadavg()[0]:.2f} > gate {MAX_LOAD}; "
+            f"waiting ({waited:.0f}s/{GATE_WAIT:.0f}s)",
             file=sys.stderr,
         )
         time.sleep(10)
         waited += 10
     load_start = os.getloadavg()
-    if load_start[0] > load_gate:
+    if load_start[0] > MAX_LOAD:
         print(
             f"# WARNING: starting under load {load_start[0]:.2f} > gate "
-            f"{load_gate} after {waited:.0f}s wait — timings suspect",
+            f"{MAX_LOAD} after {waited:.0f}s wait — timings suspect",
             file=sys.stderr,
         )
-    prev = previous_bench()
-    # retry-comparison baseline only makes sense at the SAME scale
-    sf_now = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    prev_queries = (
-        (prev or {}).get("queries", {})
-        if prev and str(prev.get("sf")) == sf_now
-        else {}
-    )
     # targeted re-measure support (VERDICT r8 #2): a comma list in
     # SPARK_GRAFT_BENCH_ONLY restricts the run to those entries —
     # for quiet-machine attribution of individual regressions without
@@ -555,34 +500,56 @@ def main() -> None:
     names = HEADLINE + list(FLOWS)
     if only:
         names = [n for n in names if n in only]
-    for name in names:
+    timings: dict[str, float] = {}
+    all_samples: dict[str, list[float]] = {}
+    all_sample_loads: dict[str, list[float]] = {}
+    phase_samples: dict[str, dict[str, list[float]]] = {}
+    # each entry's metrics record (jobs, stages, shuffle bytes, ...) of
+    # the sample its recorded time is the min of
+    records: dict[str, dict] = {}
+
+    def sample(name):
         flow = FLOWS.get(name)
-        fn = flow if flow is not None else qs[name]
-        samples = []
-        phase_samples: dict[str, list[float]] = {}
+        if flow is not None:
+            # flows materialize themselves (stage+map+load writes)
+            phases, cost = measure(spark, lambda: flow(spark, SF_DIR) or {})
+            for ph, sec in phases.items():
+                phase_samples.setdefault(name, {}).setdefault(ph, []).append(sec)
+        else:
+            # noop sink: materializes EVERY column of the full plan —
+            # count() would let Catalyst prune the expensive expressions
+            _, cost = measure(
+                spark,
+                lambda: qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save(),
+            )
+        samples = all_samples.setdefault(name, [])
+        samples.append(cost["wall_s"])
+        # per-sample 1-min loadavg at sample END (VERDICT r9 #8):
+        # regression forensics become one sidecar lookup — an inflated
+        # sample next to a high load number is contention, next to a
+        # quiet one is a real plan cost
+        all_sample_loads.setdefault(name, []).append(round(os.getloadavg()[0], 2))
+        if cost["wall_s"] == min(samples):
+            records[name] = {k: v for k, v in cost.items() if k != "job_ids"}
+        timings[name] = min(samples)
 
-        sample_loads: list[float] = []
+    def release():
+        """Between-query session hygiene (untimed): checkpointing
+        queries (k-means input, semantic dedup's tagged frame) leave
+        persisted blocks whose lazy ContextCleaner reclamation lags a
+        ~40-query × 3-sample run — late-list queries then measure GC
+        pressure, not their plan (observed: monotone 7→20→41 s samples
+        on the last heavy queries of a full pass). Drop leftovers and
+        compact the heap before the next query times."""
+        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+            rdd.unpersist()
+        spark.catalog.clearCache()
+        spark.sparkContext._jvm.System.gc()
 
-        def run_once():
-            t0 = time.time()
-            if flow is not None:
-                # flows materialize themselves (stage+map+load writes)
-                phases = fn(spark, SF_DIR) or {}
-                for ph, sec in phases.items():
-                    phase_samples.setdefault(ph, []).append(sec)
-            else:
-                # noop sink: materializes EVERY column of the full plan —
-                # count() would let Catalyst prune the expensive expressions
-                fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            samples.append(time.time() - t0)
-            # per-sample 1-min loadavg at sample END (VERDICT r9 #8):
-            # regression forensics become one sidecar lookup — an
-            # inflated sample next to a high load number is contention,
-            # next to a quiet one is a real plan cost
-            sample_loads.append(round(os.getloadavg()[0], 2))
-
-        for _ in range(runs):
-            run_once()
+    for name in names:
+        for _ in range(RUNS):
+            sample(name)
+        samples = all_samples[name]
         # spread policy (VERDICT r9 #8): within-run spread >1.3x means
         # at least one sample is contaminated — extend to min-of-5 so
         # the min comes from the quiet majority, not a lucky pair
@@ -596,48 +563,20 @@ def main() -> None:
                 f"{name}; extending to min-of-{len(samples) + 1}",
                 file=sys.stderr,
             )
-            run_once()
-        # adaptive outlier retry: a min far above the previous round's
-        # record usually means a transient noisy stretch (host
-        # contention, GC), not a plan change — this run's range_join
-        # measured 3.55 s in-bench vs a 0.97 s isolated floor. Up to 2
-        # extra samples let the stretch wash out; a REAL regression
-        # stays slow in all 5 and the inflated record is honest.
-        extra = 0
-        old = prev_queries.get(name)
-        while old and min(samples) > 2 * old and extra < 2:
-            print(
-                f"#   retry {name}: min {min(samples):.2f}s > 2x prev {old:.2f}s",
-                file=sys.stderr,
-            )
-            run_once()
-            extra += 1
-        timings[name] = round(min(samples), 3)
-        all_samples[name] = [round(s, 3) for s in samples]
-        all_sample_loads[name] = sample_loads
-        # between-query session hygiene (UNTIMED): checkpointing
-        # queries (k-means input, semantic dedup's tagged frame) leave
-        # persisted blocks whose lazy ContextCleaner reclamation lags a
-        # ~40-query × 3-sample run — late-list queries then measure GC
-        # pressure, not their plan (observed: monotone 7→20→41 s
-        # samples on the last heavy queries of a full pass). Drop
-        # leftovers and compact the heap before the next query times.
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
+            sample(name)
+        release()
         # per-phase minima as attributable sub-entries; the parent total
-        # stays min-of-total-runs so it remains comparable across rounds
-        # (phase minima may come from different runs and sum slightly
-        # below the parent)
-        for ph, vals in phase_samples.items():
-            timings[f"{name}.{ph}"] = round(min(vals), 3)
+        # stays min-of-total-runs (phase minima may come from different
+        # runs and sum slightly below the parent)
+        for ph, vals in phase_samples.get(name, {}).items():
+            timings[f"{name}.{ph}"] = min(vals)
         print(
             f"# {name}: {timings[name]:.2f}s "
-            f"(min of {', '.join(f'{s:.2f}' for s in samples)})",
+            f"(min of {', '.join(f'{s:.2f}' for s in samples)}; "
+            f"{records[name]['jobs']} jobs, {records[name]['stages']} stages)",
             file=sys.stderr,
         )
-        for ph, vals in phase_samples.items():
+        for ph, vals in phase_samples.get(name, {}).items():
             print(f"#   .{ph}: {min(vals):.2f}s", file=sys.stderr)
 
     def _suspect_list():
@@ -669,25 +608,11 @@ def main() -> None:
     # individually seconds, so one more quiet sample each either
     # corroborates the min (clearing the spread flag) or lands a new
     # quieter min (clearing the hot flag) — the shipped record's
-    # suspect list shrinks toward zero instead of deferring to next
-    # round's A/B. Flows are skipped (their phase sub-entries would
-    # desync from a resampled parent); three passes max (two left
-    # n_suspect at 14 in the r15 quiet pass — the spread flag needs
-    # the two smallest samples within 1.3x, and one extra sample per
-    # pass is how an honest min gets its corroborating twin).
-    def _resample(name):
-        fn = qs[name]
-        t0 = time.time()
-        fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        sec = time.time() - t0
-        all_samples[name].append(round(sec, 3))
-        all_sample_loads[name].append(round(os.getloadavg()[0], 2))
-        timings[name] = round(min(all_samples[name]), 3)
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-
+    # suspect list shrinks toward zero. Flows are skipped (their phase
+    # sub-entries would desync from a resampled parent); three passes
+    # max (two left n_suspect at 14 in the r15 quiet pass — the spread
+    # flag needs the two smallest samples within 1.3x, and one extra
+    # sample per pass is how an honest min gets its corroborating twin).
     for _pass in range(3):
         _, sus = _suspect_list()
         todo = [n for _, n in sus if n not in FLOWS]
@@ -699,34 +624,12 @@ def main() -> None:
             file=sys.stderr,
         )
         for n in todo:
-            _resample(n)
-
-    flat_loads = [x for v in all_sample_loads.values() for x in v]
+            sample(n)
+            release()
 
     # ".phase" sub-entries are attributions of their parent flow, not
     # additional work — exclude them from the headline total
     total = round(sum(t for n, t in timings.items() if "." not in n), 3)
-    if prev and isinstance(prev.get("queries"), dict):
-        print(f"# delta vs BENCH_r{prev['round']:02d}:", file=sys.stderr)
-        for name, t in timings.items():
-            old = prev["queries"].get(name)
-            if old is None:
-                print(f"#   {name}: {t:.2f}s (new)", file=sys.stderr)
-            else:
-                sign = "+" if t >= old else ""
-                print(
-                    f"#   {name}: {t:.2f}s ({sign}{t - old:.2f}s vs {old:.2f}s)",
-                    file=sys.stderr,
-                )
-        comparable = [n for n in timings if n in prev["queries"]]
-        old_sum = sum(prev["queries"][n] for n in comparable)
-        new_sum = sum(timings[n] for n in comparable)
-        print(
-            f"#   comparable subtotal: {new_sum:.2f}s vs {old_sum:.2f}s "
-            f"({'+' if new_sum >= old_sum else ''}{new_sum - old_sum:.2f}s over "
-            f"{len(comparable)} shared queries)",
-            file=sys.stderr,
-        )
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     # Family subtotals (VERDICT r8 #8): the compact stdout line can
     # only hold the slowest ~50 queries, so regressions in the omitted
@@ -771,24 +674,10 @@ def main() -> None:
         "end": round(os.getloadavg()[0], 2),
         "med_sample": round(run_med, 2),
         "max_sample": round(max(flat_loads), 2) if flat_loads else 0.0,
-        "gate": load_gate,
+        "gate": MAX_LOAD,
         "suspect": [n for _, n in suspects[:5]],
         "n_suspect": len(suspects),
     }
-    prev_block = None
-    if prev_queries:
-        comparable = [n for n in timings if n in prev_queries]
-        old_sum = sum(prev_queries[n] for n in comparable)
-        new_sum = sum(timings[n] for n in comparable)
-        prev_block = {
-            "round": prev["round"],
-            "shared": len(comparable),
-            "old_s": round(old_sum, 2),
-            "new_s": round(new_sum, 2),
-            "pct": round(100.0 * (new_sum - old_sum) / old_sum, 1)
-            if old_sum
-            else None,
-        }
     summary = {
         "metric": "headline_queries_total_runtime",
         "value": total,
@@ -798,8 +687,6 @@ def main() -> None:
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
-    if prev_block:
-        summary["prev_comparable"] = prev_block
     # Attribution data for the official record: every raw sample (a
     # plan regression repeats across samples; a contended machine
     # inflates whole stretches of them) plus the host's 1/5/15-min
@@ -813,10 +700,11 @@ def main() -> None:
         {
             "samples": all_samples,
             "sample_loadavg": all_sample_loads,
-            "runs": runs,
+            "records": records,
+            "runs": RUNS,
             "loadavg_start": [round(x, 2) for x in load_start],
             "loadavg_end": [round(x, 2) for x in os.getloadavg()],
-            "load_gate": load_gate,
+            "load_gate": MAX_LOAD,
             "gate_waited_sec": waited,
             "cpus": spark.sparkContext.defaultParallelism,
         }

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from graph_etl_spark import operators as ops
 from graph_etl_spark import session
+from graph_etl_spark.metrics import measure
 from graph_etl_spark.session import _persisted_rdds, observed_checkpoint
 
 # Spark jobs of kcore(k=2) on _graph (cut at max_iter=3) and on _graph
@@ -58,18 +59,6 @@ def _graph(spark, extra=()):
     )
 
 
-def _group_jobs(spark, group, thunk):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group, False)
-    try:
-        out = thunk()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize(
     "extra, max_iter, rows, budget, local",
     [
@@ -86,38 +75,29 @@ def test_kcore_job_budget(spark, monkeypatch, extra, max_iter, rows, budget, loc
     e = _graph(spark, extra)
     rdds = spark.sparkContext._jsc.getPersistentRDDs
     pinned = len(rdds())
-    core, jobs = _group_jobs(
-        spark,
-        f"kcore-job-budget-{max_iter}-{local}",
-        lambda: ops.kcore(e, k=2, max_iter=max_iter).collect(),
-    )
+    core, cost = measure(spark, lambda: ops.kcore(e, k=2, max_iter=max_iter).collect())
     assert len(core) == rows
-    assert jobs == budget
+    assert cost["jobs"] == budget
     # only the frame the lazy result reads stays pinned
     assert len(rdds()) - pinned <= 1
 
 
 def test_connected_components_job_budget(spark):
-    labels, jobs = _group_jobs(
-        spark,
-        "cc-job-budget",
-        lambda: ops.connected_components(_graph(spark)).collect(),
-    )
+    labels, cost = measure(spark, lambda: ops.connected_components(_graph(spark)).collect())
     assert {r["component"] for r in labels} == {0}
-    assert jobs == CC_JOBS
+    assert cost["jobs"] == CC_JOBS
 
 
 def test_scc_local_finish_job_budget(spark):
     """The open _graph needs a second phase, which finishes locally."""
-    (labels, left), jobs = _group_jobs(
+    (labels, left), cost = measure(
         spark,
-        "scc-local-job-budget",
         lambda: _run_counting_pins(
             spark, lambda: ops.strongly_connected_components(_graph(spark))
         ),
     )
     assert labels.count() == 51
-    assert jobs == SCC_LOCAL_JOBS
+    assert cost["jobs"] == SCC_LOCAL_JOBS
     assert left <= set(_persisted_rdds(labels, nearest=False))
 
 
@@ -194,12 +174,10 @@ def test_operator_budget(spark, spark_rounds, name):
     the call released the rest. The budgets are the Spark rounds'."""
     call, budget, kept = OPERATOR_BUDGETS[name]
     e = _graph(spark, ((50, 0),) if name.startswith("strongly") else ())
-    (result, left), jobs = _group_jobs(
-        spark,
-        f"operator-budget-{name}",
-        lambda: _run_counting_pins(spark, lambda: call(spark, e)),
+    (result, left), cost = measure(
+        spark, lambda: _run_counting_pins(spark, lambda: call(spark, e))
     )
-    assert jobs == budget
+    assert cost["jobs"] == budget
     assert left <= set(_persisted_rdds(result, nearest=False))
     assert len(left) == kept
 

@@ -12,6 +12,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from graph_etl_spark.metrics import measure
 from graph_etl_spark.plans import assert_no_cartesian, formatted_plan, plan_stats, plan_string
 
 SF = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
@@ -95,14 +96,8 @@ def test_save_nodes_single_action(spark, output_dir):
     getl.init(spark, output_folder=output_dir)
     ctx = Context(get_store(), {})
     df = spark.range(1000).selectExpr("id", "cast(id as string) as name")
-    sc = spark.sparkContext
-    sc.setJobGroup("single-action-save", "plan guard", False)
-    try:
-        ctx.save_nodes(df, label="PlanGuard")
-    finally:
-        sc.setJobGroup("", "")
-    jobs = sc.statusTracker().getJobIdsForGroup("single-action-save")
-    assert len(jobs) == 1, f"expected 1 Spark job per save, got {len(jobs)}"
+    _, cost = measure(spark, lambda: ctx.save_nodes(df, label="PlanGuard"))
+    assert cost["jobs"] == 1, f"expected 1 Spark job per save, got {cost['jobs']}"
 
 
 def test_topk_scale_partial_reduction(spark, entry):

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 import graph_etl_spark as getl
 from graph_etl_spark.catalog import STAGING_WRITERS
 from graph_etl_spark.loaders.base import read_staged
+from graph_etl_spark.metrics import measure
 from graph_etl_spark.parser import PARSER_LEDGER
 
 # Spark jobs of _lifecycle, AQE's shuffle-stage jobs included. It was
@@ -49,12 +50,6 @@ def _lifecycle(spark, output_dir):
     getl.load(sink)
     getl.load(getl.Neo4JLoader(spark=spark))
     return store, sink
-
-
-def _group_jobs(spark, group):
-    sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return sc.statusTracker().getJobIdsForGroup(group)
 
 
 def test_write_failure_surfaces_at_parser_end(spark, output_dir):
@@ -101,23 +96,16 @@ def test_with_form_registers_saves_before_an_error(spark, output_dir):
 
 def test_lifecycle_starts_no_schema_inference_job(spark, output_dir):
     sc = spark.sparkContext
-    group = "lifecycle-job-budget"
-    sc.setJobGroup(group, "lifecycle job budget", False)
-    try:
-        _lifecycle(spark, output_dir)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = _group_jobs(spark, group)
+    _, cost = measure(spark, lambda: _lifecycle(spark, output_dir))
     status = sc._jsc.sc().statusStore()
     inference = [
         j
-        for j in jobs
+        for j in cost["job_ids"]
         for s in sc.statusTracker().getJobInfo(j).stageIds
         if "DataFrameReader.parquet" in status.lastStageAttempt(s).details()
     ]
     assert inference == [], f"schema inference jobs {inference}"
-    assert len(jobs) == LIFECYCLE_JOBS
+    assert cost["jobs"] == LIFECYCLE_JOBS
 
 
 def test_pinned_schemas_equal_inferred(spark, output_dir):

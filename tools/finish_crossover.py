@@ -25,7 +25,7 @@ import os
 import statistics
 import sys
 import tempfile
-import time
+from functools import partial
 
 import numpy as np
 import pyarrow as pa
@@ -35,6 +35,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from graph_etl_spark import operators as ops  # noqa: E402
 from graph_etl_spark import session  # noqa: E402
+from graph_etl_spark.metrics import measure  # noqa: E402
 
 
 def powerlaw(p: int, seed: int = 1):
@@ -83,22 +84,12 @@ def main() -> None:
         extra_confs={"spark.ui.enabled": "false", "spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    sc = spark.sparkContext
+    call = partial(ops.kcore, k=3) if args.op == "kcore" else ops.strongly_connected_components
 
     def run(df, bound):
         session.LOCAL_FINISH_ROWS = bound
-        group = f"crossover-{time.perf_counter_ns()}"
-        sc.setJobGroup(group, group, False)
-        t0 = time.perf_counter()
-        if args.op == "kcore":
-            res = ops.kcore(df, k=3)
-        else:
-            res = ops.strongly_connected_components(df)
-        res.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return dt, len(sc.statusTracker().getJobIdsForGroup(group))
+        _, cost = measure(spark, lambda: call(df).write.format("noop").mode("overwrite").save())
+        return cost["wall_s"], cost["jobs"]
 
     paths = {"spark": -1, "local": 1 << 40}
     with tempfile.TemporaryDirectory() as tmp:

@@ -31,8 +31,8 @@ import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
-BENCH_SMOKE_QUERY = os.environ.get("SPARK_GRAFT_SMOKE_QUERY", "q1_pricing_summary")
-BENCH_SF_DIR = os.environ.get("SPARK_GRAFT_BENCH_SF_DIR", "/root/testdata/sf0.1")
+BENCH_SMOKE_QUERY = "q1_pricing_summary"
+BENCH_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def run_oracle_gate() -> dict:
@@ -88,32 +88,36 @@ def run_pytest_gate() -> dict:
 def run_bench_smoke() -> dict:
     """One headline query at the bench SF through the bench's own noop
     layout — catches 'crashes at analysis time' and gross plan
-    regressions without paying for the full ~40-query bench."""
+    regressions without paying for the full ~40-query bench. The warm
+    run's metrics record (``graph_etl_spark.metrics.measure``) is kept
+    as ``warm``."""
     t0 = time.time()
     code = f"""
-import sys, time
+import json, os, sys
 sys.path.insert(0, {REPO!r})
-import os
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
+from graph_etl_spark.metrics import measure
 from graph_etl_spark.session import get_spark
 spark = get_spark("preflight-smoke", extra_confs={{"spark.ui.enabled": "false"}})
 spark.sparkContext.setLogLevel("ERROR")
 import __spark_entry__ as e
 fn = e.queries()[{BENCH_SMOKE_QUERY!r}]
-fn(spark, {BENCH_SF_DIR!r}).write.format("noop").mode("overwrite").save()  # warm
-t0 = time.time()
-fn(spark, {BENCH_SF_DIR!r}).write.format("noop").mode("overwrite").save()
-print("SMOKE_SEC=%.3f" % (time.time() - t0))
+def run():
+    fn(spark, {BENCH_SF_DIR!r}).write.format("noop").mode("overwrite").save()
+run()  # warm
+print("SMOKE=" + json.dumps(measure(spark, run)[1]))
 """
     proc = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True, cwd=REPO
     )
-    m = re.search(r"SMOKE_SEC=([\d.]+)", proc.stdout or "")
+    m = re.search(r"^SMOKE=(.*)$", proc.stdout or "", re.MULTILINE)
+    warm = json.loads(m.group(1)) if m else None
     return {
         "rc": proc.returncode,
         "query": BENCH_SMOKE_QUERY,
         "sf_dir": BENCH_SF_DIR,
-        "warm_sec": float(m.group(1)) if m else None,
+        "warm_sec": warm["wall_s"] if warm else None,
+        "warm": warm,
         "total_sec": round(time.time() - t0, 1),
         "ok": proc.returncode == 0 and m is not None,
     }

@@ -19,13 +19,14 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from graph_etl_spark import operators as ops  # noqa: E402
+from graph_etl_spark.metrics import measure  # noqa: E402
 from graph_etl_spark.session import get_spark  # noqa: E402
 from graph_etl_spark.sources import read_table  # noqa: E402
 
@@ -282,26 +283,20 @@ def _squality_gate(d, **kw):
     return streaming_quality_gate(d, **kw)
 
 
-def timed(df) -> float:
-    best = None
-    for _ in range(2):
-        t0 = time.time()
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
-        best = dt if best is None else min(best, dt)
-    return round(best, 2)
-
-
 def timed_thunk(thunk) -> float:
-    """Time df-construction AND materialization — for operators that
-    train eagerly (driver-side collects) during construction."""
-    best = None
-    for _ in range(2):
-        t0 = time.time()
-        thunk().write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
-        best = dt if best is None else min(best, dt)
-    return round(best, 2)
+    """Best wall of two runs of df-construction AND materialization —
+    for operators that train eagerly (driver-side collects) during
+    construction."""
+    spark = SparkSession.active()
+    walls = [
+        measure(spark, lambda: thunk().write.format("noop").mode("overwrite").save())[1]["wall_s"]
+        for _ in range(2)
+    ]
+    return round(min(walls), 2)
+
+
+def timed(df) -> float:
+    return timed_thunk(lambda: df)
 
 
 def main() -> None:
@@ -1539,8 +1534,8 @@ def main() -> None:
             for p in oparts[1:]:
                 ordn = ordn.unionByName(p)
             workdir = tempfile.mkdtemp(prefix="probe_flow_")
-            t0 = time.time()
-            try:
+
+            def flow():
                 getl.init(spark, output_folder=f"{workdir}/output")
 
                 @getl.Parser(source="probe_tpch")
@@ -1564,9 +1559,11 @@ def main() -> None:
                 )
                 totals = getl.load(loader)
                 assert totals["edges"] > 0, totals
+
+            try:
+                return round(measure(spark, flow)[1]["wall_s"], 2)
             finally:
                 shutil.rmtree(workdir, ignore_errors=True)
-            return round(time.time() - t0, 2)
 
         t1 = min(_run_flow(1), _run_flow(1))  # warm the flow path once
         tn = _run_flow(n)
