@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import Pins
+
 
 def funnel_counts(
     events: DataFrame,
@@ -998,12 +1000,11 @@ def markov_steady_state(
         .withColumn("__nxt", F.lead(type_col).over(w))
         .filter(F.col("__nxt").isNotNull())
     )
-    counts_df = (
+    pins = Pins("markov_steady_state")
+    counts_df = pins.pin(
         stream.groupBy(
             F.col(type_col).alias("__cur"), F.col("__nxt")
-        )
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .localCheckpoint(eager=True)
+        ).agg(F.count(F.lit(1)).alias("__c"))
     )
     # CONTRACTUAL boundedness gate (VERDICT r13 #7): the chain is
     # collected driver-side, so the state space must actually be
@@ -1017,12 +1018,15 @@ def markov_steady_state(
         .collect()[0]["__n"]
     )
     if n_states_seen > int(max_states):
+        pins.result(None)
         raise ValueError(
             f"markov_steady_state: {n_states_seen} distinct event types "
             f"exceed max_states={max_states} — the chain is collected "
             f"driver-side; pass a coarser type column or raise max_states"
         )
     counts = counts_df.collect()
+    # the chain is on the driver now: nothing reads the pin
+    pins.result(None)
     states = sorted(
         {r["__cur"] for r in counts} | {r["__nxt"] for r in counts}
     )

@@ -103,14 +103,11 @@ def connected_components(
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
         .distinct(),
-        cache=True,
     )
     verts = sym.select(F.col("a").alias(id_col)).distinct()
     if vertices is not None:
         verts = verts.unionByName(vertices.select(id_col)).distinct()
-    labels = pins.pin(
-        verts.select(id_col, F.col(id_col).alias("component")), cache=True
-    )
+    labels = pins.pin(verts.select(id_col, F.col(id_col).alias("component")))
 
     converged = False
     for _ in range(max_iter):
@@ -209,8 +206,7 @@ def pagerank(
     IEEE-double results stay bit-identical."""
     pins = Pins("pagerank")
     e, out_deg, ew = _out_edges(pins, edges, src, dst)
-    # cached, not checkpointed: every round joins verts, and its actual
-    # size (not the checkpoint's compounded estimate) keeps the rank
+    # every round joins verts: its pin's observed size keeps the rank
     # joins broadcast
     verts = pins.pin(
         e.select(F.col("a").alias("id"))
@@ -219,7 +215,6 @@ def pagerank(
         .join(
             out_deg.select("id", F.lit(True).alias("__has_out")), "id", "left"
         ),
-        cache=True,
     )
     n = verts.count()
     rank_expr = (
@@ -1150,13 +1145,12 @@ def personalized_pagerank(
         seeds.select(F.col(seed_col).alias("id"))
         .distinct()
         .withColumn("__seed", F.lit(1)),
-        cache=True,
     )
     s = sdf.count()
     if s == 0:
         raise ValueError("personalized_pagerank: seeds must be non-empty")
     e, out_deg, ew = _out_edges(pins, edges, src, dst)
-    # cached as in pagerank
+    # pinned as in pagerank
     verts = pins.pin(
         e.select(F.col("a").alias("id"))
         .unionByName(e.select(F.col("b").alias("id")))
@@ -1166,7 +1160,6 @@ def personalized_pagerank(
         .join(
             out_deg.select("id", F.lit(True).alias("__has_out")), "id", "left"
         ),
-        cache=True,
     )
     rank_expr = (
         F.when(
@@ -2274,13 +2267,12 @@ def _min_label_fixpoint(
     ``id`` column covering every endpoint. Output: (id, lbl) with
     lbl a struct (h, i); lbl.i is the region-root vertex id.
 
-    Rounds checkpoint in the caller's scope with ``fresh_stats``
-    (``stats_free_checkpoint``): with the round plan referencing its
-    input several times, the plain checkpoint's inherited size
-    estimate compounds exponentially round over round until
-    Catalyst's stats visitor multiplies million-digit BigIntegers with
-    the driver pinned at 100% single-core. Each round releases the
-    one it supersedes.
+    Rounds checkpoint in the caller's scope. Each snapshot's leaf
+    carries the row count its own job observed, so the size estimate
+    stays flat although the round plan references its input several
+    times (an inherited estimate would compound round over round until
+    Catalyst's stats visitor multiplies million-digit BigIntegers).
+    Each round releases the one it supersedes.
 
     Raises RuntimeError when ``max_iter`` rounds pass without a
     fixpoint — a partial labeling would silently mis-assign
@@ -2336,7 +2328,6 @@ def _min_label_fixpoint(
             labels if i else None,
             step(seeded),
             {"changed": F.count_if(F.col("__old") != F.col("lbl"))},
-            fresh_stats=True,
         )
         labels = snap.select("id", "lbl")
         if probe["changed"] == 0:
@@ -2411,11 +2402,11 @@ def strongly_connected_components(
     17k-vertex graph whose giant SCC pipelines into a deep
     condensation DAG measured 49 — label waves through an SCC and
     its downstream DAG add, they don't max, hence the 100-round
-    default budget); every round checkpoints eagerly
-    through ``stats_free_checkpoint`` (lineage truncated AND the
-    compounding size estimate reset — see that helper's docstring)
-    with the convergence probe and the vertex/edge counts fused into
-    the materialization job as ``observe`` metrics. Superseded rounds,
+    default budget); every round checkpoints eagerly (lineage
+    truncated, and the leaf sized by the observed row count, so no
+    size estimate compounds) with the convergence probe and the
+    vertex/edge counts fused into the materialization job as
+    ``observe`` metrics. Superseded rounds,
     trim steps and color frames are released as the loop moves on;
     after the call only the settled frames the result unions stay
     pinned. From the second phase on, once the active vertices plus
@@ -2457,13 +2448,12 @@ def strongly_connected_components(
             e.join(v.select(F.col("id").alias("a")), "a", "left_semi").join(
                 v.select(F.col("id").alias("b")), "b", "left_semi"
             ),
-            fresh_stats=True,
         )
 
-    active_v, probe = pins.advance(None, verts, fresh_stats=True)
+    active_v, probe = pins.advance(None, verts)
     n_verts = probe["rows"]
     active_e, probe = pins.advance(
-        None, named.filter(F.col("a") != F.col("b")).distinct(), fresh_stats=True
+        None, named.filter(F.col("a") != F.col("b")).distinct()
     )
     n_edges = probe["rows"]
     # accumulated (id, comp) frames; comp is the settling phase's root
@@ -2515,7 +2505,6 @@ def strongly_connected_components(
             av, probe = pins.advance(
                 None if active_v is phase_start_v else active_v,
                 active_v.join(both, "id", "left_semi"),
-                fresh_stats=True,
             )
             n_verts = probe["rows"]
             active_e, probe = restrict(active_e, av)
@@ -2530,7 +2519,6 @@ def strongly_connected_components(
             trimmed, _ = pins.advance(
                 stale,
                 phase_start_v.join(active_v, "id", "left_anti"),
-                fresh_stats=True,
             )
             settled_parts.append(
                 trimmed.select("id", F.col("id").alias("comp"))
@@ -2551,7 +2539,6 @@ def strongly_connected_components(
             .join(cb, "b")
             .filter(F.col("__ca") == F.col("__cb"))
             .select(F.col("b").alias("a"), F.col("a").alias("b")),
-            fresh_stats=True,
         )
         bmin = _min_label_fixpoint(
             pins, same_rev, active_v, max_iter, "strongly_connected_components(backward)"
@@ -2561,11 +2548,10 @@ def strongly_connected_components(
             colors.join(bmin.select("id", F.col("lbl").alias("__bl")), "id")
             .filter(F.col("lbl") == F.col("__bl"))
             .select("id", F.col("lbl")["i"].alias("comp")),
-            fresh_stats=True,
         )
         settled_parts.append(members)
         active_v, probe = pins.advance(
-            active_v, active_v.join(members, "id", "left_anti"), fresh_stats=True
+            active_v, active_v.join(members, "id", "left_anti")
         )
         n_verts = probe["rows"]
         active_e, probe = restrict(active_e, active_v)

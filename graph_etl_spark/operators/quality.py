@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import Pins
 from ..sources import fan_out
 from .text import h56, tokens_col
 
@@ -1030,13 +1031,19 @@ def quality_classifier_train(
     ulp bet the green unigram-logprob oracle already takes on ln)."""
     bound, feats, label = _bind_features(df, text_col, dim)
     base = bound.select(feats.alias("__f"), label.alias("__y"))
+    pins = Pins("quality_classifier_train")
     if iters >= 1:
-        base = base.localCheckpoint()
-    n_docs = base.count()
+        # the corpus count rides the checkpoint's job
+        base, probe = pins.advance(None, base)
+        n_docs = probe["rows"]
+    else:
+        n_docs = base.count()
     w = [0.0] * (dim + 3)
     if n_docs == 0:
-        return df.sparkSession.createDataFrame(
-            [(i, wi) for i, wi in enumerate(w)], "pos int, weight double"
+        return pins.result(
+            df.sparkSession.createDataFrame(
+                [(i, wi) for i, wi in enumerate(w)], "pos int, weight double"
+            )
         )
     for _ in range(max(0, iters)):
         w_lit = F.expr(
@@ -1078,8 +1085,10 @@ def quality_classifier_train(
             _round_half_up(wi - lr * _round_half_up(grad.get(i, 0.0), round_to), round_to)
             for i, wi in enumerate(w)
         ]
-    return df.sparkSession.createDataFrame(
-        [(i, wi) for i, wi in enumerate(w)], "pos int, weight double"
+    return pins.result(
+        df.sparkSession.createDataFrame(
+            [(i, wi) for i, wi in enumerate(w)], "pos int, weight double"
+        )
     )
 
 

@@ -27,6 +27,7 @@ import pandas as pd  # noqa: F401 — resolves pandas_udf type hints under `from
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import Pins
 from ..sources import fan_out
 
 
@@ -813,9 +814,10 @@ def kmeans_centroids(
     A cluster whose membership empties mid-training keeps its previous
     centroid (driver-side carry-forward), so k centroids in always
     means k centroids out — ``n_members`` reports 0 for such a row."""
-    cents, assigned = _kmeans_fit(data, k, max_iter, id_col, vec_col, round_to)
+    pins = Pins("kmeans_centroids")
+    cents, assigned = _kmeans_fit(pins, data, k, max_iter, id_col, vec_col, round_to)
     members = assigned.groupBy("cent_id").agg(F.count(F.lit(1)).alias("n_members"))
-    return (
+    return pins.result(
         cents.join(members, "cent_id", "left")
         .withColumn("n_members", F.coalesce("n_members", F.lit(0)))
         .select("cent_id", "n_members", F.posexplode("cvec").alias("pos", "value"))
@@ -834,8 +836,9 @@ def kmeans_fit(
     """Trained centroids as (cent_id, cent_vec array<double>) — the
     form ``ivf_topk(..., centroids=...)`` and ``kmeans_assign``
     consume, closing the train-then-index/shard loop."""
-    cents, _ = _kmeans_fit(data, k, max_iter, id_col, vec_col, round_to)
-    return cents.select("cent_id", F.col("cvec").alias("cent_vec"))
+    pins = Pins("kmeans_fit")
+    cents, _ = _kmeans_fit(pins, data, k, max_iter, id_col, vec_col, round_to)
+    return pins.result(cents.select("cent_id", F.col("cvec").alias("cent_vec")))
 
 
 def kmeans_assign(
@@ -877,6 +880,7 @@ def kmeans_assign(
 
 
 def _kmeans_fit(
+    pins: Pins,
     data: DataFrame,
     k: int,
     max_iter: int,
@@ -891,7 +895,8 @@ def _kmeans_fit(
     shuffles and the collect is hyperparameter-sized. The driver-side
     centroid list also makes the empty-cluster carry-forward a plain
     dict lookup (a cluster whose membership empties keeps its previous
-    centroid, so kmeans_fit(k=N) always returns N centroids)."""
+    centroid, so kmeans_fit(k=N) always returns N centroids). The
+    corpus pin goes through the caller's scope."""
     from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
     spark = data.sparkSession
@@ -920,7 +925,7 @@ def _kmeans_fit(
         # iteration, where materialization cannot pay for itself; at
         # cluster scale, train on a hash_sample slice (docstring) and
         # the checkpoint is sample-sized.
-        vecs = vecs.localCheckpoint()
+        vecs = pins.pin(vecs)
     for _ in range(max(0, max_iter)):
         best = _kmeans_argmin(F.col("vec"), cent_rows, round_to, id_sql_type)
         assigned = vecs.select(
@@ -1201,11 +1206,12 @@ def semantic_dedup_pairs(
     # × two join sides × the sizes probe), and with a lazy checkpoint
     # the analyzer still re-processes the full subplan per reference —
     # measured +1.2 s of pure driver planning at sf0.1.
-    tagged = tagged.localCheckpoint()
+    pins = Pins("semantic_dedup_pairs")
+    tagged = pins.pin(tagged)
 
     if max_cell_size is None:
         a, b = tagged.alias("a"), tagged.alias("b")
-        return (
+        return pins.result(
             a.join(
                 b,
                 (F.col("a.cent_id") == F.col("b.cent_id"))
@@ -1260,7 +1266,7 @@ def semantic_dedup_pairs(
     for p in parts[1:]:
         cand = cand.unionByName(p)
     a, b = cand.alias("a"), cand.alias("b")
-    return (
+    return pins.result(
         a.join(
             b,
             (F.col("a.cent_id") == F.col("b.cent_id"))
@@ -1358,12 +1364,13 @@ def pq_train(
         ]
         for s in range(m)
     }
+    pins = Pins("pq_train")
     if max_iter >= 2 and _vecs is None:
         # same rationale as _kmeans_fit: iterations 2..n re-scan the
         # cast corpus; materialize it once (partition-preserving, so
         # the round-6 averages are bit-identical). A caller-supplied
         # _vecs is already pinned by the caller — don't double-pin.
-        vecs = vecs.localCheckpoint()
+        vecs = pins.pin(vecs)
     for _ in range(max(0, max_iter)):
         assigned = vecs.select(
             "vec",
@@ -1416,15 +1423,17 @@ def pq_train(
         StructType,
     )
 
-    return data.sparkSession.createDataFrame(
-        [(s, code, cvec) for s in range(m) for code, cvec in books[s]],
-        StructType(
-            [
-                StructField("subspace", IntegerType(), True),
-                StructField("code", IntegerType(), True),
-                StructField("cvec", ArrayType(DoubleType()), True),
-            ]
-        ),
+    return pins.result(
+        data.sparkSession.createDataFrame(
+            [(s, code, cvec) for s in range(m) for code, cvec in books[s]],
+            StructType(
+                [
+                    StructField("subspace", IntegerType(), True),
+                    StructField("code", IntegerType(), True),
+                    StructField("cvec", ArrayType(DoubleType()), True),
+                ]
+            ),
+        )
     )
 
 
@@ -2415,7 +2424,10 @@ def mmr_rerank(
         "query_id", "neighbor_id", "cos_sim", "__vec", "__n"
     )
     a, b = cv.alias("a"), cv.alias("b")
-    pair = (
+    # the lazy pins go through the scope too: the picks are eager
+    # checkpoints, so the result reads neither of them
+    pins = Pins("mmr_rerank")
+    pair = pins.pin(
         a.join(
             b,
             (F.col("a.query_id") == F.col("b.query_id"))
@@ -2430,10 +2442,10 @@ def mmr_rerank(
                 / (F.col("a.__n") * F.col("b.__n")),
                 round_to,
             ).alias("sim"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
-    rel = cands.localCheckpoint(eager=False)
+    rel = pins.pin(cands, eager=False)
 
     selected: DataFrame | None = None
     for step in range(1, int(k) + 1):
@@ -2466,18 +2478,16 @@ def mmr_rerank(
                 F.lit(lam) * F.col("cos_sim")
                 - (F.lit(1.0) - F.lit(lam)) * F.col("__ms"),
             )
-        pick = (
-            _topk(scored, 1, "__score", asc=False, rank="__rn")
-            .select(
+        pick = pins.pin(
+            _topk(scored, 1, "__score", asc=False, rank="__rn").select(
                 "query_id",
                 F.lit(step).alias("step"),
                 "neighbor_id",
                 F.round(F.col("__score"), 6).alias("mmr_score"),
             )
-            .localCheckpoint(eager=True)
         )
         selected = pick if selected is None else selected.unionByName(pick)
-    return selected
+    return pins.result(selected)
 
 
 def binarize_embeddings(
@@ -2786,9 +2796,12 @@ def ivf_recall_curve(
     nps = [p[0] for p in pairs]
     fls = [p[1] for p in pairs]
     n_q = queries.count()
-    exact = brute_force_topk(
-        data, queries, k=k, id_col=id_col, vec_col=vec_col
-    ).select("query_id", "neighbor_id").localCheckpoint(eager=True)
+    pins = Pins("ivf_recall_curve")
+    exact = pins.pin(
+        brute_force_topk(
+            data, queries, k=k, id_col=id_col, vec_col=vec_col
+        ).select("query_id", "neighbor_id")
+    )
     rows = []
     spark = data.sparkSession
     # the trained index is SHARED across sweep points (docstring): the
@@ -2799,7 +2812,7 @@ def ivf_recall_curve(
     # from the operator it measures) and checkpoint the assignment —
     # each sweep point then pays only its probes + join.
     cent_rows, assigned = _ivf_prepare(data, nlist, id_col, vec_col)
-    assigned = assigned.localCheckpoint(eager=True)
+    assigned = pins.pin(assigned)
     hits_by_np = {}
     for np_ in nps:
         approx = ivf_topk(
@@ -2821,8 +2834,10 @@ def ivf_recall_curve(
                 all(h >= hits_by_np[m] for m in nps if m < np_),
             )
         )
-    return spark.createDataFrame(
-        rows,
-        "nprobe int, n_queries int, k int, floor double, "
-        "recall_floor_ok boolean, monotone_ok boolean",
+    return pins.result(
+        spark.createDataFrame(
+            rows,
+            "nprobe int, n_queries int, k int, floor double, "
+            "recall_floor_ok boolean, monotone_ok boolean",
+        )
     )

@@ -17,6 +17,8 @@ import pandas as pd  # noqa: F401 — resolves pandas_udf type hints under `from
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import Pins
+
 # Tiny per-language stopword inventories for the n-gram/stopword
 # language heuristic. Deliberately small + deterministic (the point is
 # the operator shape, not linguistic accuracy).
@@ -275,7 +277,8 @@ def bpe_learn_merges(
     wrapped = F.concat(
         sep, F.array_join(F.split(F.col("word"), ""), BPE_SEP), sep
     )
-    state = words.select(wrapped.alias("w"), "cnt").localCheckpoint()
+    pins = Pins("bpe_learn_merges")
+    state = pins.pin(words.select(wrapped.alias("w"), "cnt"))
 
     out_rows = []
     for r in range(1, max(0, rounds) + 1):
@@ -302,14 +305,17 @@ def bpe_learn_merges(
             break
         a, b, cnt = best[0]["a"], best[0]["b"], best[0]["pair_count"]
         out_rows.append((r, a, b, int(cnt)))
-        state = state.select(
-            F.replace(
-                F.col("w"),
-                F.lit(f"{BPE_SEP}{a}{BPE_SEP}{b}{BPE_SEP}"),
-                F.lit(f"{BPE_SEP}{a}{b}{BPE_SEP}"),
-            ).alias("w"),
-            "cnt",
-        ).localCheckpoint()
+        state, _ = pins.advance(
+            state,
+            state.select(
+                F.replace(
+                    F.col("w"),
+                    F.lit(f"{BPE_SEP}{a}{BPE_SEP}{b}{BPE_SEP}"),
+                    F.lit(f"{BPE_SEP}{a}{b}{BPE_SEP}"),
+                ).alias("w"),
+                "cnt",
+            ),
+        )
 
     from pyspark.sql.types import (
         IntegerType,
@@ -319,16 +325,18 @@ def bpe_learn_merges(
         StructType,
     )
 
-    return spark.createDataFrame(
-        out_rows,
-        StructType(
-            [
-                StructField("round", IntegerType(), True),
-                StructField("merge_a", StringType(), True),
-                StructField("merge_b", StringType(), True),
-                StructField("pair_count", LongType(), True),
-            ]
-        ),
+    return pins.result(
+        spark.createDataFrame(
+            out_rows,
+            StructType(
+                [
+                    StructField("round", IntegerType(), True),
+                    StructField("merge_a", StringType(), True),
+                    StructField("merge_b", StringType(), True),
+                    StructField("pair_count", LongType(), True),
+                ]
+            ),
+        )
     )
 
 

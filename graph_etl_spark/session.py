@@ -5,9 +5,11 @@ Single place to encode the scale posture: AQE on (runtime join-strategy
 selection + skew-join splitting for the remap joins), modest shuffle
 partitioning for local runs (overridable via env for cluster runs),
 Arrow enabled for the pandas-UDF extension operators. ``Pins`` is the
-one checkpoint scope of a graph-operator call: it pins, runs rounds
+one checkpoint scope of an iterative operator call: it pins, runs rounds
 through ``observed_checkpoint``, finishes a small residual in one task
-and releases what the result does not read.
+and releases what the result does not read. Every eager pin is one
+kind: a ``localCheckpoint`` whose row count is observed in its own job
+and carried on its leaf as the optimizer's statistics.
 """
 
 from __future__ import annotations
@@ -15,10 +17,11 @@ from __future__ import annotations
 import logging
 import os
 import time
-from functools import partial
+from functools import lru_cache, partial
 
 from py4j.protocol import Py4JError
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 logger = logging.getLogger("graph_etl_spark")
 
@@ -125,21 +128,17 @@ def get_spark(
 def _persisted_rdds(df, *, nearest: bool) -> dict | None:
     """The persisted RDDs ``df`` reads, ``{rdd id: JVM RDD}``, or None
     if the internal accessors drift. The walk starts at the
-    ``LogicalRDD`` (checkpoint) and ``InMemoryRelation`` (cache) leaves
-    of ``df``'s plan and follows RDD dependencies; ``nearest`` stops
-    each path at its first persisted RDD, the one behind a pin (also
-    below a ``stats_free_checkpoint`` rebuild). A materialized
-    checkpoint's lineage is truncated, so only a cache or a lazy
-    checkpoint leads the full walk further down."""
+    ``LogicalRDD`` (checkpoint) leaves of ``df``'s plan, the rebuilt
+    leaf of an eager pin included, and follows RDD dependencies;
+    ``nearest`` stops each path at its first persisted RDD, the one
+    behind a pin. A materialized checkpoint's lineage is truncated, so
+    only a lazy checkpoint leads the full walk further down."""
     try:
         stack = []
-        leaves = df._jdf.queryExecution().withCachedData().collectLeaves()
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
         for leaf in (leaves.apply(i) for i in range(leaves.size())):
-            kind = leaf.getClass().getSimpleName()
-            if kind == "LogicalRDD":
+            if leaf.getClass().getSimpleName() == "LogicalRDD":
                 stack.append(leaf.rdd())
-            elif kind == "InMemoryRelation":
-                stack.append(leaf.cacheBuilder().cachedColumnBuffers())
         seen: set[int] = set()
         found: dict = {}
         while stack:
@@ -159,20 +158,6 @@ def _persisted_rdds(df, *, nearest: bool) -> dict | None:
         return None
 
 
-def release_checkpoint(df) -> None:
-    """Unpersist the blocks behind a ``localCheckpoint``, a
-    ``stats_free_checkpoint`` or a projection of either. The frame must
-    have NO live consumer: its lineage is truncated, so a later action
-    on it fails with a missing checkpoint block, far from this call.
-    Without a checkpoint below it this is a no-op, logged at debug
-    level on the ``graph_etl_spark`` logger."""
-    rdds = _persisted_rdds(df, nearest=True)
-    if not rdds:
-        logger.debug("release_checkpoint: nothing to release")
-    for rdd in (rdds or {}).values():
-        _unpersist(rdd)
-
-
 def _unpersist(rdd) -> None:
     """Drop a persisted RDD's blocks without blocking. Through the
     context, not ``RDD.unpersist``, which logs a WARN line for every
@@ -180,48 +165,80 @@ def _unpersist(rdd) -> None:
     rdd.context().unpersistRDD(rdd.id(), False)
 
 
-def stats_free_checkpoint(df):
-    """Eager localCheckpoint that DROPS inherited plan statistics.
+@lru_cache(maxsize=2)
+def _leaf_rebuild(jvm):
+    """``rebuild(jdf, rows)``: the eager checkpoint ``jdf`` over a new
+    ``LogicalRDD`` leaf with ``Statistics(sizeInBytes = rows x
+    (schema.defaultSize + 8), rowCount = rows)``, partitioning unknown
+    and no ordering. The JVM classes are looked up once per gateway.
 
-    ``Dataset.localCheckpoint`` carries the originating plan's
-    estimated statistics onto the checkpointed ``LogicalRDD``
-    (``originStats``). In join-iterate loops that estimate compounds
-    multiplicatively round over round — the ``sizeInBytes`` digit
-    count DOUBLES per round whenever a round's plan references its
-    input twice (measured on this build: 75 → 187 → 410 → 857 → 1750
-    digits over five fixpoint rounds) — until Catalyst's size
-    estimation spends whole seconds multiplying million-digit
-    BigIntegers and the driver spins at 100% single-core inside
-    ``SizeInBytesOnlyStatsPlanVisitor``. Deep-iterating operators
-    (nested fixpoints, 15+ round loops) must checkpoint through THIS
-    helper, which rebuilds the frame from the checkpointed RDD via
-    ``internalCreateDataFrame`` so the leaf resets to default
-    statistics. AQE's runtime statistics still drive join-strategy
-    selection, so dropping the compile-time estimate costs nothing at
-    execution time (the checkpointed exchange's declared partitioning
-    is dropped too — irrelevant in loops that reshuffle on join keys
-    every round). Falls back to the plain eager checkpoint if the
-    internal JVM constructor is ever unavailable."""
-    from pyspark.sql import DataFrame
+    py4j hands a Scala ``BigInt`` back as a Python int, so the
+    ``Statistics`` is built inside the JVM: its fields are copied from
+    the ``computeStats()`` of a ``Range`` node (8 bytes and one row per
+    element) and its ``rowCount`` from a second one."""
+    logical = jvm.org.apache.spark.sql.catalyst.plans.logical
+    LogicalRDD = jvm.org.apache.spark.sql.execution.LogicalRDD
+    unknown = jvm.org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
+    of_rows = jvm.org.apache.spark.sql.classic.Dataset.ofRows
+    ArrayList = jvm.java.util.ArrayList
+    as_java = jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    option, ids = jvm.scala.Option.apply, logical.Range.getOutputAttrs()
+    none, no_order = option(None), getattr(LogicalRDD, "apply$default$4")()
+    no_columns = getattr(logical.Statistics, "apply$default$3")()
+    new_stats = logical.Statistics.DUMMY().getClass().getConstructors()[0].newInstance
 
-    snap = df.localCheckpoint(eager=True)
+    def stats(n):
+        return logical.Range(0, n, 1, none, ids, False).computeStats()
+
+    def rebuild(jdf, rows):
+        size = stats(-(-rows * (jdf.schema().defaultSize() + 8) // 8))
+        fields = ArrayList(as_java(size.productIterator().toSeq()))
+        fields.set(1, stats(rows).rowCount())
+        fields.set(2, no_columns)
+        leaf, session = jdf.logicalPlan(), jdf.sparkSession()
+        rdd = leaf.rdd()
+        plan = LogicalRDD(
+            leaf.output(), rdd, unknown(rdd.getNumPartitions()), no_order,
+            leaf.isStreaming(), leaf.stream(), session,
+            option(new_stats(fields.toArray())), none,
+        )
+        return of_rows(session, plan)
+
+    return rebuild
+
+
+def _checkpoint(df, probes: dict):
+    """The one eager checkpoint: ``localCheckpoint`` of ``df`` and an
+    ``observe`` of its row count and of ``probes`` (name to aggregate
+    Column) in one Spark job. Returns ``(snap, values)``, the probe
+    values by name.
+
+    The snapshot's leaf carries the observed row count
+    (``_leaf_rebuild``). ``localCheckpoint`` leaves the origin plan's
+    estimate there instead, which compounds round over round in a
+    join-iterate loop (pagerank's grew from 23 to 201 digits over 10
+    rounds) until later joins plan as shuffles and Catalyst multiplies
+    huge BigIntegers; the declared partitioning goes too (keeping it
+    cost pagerank 10 more jobs). If the internals drift, the plain
+    snapshot is kept and the failure logged at DEBUG."""
+    obs = Observation()
+    counted = df.observe(
+        obs, F.count(F.lit(1)).alias("__rows"), *[c.alias(n) for n, c in probes.items()]
+    )
+    snap = counted.localCheckpoint(eager=True)
+    values = dict(obs.get)
+    rows = values.pop("__rows")
     try:
-        spark = snap.sparkSession
-        jschema = spark._jvm.org.apache.spark.sql.types.DataType.fromJson(
-            snap.schema.json()
-        )
-        jrdd = snap._jdf.queryExecution().toRdd()
-        jdf = spark._jsparkSession.internalCreateDataFrame(
-            jrdd, jschema, False
-        )
-        return DataFrame(jdf, spark)
-    except Exception:  # pragma: no cover - internal API drift
-        return snap
+        jdf = _leaf_rebuild(snap.sparkSession._jvm)(snap._jdf, rows)
+        return DataFrame(jdf, snap.sparkSession), values
+    except Py4JError as exc:
+        logger.debug("checkpoint leaf rebuild failed (%s)", exc)
+        return snap, values
 
 
-def observed_checkpoint(df, what: str, probes=None, *, fresh_stats: bool = False):
-    """Eager localCheckpoint of ``df`` that also computes named
-    aggregate probes over its rows, both in ONE Spark job.
+def observed_checkpoint(df, what: str, probes=None):
+    """The eager checkpoint of ``df`` and named aggregate probes over
+    its rows, both in ONE Spark job.
 
     A fixpoint round wants two things from the frame it just built:
     the pinned snapshot (lineage truncated) and a convergence number
@@ -231,25 +248,14 @@ def observed_checkpoint(df, what: str, probes=None, *, fresh_stats: bool = False
     checkpoint job as an ``observe`` metric instead.
 
     ``probes`` maps a name to an aggregate Column; the default is the
-    row count under ``"rows"``. ``fresh_stats`` checkpoints through
-    ``stats_free_checkpoint`` (for loops whose size estimate would
-    otherwise compound round over round). Returns ``(snap, values)``
-    with ``values`` a dict of probe name to value. Each call logs one
+    row count under ``"rows"``. Returns ``(snap, values)`` with
+    ``values`` a dict of probe name to value. Each call logs one
     DEBUG line on the ``graph_etl_spark`` logger: ``what`` (the
     caller's name), the values and the round's milliseconds."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
     if probes is None:
         probes = {"rows": F.count(F.lit(1))}
-    obs = Observation()
     t0 = time.perf_counter()
-    observed = df.observe(obs, *[c.alias(n) for n, c in probes.items()])
-    if fresh_stats:
-        snap = stats_free_checkpoint(observed)
-    else:
-        snap = observed.localCheckpoint(eager=True)
-    values = obs.get
+    snap, values = _checkpoint(df, probes)
     logger.debug(
         "%s: %s in %.1f ms", what, values, (time.perf_counter() - t0) * 1e3
     )
@@ -257,19 +263,20 @@ def observed_checkpoint(df, what: str, probes=None, *, fresh_stats: bool = False
 
 
 class Pins:
-    """The checkpoint scope of one graph-operator call: every frame the
-    call pins goes through it, and it frees them.
+    """The checkpoint scope of one iterative operator call: every frame
+    the call pins goes through it, and it frees them.
 
-    - ``pin(df, eager=True, fresh_stats=False, cache=False)``
-      checkpoints ``df`` (via ``stats_free_checkpoint`` with
-      ``fresh_stats``) and records the RDD behind it. ``cache``
-      persists ``df`` instead, so the optimizer sees its actual size,
-      not a checkpoint's plan estimate (which can turn every later
-      round's joins from broadcast to shuffle).
-    - ``advance(prev, plan, probes=None, fresh_stats=False)`` is one
-      round: ``observed_checkpoint`` of ``plan`` and its probes in one
-      job, then the release of this scope's pins behind ``prev`` (a
-      frame, a sequence of frames, or None): the state the snapshot
+    - ``pin(df, eager=True)`` checkpoints ``df`` and records the RDD
+      behind it. An eager pin is the one eager checkpoint kind
+      (``_checkpoint``): its leaf carries the row count observed in
+      the checkpoint's own job, so the optimizer sees the frame's
+      actual size and no estimate compounds. ``eager=False`` is a
+      plain lazy ``localCheckpoint``: nothing is counted before it
+      runs.
+    - ``advance(prev, plan, probes=None)`` is one round:
+      ``observed_checkpoint`` of ``plan`` and its probes in one job,
+      then the release of this scope's pins behind ``prev`` (a frame,
+      a sequence of frames, or None): the state the snapshot
       supersedes, which nothing may read afterwards.
     - ``finish(frame, fn, schema, rows)`` runs ``fn`` over every row
       of ``frame`` (a pandas frame in, one out with ``schema``) in ONE
@@ -290,28 +297,22 @@ class Pins:
         self._rounds, self._last, self._released = 0, None, 0
         self._local = None
 
-    def _track(self, snap, cached: bool = False):
-        # a cached frame is released through the cache manager, so its
-        # cache entry goes with its blocks
+    def _track(self, snap):
         for rid, rdd in (_persisted_rdds(snap, nearest=True) or {}).items():
-            self._held[rid] = snap.unpersist if cached else partial(_unpersist, rdd)
+            self._held[rid] = partial(_unpersist, rdd)
         return snap
 
     def _release(self, rid):
         self._held.pop(rid)()
         self._released += 1
 
-    def pin(self, df, *, eager=True, fresh_stats=False, cache=False):
-        if cache:
-            return self._track(df.persist(), cached=True)
-        if fresh_stats:
-            return self._track(stats_free_checkpoint(df))
-        return self._track(df.localCheckpoint(eager=eager))
+    def pin(self, df, *, eager=True):
+        if eager:
+            return self._track(_checkpoint(df, {})[0])
+        return self._track(df.localCheckpoint(eager=False))
 
-    def advance(self, prev, plan, probes=None, *, fresh_stats=False):
-        snap, self._last = observed_checkpoint(
-            plan, self.what, probes, fresh_stats=fresh_stats
-        )
+    def advance(self, prev, plan, probes=None):
+        snap, self._last = observed_checkpoint(plan, self.what, probes)
         self._track(snap)
         self._rounds += 1
         for frame in prev if isinstance(prev, (list, tuple)) else [prev]:

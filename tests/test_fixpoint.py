@@ -30,18 +30,18 @@ from graph_etl_spark.session import _persisted_rdds, observed_checkpoint
 # connected_components on _graph; result collect and AQE's
 # shuffle-stage jobs included. They were 28, 12 and 78 while every
 # round ran its convergence probe as count() jobs of its own.
-KCORE_JOBS = 16
-KCORE_FIXPOINT_JOBS = 8
-CC_JOBS = 66
+KCORE_JOBS = 13
+KCORE_FIXPOINT_JOBS = 7
+CC_JOBS = 35
 # strongly_connected_components on _graph closed into a cycle; 171
 # while every emptiness test was an isEmpty() job of its own
-SCC_JOBS = 162
+SCC_JOBS = 124
 # the same kcore calls when the deduped edge set finishes locally: the
 # input checkpoint, the one-task finish and the collect
 KCORE_LOCAL_JOBS = 4
-# SCC on the open _graph: 425 jobs when every phase runs Spark rounds;
-# from the second phase on the residual finishes in one job
-SCC_LOCAL_JOBS = 215
+# SCC on the open _graph: from the second phase on the residual
+# finishes in one job
+SCC_LOCAL_JOBS = 155
 
 
 @pytest.fixture
@@ -112,46 +112,38 @@ def _singletons(spark):
 
 
 # operator: (call on _graph, Spark jobs incl. the result collect, pins
-# left after the call). The jobs were the same while pins were placed
-# by hand, except bellman_ford (65: its convergence probe was a join
-# job of its own per round) and strongly_connected_components (171:
-# an isEmpty job per emptiness test, and the trim diff checkpointed
-# also when empty). The pins left were then 6 (ktruss), 6 (CC), 18
-# (SCC), 3 each (pagerank, personalized_pagerank, hits), 5
-# (label_propagation), 15 (bfs_distances), 8 (bellman_ford), 13 each
-# (betweenness, closeness), 6 each (the walks), 9 (louvain_multilevel)
-# and 2 (triangle_count). SCC runs on _graph closed into a cycle: one
+# left after the call). SCC runs on _graph closed into a cycle: one
 # component, one phase.
 OPERATOR_BUDGETS = {
-    "kcore": (lambda s, e: ops.kcore(e, k=2, max_iter=3), 16, 1),
-    "ktruss": (lambda s, e: ops.ktruss(e, k=3), 36, 2),
-    "connected_components": (lambda s, e: ops.connected_components(e), 66, 1),
+    "kcore": (lambda s, e: ops.kcore(e, k=2, max_iter=3), KCORE_JOBS, 1),
+    "ktruss": (lambda s, e: ops.ktruss(e, k=3), 26, 2),
+    "connected_components": (lambda s, e: ops.connected_components(e), CC_JOBS, 1),
     "strongly_connected_components": (
         lambda s, e: ops.strongly_connected_components(e), SCC_JOBS, 1,
     ),
-    "pagerank": (lambda s, e: ops.pagerank(e), 88, 1),
+    "pagerank": (lambda s, e: ops.pagerank(e), 69, 1),
     "personalized_pagerank": (
-        lambda s, e: ops.personalized_pagerank(e, _sources(s)), 94, 1,
+        lambda s, e: ops.personalized_pagerank(e, _sources(s)), 72, 1,
     ),
-    "hits": (lambda s, e: ops.hits(e), 110, 1),
-    "label_propagation": (lambda s, e: ops.label_propagation(e), 23, 1),
-    "bfs_distances": (lambda s, e: ops.bfs_distances(e, _sources(s)), 54, 1),
-    "bellman_ford": (lambda s, e: ops.bellman_ford(e, _sources(s)), 35, 1),
+    "hits": (lambda s, e: ops.hits(e), 80, 1),
+    "label_propagation": (lambda s, e: ops.label_propagation(e), 17, 1),
+    "bfs_distances": (lambda s, e: ops.bfs_distances(e, _sources(s)), 36, 1),
+    "bellman_ford": (lambda s, e: ops.bellman_ford(e, _sources(s)), 23, 1),
     "betweenness_sample": (
-        lambda s, e: ops.betweenness_sample(e, _sources(s)), 84, 5,
+        lambda s, e: ops.betweenness_sample(e, _sources(s)), 56, 5,
     ),
     "closeness_sample": (
-        lambda s, e: ops.closeness_sample(e, _sources(s)), 61, 6,
+        lambda s, e: ops.closeness_sample(e, _sources(s)), 43, 6,
     ),
-    "random_walks": (lambda s, e: ops.random_walks(e), 25, 5),
-    "node2vec_walks": (lambda s, e: ops.node2vec_walks(e), 26, 4),
+    "random_walks": (lambda s, e: ops.random_walks(e), 17, 5),
+    "node2vec_walks": (lambda s, e: ops.node2vec_walks(e), 18, 4),
     "louvain_communities": (
-        lambda s, e: ops.louvain_communities(e, _singletons(s)), 89, 1,
+        lambda s, e: ops.louvain_communities(e, _singletons(s)), 65, 1,
     ),
     "louvain_multilevel": (
-        lambda s, e: ops.louvain_multilevel(e, _singletons(s)), 161, 1,
+        lambda s, e: ops.louvain_multilevel(e, _singletons(s)), 111, 1,
     ),
-    "triangle_count": (lambda s, e: ops.triangle_count(e), 13, 1),
+    "triangle_count": (lambda s, e: ops.triangle_count(e), 10, 1),
 }
 
 
@@ -210,7 +202,8 @@ def _empty_shapes(spark):
 def test_observed_count_equals_count(spark, ansi):
     """On an empty frame, and under the ANSI-on session that
     tools/check_oracle.py's driver_like_spark replicates, the observed
-    row count equals count() and the probe returns."""
+    row count equals count(), the probe returns, and the snapshot's
+    leaf carries the observed count."""
     s = spark.newSession()
     s.conf.set("spark.sql.ansi.enabled", str(ansi).lower())
     frames = {**_empty_shapes(s), "graph": _graph(s)}
@@ -222,7 +215,9 @@ def test_observed_count_equals_count(spark, ansi):
         )
         assert probe["rows"] == df.count() == snap.count(), name
         assert probe["big"] == df.filter(F.col("src") > 10).count(), name
-        _, probe = observed_checkpoint(df, "test", fresh_stats=True)
+        stats = snap._jdf.queryExecution().optimizedPlan().stats()
+        assert stats.rowCount().get() == probe["rows"], name
+        _, probe = observed_checkpoint(df, "test")
         assert probe == {"rows": df.count()}, name
 
 

@@ -571,32 +571,38 @@ def test_scc_isolated_and_extra_vertices_are_singletons(spark):
     assert rows == [(1, 1), (2, 1), (9, 9), (10, 10)]
 
 
-def test_stats_free_checkpoint_blocks_size_estimate_compounding(spark):
+def test_checkpoint_blocks_size_estimate_compounding(spark):
     """Regression for the Catalyst BigInteger spin: a plain
     localCheckpoint inherits the origin plan's sizeInBytes, which
     compounds multiplicatively through join-iterate rounds (measured
     doubling digit counts per round until the driver pins a core
-    multiplying million-digit numbers). The stats-free checkpoint
-    must keep the estimate's digit count FLAT across rounds."""
-    from graph_etl_spark.session import stats_free_checkpoint
+    multiplying million-digit numbers). The eager checkpoint's leaf is
+    sized by its observed rows, so the estimate's digit count stays
+    FLAT across rounds."""
+    from graph_etl_spark.session import Pins
 
-    df = spark.createDataFrame([(i, i) for i in range(10)], "id long, v long")
-    frame = stats_free_checkpoint(df)
-    for _ in range(3):
+    def digits(frame):
+        return len(
+            str(frame._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        )
+
+    pins = Pins("test")
+    frame = pins.pin(
+        spark.createDataFrame([(i, i) for i in range(10)], "id long, v long")
+    )
+    start = digits(frame)
+    for _ in range(6):
         lookup = frame.select(
             F.col("id").alias("__jid"), F.col("v").alias("__jv")
         )
-        frame = stats_free_checkpoint(
+        frame, _ = pins.advance(
+            frame,
             frame.join(lookup, frame["v"] == F.col("__jid"), "left").select(
                 "id", F.coalesce("__jv", "v").alias("v")
-            )
+            ),
         )
-    digits = len(
-        str(
-            frame._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    )
-    assert digits < 30, f"size estimate compounding returned: {digits} digits"
+        assert digits(frame) == start
+    pins.result(None)
 
 
 # ---------------------------------------------------------------------------

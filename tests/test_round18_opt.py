@@ -1,17 +1,18 @@
-"""Round-18 optimization guards: AQE conf posture, checkpoint
-release, stats-free-checkpoint API-drift fallback, and the internals
-the optimization round changed (ktruss fixpoint support reuse, HITS
-per-round pins, shared IVF assignment helper)."""
+"""Round-18 optimization guards: AQE conf posture, pin release, the
+eager checkpoint's leaf statistics and their API-drift fallback, and
+the internals the optimization round changed (ktruss fixpoint support
+reuse, HITS per-round pins, shared IVF assignment helper)."""
 
 from __future__ import annotations
 
+import logging
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
 import graph_etl_spark.operators as ops
-from graph_etl_spark.session import release_checkpoint, stats_free_checkpoint
+from graph_etl_spark.session import Pins
 
 
 # ---------------------------------------------------------------------------
@@ -38,7 +39,7 @@ def test_aqe_coalescing_defaults_are_spark_defaults(spark):
 
 
 # ---------------------------------------------------------------------------
-# release_checkpoint (ADVICE r17: per-round pin accumulation)
+# pin release (ADVICE r17: per-round pin accumulation)
 # ---------------------------------------------------------------------------
 
 
@@ -48,24 +49,29 @@ def _n_persistent(spark) -> int:
     )
 
 
-@pytest.mark.parametrize(
-    "checkpoint",
-    [lambda df: df.localCheckpoint(eager=True), stats_free_checkpoint],
-    ids=["local", "stats_free"],
-)
-def test_release_checkpoint_frees_blocks(spark, checkpoint):
+@pytest.mark.parametrize("eager", [True, False], ids=["eager", "lazy"])
+def test_pins_release_frees_blocks(spark, eager):
     before = _n_persistent(spark)
-    snap = checkpoint(spark.range(100))
+    pins = Pins("test")
+    snap = pins.pin(spark.range(100), eager=eager)
     assert snap.count() == 100
     assert _n_persistent(spark) == before + 1
-    release_checkpoint(snap)
+    pins.result(None)
     assert _n_persistent(spark) == before
 
 
-def test_release_checkpoint_noop_on_plain_frame(spark):
+def test_pins_release_noop_on_plain_frame(spark):
     df = spark.range(10).select((F.col("id") * 2).alias("v"))
-    release_checkpoint(df)  # must not raise on a non-checkpoint plan
+    before = _n_persistent(spark)
+    pins = Pins("test")
+    # a superseded plain frame releases nothing
+    snap, _ = pins.advance(df, df)
+    assert snap.count() == 10
+    assert _n_persistent(spark) == before + 1
+    # a plain result reads no pin, so the scope releases them all
+    assert pins.result(df) is df
     assert df.count() == 10
+    assert _n_persistent(spark) == before
 
 
 def test_louvain_communities_releases_round_pins(spark):
@@ -84,58 +90,84 @@ def test_louvain_communities_releases_round_pins(spark):
     out.count()
     leaked = _n_persistent(spark) - before
     assert leaked <= 1, f"{leaked} checkpoints left pinned"
-    release_checkpoint(out)
 
 
 # ---------------------------------------------------------------------------
-# stats_free_checkpoint fallback (VERDICT r17 #9: JVM API drift guard)
+# the eager checkpoint's leaf statistics (VERDICT r17 #9: JVM API drift guard)
 # ---------------------------------------------------------------------------
 
 
-def test_stats_free_checkpoint_resets_leaf_statistics(spark):
-    """The helper must return a frame whose leaf carries DEFAULT
-    statistics (not the origin plan's inherited estimate)."""
+def _leaf_stats(df):
+    return df._jdf.queryExecution().optimizedPlan().stats()
+
+
+def test_checkpoint_leaf_carries_observed_rows(spark):
+    """The leaf carries the observed row count and rows x (row width +
+    8) bytes, not the origin plan's inherited estimate."""
     big = spark.range(1000).crossJoin(
         spark.range(50).select(F.col("id").alias("j"))
     )
-    plain = big.localCheckpoint(eager=True)
-    freed = stats_free_checkpoint(big)
-    plain_stats = int(
-        plain._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
-    freed_stats = int(
-        freed._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
-    # the plain checkpoint inherits the origin's (large) estimate; the
-    # stats-free one resets to the conf default (much larger sentinel
-    # or much smaller leaf default — just NOT the inherited estimate)
-    assert freed_stats != plain_stats
-    assert freed.count() == plain.count()
-    for f in (plain, freed):
-        release_checkpoint(f)
+    pins = Pins("test")
+    # a lazy pin keeps the inherited estimate: nothing was counted
+    plain = pins.pin(big, eager=False)
+    snap, probe = pins.advance(None, big)
+    stats = _leaf_stats(snap)
+    assert probe == {"rows": 50_000}
+    assert stats.rowCount().get() == 50_000
+    assert int(stats.sizeInBytes()) == 50_000 * (8 + 8 + 8)
+    assert int(_leaf_stats(plain).sizeInBytes()) != int(stats.sizeInBytes())
+    assert snap.count() == plain.count()
+    pins.result(None)
 
 
-def test_stats_free_checkpoint_falls_back_cleanly(spark, monkeypatch):
-    """If the internal ``internalCreateDataFrame`` constructor is ever
-    unavailable, the helper must degrade to the plain eager checkpoint
-    (same rows, no exception) — VERDICT r17 #9."""
+def test_checkpoint_small_pin_plans_broadcast(spark):
+    """A join against a small pinned frame plans as a broadcast: its
+    leaf's size is the observed one, not the estimate of the plan it
+    came from (a 64 MB cross join filtered down to 20 rows)."""
+    pins = Pins("test")
+    small = pins.pin(
+        spark.range(1000)
+        .crossJoin(spark.range(1000).select(F.col("id").alias("j")))
+        .filter((F.col("j") == 0) & (F.col("id") < 20))
+        .select(F.col("id").alias("k"))
+    )
+    plan = (
+        spark.range(100_000_000)
+        .join(small, F.col("id") == F.col("k"))
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    pins.result(None)
+    assert "BroadcastHashJoin" in plan
+
+
+def test_checkpoint_falls_back_when_jvm_breaks(spark, monkeypatch, caplog):
+    """If the internal classes of the leaf rebuild are ever unavailable,
+    the checkpoint degrades to the plain eager ``localCheckpoint`` (same
+    rows, no exception) and says so at DEBUG."""
+    from py4j.protocol import Py4JError
+
     import graph_etl_spark.session as sess
 
-    class _BrokenJvm:
-        def __getattr__(self, name):  # any JVM access fails
-            raise AttributeError(name)
+    def broken(jvm):  # a class lookup that fails as a drifted one would
+        raise Py4JError("org.apache.spark.sql.execution.LogicalRDD")
 
     df = spark.createDataFrame([(i, i * 2) for i in range(20)], "a long, b long")
-    real_jvm = spark._jvm
-    monkeypatch.setattr(spark, "_jvm", _BrokenJvm(), raising=False)
-    try:
-        out = sess.stats_free_checkpoint(df)
-        rows = sorted((r.a, r.b) for r in out.collect())
-    finally:
-        monkeypatch.undo()
-    assert rows == [(i, i * 2) for i in range(20)]
-    assert real_jvm is spark._jvm
-    release_checkpoint(out)
+    pins = Pins("test")
+    monkeypatch.setattr(sess, "_leaf_rebuild", broken)
+    with caplog.at_level(logging.DEBUG, logger="graph_etl_spark"):
+        out, probe = pins.advance(None, df)
+    monkeypatch.undo()
+    assert probe == {"rows": 20}
+    assert sorted((r.a, r.b) for r in out.collect()) == [(i, i * 2) for i in range(20)]
+    assert any(
+        r.getMessage().startswith("checkpoint leaf rebuild failed")
+        for r in caplog.records
+    )
+    # the plain checkpoint's leaf carries no row count
+    assert _leaf_stats(out).rowCount().isEmpty()
+    pins.result(None)
 
 
 # ---------------------------------------------------------------------------
