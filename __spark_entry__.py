@@ -4630,8 +4630,8 @@ def q_sim_clip_filter(spark, sf):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Ordered so that EVERY operator family has representatives inside
-    the first 50 entries (the driver's per-round verdict window).
+    """The registered queries: name -> ``fn(spark, sf_dir)`` returning
+    a DataFrame. Each has a DuckDB oracle in ``oracle_sql()``.
 
     Every callable is wrapped in the scoped ``runtime_confs`` context:
     the full DataFrame build runs under engine semantics (ANSI off,
@@ -4639,43 +4639,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     before the callable returns — safe because Spark bakes these
     semantics into the plan at build time (see sources.runtime_confs),
     so the driver's later collect executes the engine's semantics on
-    its own untouched session.
-
-    Round-13 rotation (VERDICT r9 #5 staleness policy, now
-    self-enforcing via test_registry.test_staleness_policy): the
-    window leads with the SIXTEEN round-13 NEW queries (Louvain
-    phase-2 contraction, two-level Louvain, guarded CDC production
-    twin, Gopher rule battery, HLL sketch merge, k-truss, char
-    entropy, shard-seam overlap pairs, k-anonymity census, Cohen
-    kappa, token-budget fill, A/B sample-ratio-mismatch, harmonic
-    closeness, trigram vocabulary overlap, bot detection, IVF recall
-    curve) plus the TWELVE queries over code
-    CHANGED this round (bloom probe's JVM-side positions — both bloom
-    rows; assortativity's reversed-orientation dedup; the
-    unix_micros/NTZ-robust bucketing — retention, cohort LTV,
-    burstiness, concurrency; louvain_move/communities' weight
-    support; cdc_chunk_hashes' guarded-path refactor; image_ahash's
-    dynamic id schema; hll_distinct's shared register helper). Then
-    the EIGHT r7-era rows at the 5-round staleness ceiling (VERDICT
-    r12 #2 — they breach the bound the moment r13 lands), then 14
-    alphabetically-first r8-era fillers. Filler overlap with the r12
-    window: 0. Enforced by the r13_window list at the bottom of this
-    function and checked by
-    test_registry.test_round13_window_composition; earlier windows
-    stay asserted against their CORRECTNESS_r*.json keys by their own
-    round-aware tests.
-
-    The tail is NOT trusted to a docstring promise (VERDICT r5 item
-    2): tools/preflight.py mechanically runs check_oracle.py over
-    ALL registered queries (plus pytest and a bench smoke) and is
-    the end-of-round gate.
-
-    Window history: r4 window = the 50 keys of CORRECTNESS_r04.json
-    (49 green + sim_semantic_dedup_pairs no_oracle); r5-r11 windows
-    = the 50 keys of their CORRECTNESS_r{N}.json (each 50/50 green);
-    r12 window = the first 50 below. After r12 lands, the max
-    pre-r12 verdict age in the tail is r7 (the r12 window absorbs 35
-    of the 72 r7-era rows; the rest rotate through r13-r14)."""
+    its own untouched session."""
     import functools
 
     from graph_etl_spark.sources import runtime_confs
@@ -4689,14 +4653,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return wrapped
 
     registry = {
-        # ---- r10 window slots 1-10: the round-10 NEW queries
-        # (mm_decode_real/audio/video/audio-window real-codec round
-        # trips) and
-        # every query over code CHANGED this round
-        # (negative_samples/ppl_gate two-phase ranks,
-        # chunk_counts/topk re-plans, quantile_normalize's shared
-        # helper + checkpoint pinning) ----
-        # ---- r11 window slots 1-11: the round-11 NEW queries ----
         "quality_kn_logprob": q_quality_kn_logprob,
         "events_concurrency": q_events_concurrency,
         "events_cusum_changepoint": q_events_cusum_changepoint,
@@ -4780,8 +4736,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "etl_chunk_counts": q_etl_chunk_counts,
         "quality_quantile_normalize": q_quality_quantile_normalize,
         "topk_orders": q_topk_orders,
-        # ---- slots 11-43: the 33 STALEST rows (last driver
-        # verdicts r5-r6; preflight-green every round since) ----
         "sim_quantize_int8": q_sim_quantize_int8,
         "text_lang_id": q_text_lang_id,
         "text_token_stats": q_text_token_stats,
@@ -4816,8 +4770,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stats_agg": q_stats_agg,
         "text_winnow_fingerprints": q_text_winnow_fingerprints,
         "unpivot_part": q_unpivot_part,
-        # ---- slots 44-50: the stalest r7 rows (seven fit; the next
-        # four r7 rows open the tail and with it the r11 window) ----
         "dedup_incremental": q_dedup_incremental,
         "dedup_minhash_lsh_pairs": q_dedup_minhash_lsh_pairs,
         "dedup_minhash_signatures": q_dedup_minhash_signatures,
@@ -4825,9 +4777,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_passages": q_dedup_passages,
         "dedup_simhash_signatures": q_dedup_simhash_signatures,
         "dedup_span_scrub": q_dedup_span_scrub,
-        # ---- tail: >50 — stalest-first (remaining r7 rows, then
-        # r8- then r9-verdicted; they lead the r11 window), ALL
-        # still oracle-checked every round by tools/preflight ----
         "etl_anti_join_blanks": q_etl_anti_join_blanks,
         "etl_dedup_pk": q_etl_dedup_pk,
         "etl_metadata_attach": q_etl_metadata_attach,
@@ -4960,7 +4909,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_fingerprint": q_text_fingerprint,
         "win_lag_lead": q_win_lag_lead,
         "win_rank_funcs": q_win_rank_funcs,
-        # ---- round-14 NEW queries (r15 window lead; cap 13) ----
         "dedup_line_dedup": q_dedup_line_dedup,
         "text_readability": q_text_readability,
         "etl_compaction_plan": q_etl_compaction_plan,
@@ -4971,137 +4919,35 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_ab_did": q_events_ab_did,
         "dedup_soft_weights": q_dedup_soft_weights,
         "dedup_lsh_recall_curve": q_dedup_lsh_recall_curve,
-        # ---- round-15 NEW queries (dedup_semdedup leads the r15
-        # window; the rest froze out and lead the r16 window — cap 7)
         "dedup_semdedup": q_dedup_semdedup,
         "sim_eval_contamination": q_sim_eval_contamination,
         "mm_image_phash_pairs": q_mm_image_phash_pairs,
         "quality_domain_reweight": q_quality_domain_reweight,
         "dedup_cluster_split": q_dedup_cluster_split,
         "mm_audio_fingerprint_dedup": q_mm_audio_fingerprint_dedup,
-        # ---- round-16 NEW queries ----
         "mm_image_phash_pairs_wide": q_mm_image_phash_pairs_wide,
         "sim_clip_filter": q_sim_clip_filter,
-        # ---- round-16 POST-FREEZE queries (r17 window lead — the
-        # r15 precedent: added after the r16 window composition
-        # froze, replica-green, first driver certification in r17)
         "quality_mojibake_scrub": q_quality_mojibake_scrub,
         "sim_embedding_outliers": q_sim_embedding_outliers,
         "mm_video_keyframe_dedup": q_mm_video_keyframe_dedup,
         "dedup_minhash_contamination": q_dedup_minhash_contamination,
-        # ---- round-17 NEW queries ----
         "mm_audio_fingerprint_pairs": q_mm_audio_fingerprint_pairs,
         "mm_video_keyframe_pairs": q_mm_video_keyframe_pairs,
         "quality_token_cost_audit": q_quality_token_cost_audit,
-        # ---- round-17 POST-FREEZE queries (r18 window lead — the
-        # r15/r16 precedent: added after the r17 window composition
-        # froze, replica-green, first driver certification in r18)
         "quality_packing_dividend": q_quality_packing_dividend,
         "quality_epoch_repeat_audit": q_quality_epoch_repeat_audit,
         "graph_scc": q_graph_scc,
         "sim_binary_rerank": q_sim_binary_rerank,
         "quality_calibration_bins": q_quality_calibration_bins,
     }
-    # ROUND-18 BUDGET NOTE (for the next session): once r17 lands,
-    # the staleness histogram becomes {12: 39, 13: 44, 14: 50,
-    # 15: 50, 16: 48, 17: 50} — the 39 r12-era rows breach the
-    # 5-round bound the moment r18 lands and must fill the r18
-    # window, capping r18's new+changed lead at 11; the 44 r13-era
-    # rows then own the r19 fillers. test_staleness_policy enforces
-    # this mechanically. Round 17 added FIVE post-freeze queries
-    # after its window froze (quality_packing_dividend,
-    # quality_epoch_repeat_audit, graph_scc, sim_binary_rerank,
-    # quality_calibration_bins — the r15/r16 precedent) and ONE post-freeze code change to a
-    # certified query
-    # (quality_clf_weights: _doc_features now binds __toks/__n/__hs
-    # once and counts buckets via native array_remove — the old form
-    # re-tokenized inside each of the 16 bucket lambdas; values are
-    # bit-identical, replica-green, 10.4 -> 7.3 s at sf0.1). All
-    # SIX lead the r18 window (6 of the 11-slot cap); the 39
-    # fillers leave 5 further slots for r18-new and r18 code-changed
-    # entries.
-    # r17 window (first 50): the FOUR r16-new post-freeze queries
-    # lead (quality_mojibake_scrub, sim_embedding_outliers,
-    # mm_video_keyframe_dedup, dedup_minhash_contamination — VERDICT
-    # r16 #1), plus the THREE r17-new queries
-    # (mm_audio_fingerprint_pairs, mm_video_keyframe_pairs — VERDICT
-    # r16 #2's fuzzy audio/video dedup; quality_token_cost_audit —
-    # VERDICT r16 #7), plus TWO r17 code-changed queries that must
-    # re-certify (sim_clip_filter — the NaN-keep fix;
-    # sim_eval_contamination — the packed_max_by domain guard; the
-    # other ADVICE r16 fixes land inside lead entries:
-    # embedding_outliers' input pinning and minhash_contamination's
-    # shared packed_max_by guard), then ALL 41 r11-era rows at the
-    # staleness ceiling (they breach the 5-round bound the moment
-    # r17 lands). Composed mechanically with before_round=17
-    # staleness; checked by test_round17_window_composition and the
-    # self-enforcing staleness test.
-    # r16 window (first 50): the FIVE r15-new post-freeze queries
-    # lead (sim_eval_contamination, mm_image_phash_pairs,
-    # quality_domain_reweight, dedup_cluster_split,
-    # mm_audio_fingerprint_dedup — VERDICT r15 #2; the r16 code
-    # changes to embedding_contamination's JVM-side reduction +
-    # broadcast gate, image_phash_pairs' narrow-segment warning,
-    # domain_reweight's temperature guard, and audio_fingerprint's
-    # XOR fold all land INSIDE these five, costing no extra slots),
-    # plus the TWO r16-new queries (mm_image_phash_pairs_wide —
-    # VERDICT r15 #1 wide pigeonhole; sim_clip_filter — VERDICT r15
-    # #6 cross-modal alignment filter), then ALL 43 r10-era rows at
-    # the staleness ceiling (they breach the 5-round bound the
-    # moment r16 lands). VERDICT r15 #7 (an exact_group_rank helper
-    # shared with ppl_buckets) was deliberately DEFERRED: it was
-    # conditional on r16 touching another per-group ranking op (none
-    # was), and a pure ppl_buckets refactor would demand a re-cert
-    # slot the 7-slot cap cannot spare this round.
-    # r15 window (first 50): the TEN r14-new queries lead (they froze
-    # out of the r14 window by design — the r14 budget note), plus ONE
-    # r15-new query (dedup_semdedup — 11 of the 13-slot cap; the four
-    # r15 code-changed queries quality_ppl_buckets,
-    # dedup_lsh_recall_curve, etl_compaction_plan,
-    # events_power_analysis are ALL already in the r14-new lead, so
-    # changed-code re-certification costs no extra slots), then ALL 37
-    # r9-era rows at the staleness ceiling (they breach the 5-round
-    # bound the moment r15 lands — VERDICT r14 #2), then 2 alphabetical
-    # r10-era fillers pulled forward; the 43 remaining r10-era rows own
-    # the r16 fillers. Composed mechanically with before_round=15
-    # staleness; checked by test_round15_window_composition and the
-    # self-enforcing staleness test. The r14 window is frozen as the
-    # keys of CORRECTNESS_r14.json and still asserted by its own
-    # round-aware test.
-    # (the r15 and r16 windows are frozen as the keys of
-    # CORRECTNESS_r15.json / CORRECTNESS_r16.json and asserted by
-    # their round-aware tests; the static lists are gone)
-    # (the r17 window is frozen as the keys of CORRECTNESS_r17.json
-    # and asserted by its round-aware test; the static list is gone)
-    # r18 window (first 50): the ELEVEN r17/r18 code-changed queries
-    # lead — VERDICT r17 #2: the Louvain k_ic restructure + pagerank
-    # dangling-flag rewrite (355cbed) and the clf_weights
-    # featurization (e2ae856) shipped AFTER the last oracle preflight
-    # and the r17 driver window covered none of them; bloom_semi_join
-    # (word-pack rewrite) and ivf_recall_curve (shared _ivf_prepare —
-    # also re-certifying ivf_topk's routing expression after the r18
-    # helper extraction) complete the r17-changed set, and
-    # graph_hits/graph_ktruss carry r18's loop-body changes (per-round
-    # pins; fixpoint support reuse). Then ALL 39 r12-era rows at the
-    # staleness ceiling (they breach the 5-round bound the moment r18
-    # lands). Budget note: 39 + 11 = 50 exactly, so the five r17-new
-    # post-freeze queries (graph_scc, sim_binary_rerank,
-    # quality_calibration_bins, quality_packing_dividend,
-    # quality_epoch_repeat_audit — never driver-certified) do NOT fit;
-    # their certification evidence is local instead:
-    # tools/check_oracle.py (the driver's own gate replicated at
-    # sf0.01) plus committed tools/result_hash.py fingerprints at
-    # sf0.001/0.01/0.1 (plans/r18/ + OPTIMIZATION_r18.md).
-    r18_window = [
-        # r17 code-changed, uncertified (9) — VERDICT r17 #2
+    # an outside driver scores the first 50 entries, in this order
+    first = [
         "graph_louvain_move", "graph_louvain_communities",
         "graph_louvain_two_level", "graph_louvain_multilevel",
         "graph_pagerank", "graph_personalized_pagerank",
         "quality_clf_weights", "etl_bloom_semi_join",
         "sim_ivf_recall_curve",
-        # r18 code-changed (2) — changed code MUST re-certify
         "graph_hits", "graph_ktruss",
-        # r12-era staleness ceiling — ALL 39 (alphabetical)
         "asof_join_events", "asof_join_nearest",
         "dedup_dup_rate_by_source", "dedup_minhash_audit",
         "dedup_passages", "dedup_simhash_signatures",
@@ -5121,7 +4967,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quality_unigram_logprob", "salted_count",
         "sim_cosine_allpairs_ref", "sim_mmr_rerank",
     ]
-    ordered = {k: registry[k] for k in r18_window}
+    ordered = {k: registry[k] for k in first}
     ordered.update({k: v for k, v in registry.items() if k not in ordered})
     return {name: _scoped(fn) for name, fn in ordered.items()}
 

@@ -17,7 +17,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
     os.environ.setdefault("SPARK_GRAFT_SHUFFLE", "4")
-    s = get_spark("graph-etl-spark-tests")
+    # Keep every stage in the status store: past 1,000 stages Spark
+    # evicts skipped stages first, and tests that read their jobs'
+    # stages (metrics.measure, test_staging) would find them gone.
+    s = get_spark("graph-etl-spark-tests", extra_confs={"spark.ui.retainedStages": "100000"})
     yield s
 
 

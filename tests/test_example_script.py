@@ -44,7 +44,7 @@ def test_example_streaming_ingest_end_to_end(spark, tmp_path):
 
 def test_example_corpus_curation_end_to_end(spark):
     """The training-data curation demo must run every stage against
-    the real sf0.001 tables and report coherent counts."""
+    the real sf0.001 tables, once, and report coherent counts."""
     mod = _load_example("corpus_curation.py")
     out = mod.main(spark=spark, sf_dir="/root/testdata/sf0.001")
     assert out["docs_in"] > 0
@@ -80,16 +80,9 @@ def test_example_corpus_curation_end_to_end(spark):
     assert out["head_docs"] > 0
     assert 0 < out["soft_mass"] <= out["docs_in"]
     assert out["masked_sources"] >= 1
-
-
-
-def test_example_curation_round15_stages(spark):
-    """Round-15 stages report coherent results: semantic survivors are
-    a nonempty subset of the vectors; the cluster split partitions the
-    corpus; contamination flags are bounded by the eval slice; the
-    mixture weights form a simplex."""
-    mod = _load_example("corpus_curation.py")
-    out = mod.main(spark=spark, sf_dir="/root/testdata/sf0.001")
+    # semantic survivors are a nonempty subset of the vectors; the
+    # cluster split partitions the corpus; contamination flags are
+    # bounded by the eval slice; the mixture weights form a simplex
     assert 0 < out["semantic_kept"]
     assert sum(out["cluster_splits"].values()) == out["docs_in"]
     assert 0 <= out["contaminated_evals"] <= 20
