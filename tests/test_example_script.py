@@ -6,6 +6,8 @@ from __future__ import annotations
 import importlib.util
 import os
 
+import pytest
+
 
 def _load_example(name="imdb_spark.py"):
     path = os.path.join(
@@ -42,11 +44,18 @@ def test_example_streaming_ingest_end_to_end(spark, tmp_path):
     assert mod.main(workdir=str(tmp_path / "stream_wd")) == 46
 
 
-def test_example_corpus_curation_end_to_end(spark):
-    """The training-data curation demo must run every stage against
-    the real sf0.001 tables, once, and report coherent counts."""
+@pytest.fixture(scope="module")
+def curation_out(spark):
+    """One run of the corpus-curation demo against the sf0.001 tables,
+    shared by the tests that check its report."""
     mod = _load_example("corpus_curation.py")
-    out = mod.main(spark=spark, sf_dir="/root/testdata/sf0.001")
+    return mod.main(spark=spark, sf_dir="/root/testdata/sf0.001")
+
+
+def test_example_corpus_curation_end_to_end(curation_out):
+    """The training-data curation demo must run every stage against
+    the real sf0.001 tables and report coherent counts."""
+    out = curation_out
     assert out["docs_in"] > 0
     assert 0 < out["survivors"] <= out["after_exact"] <= out["docs_in"]
     # every simulated re-crawl must be caught by the incremental vet
@@ -80,9 +89,14 @@ def test_example_corpus_curation_end_to_end(spark):
     assert out["head_docs"] > 0
     assert 0 < out["soft_mass"] <= out["docs_in"]
     assert out["masked_sources"] >= 1
-    # semantic survivors are a nonempty subset of the vectors; the
-    # cluster split partitions the corpus; contamination flags are
-    # bounded by the eval slice; the mixture weights form a simplex
+
+
+def test_example_curation_round15_stages(curation_out):
+    """Round-15 stages report coherent results: semantic survivors are
+    a nonempty subset of the vectors; the cluster split partitions the
+    corpus; contamination flags are bounded by the eval slice; the
+    mixture weights form a simplex."""
+    out = curation_out
     assert 0 < out["semantic_kept"]
     assert sum(out["cluster_splits"].values()) == out["docs_in"]
     assert 0 <= out["contaminated_evals"] <= 20
