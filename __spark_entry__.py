@@ -1473,16 +1473,6 @@ def q_sim_cosine_topk(spark, sf):
     return ops.brute_force_topk(e, q, k=5)
 
 
-def q_sim_cosine_topk_scale(spark, sf):
-    """Same exact top-k, cluster-scale physical plan: per-map-partition
-    Arrow top-k reduction, then a final window over partitions ×
-    queries × k rows — no single-reducer-per-query ranking of the full
-    scored corpus. Bit-identical to q_sim_cosine_topk (same oracle)."""
-    e = _t(spark, sf, "embeddings")
-    q = e.filter(F.col("vec_id") < 10)
-    return ops.brute_force_topk_scale(e, q, k=5)
-
-
 def q_sim_cosine_neardup_pairs(spark, sf):
     """Embedding near-dup via random-hyperplane LSH buckets + exact
     cosine verify — the 100 TB plan shape (equi-join on bucket, the
@@ -3030,12 +3020,9 @@ def q_text_rake_keywords(spark, sf):
 def q_sim_mips_topk(spark, sf):
     """Exact maximum-inner-product top-k (DPR-style retrieval scoring
     where magnitude carries signal): 10 query vectors against the
-    corpus, k=5, via the cluster plan — Arrow-batched per-partition
-    top-k reduction, then a rank window over partitions x queries x k
-    survivors only. Bit-equal to the reference plan; the oracle is
-    the plain ranked dot product."""
+    corpus, k=5; the oracle is the plain ranked dot product."""
     e = _t(spark, sf, "embeddings")
-    return ops.mips_topk(e, e.filter(F.col("vec_id") < 10), k=5, scale=True)
+    return ops.mips_topk(e, e.filter(F.col("vec_id") < 10), k=5)
 
 
 def q_quality_shard_plan(spark, sf):
@@ -3114,12 +3101,10 @@ def q_approx_quantile_sketch(spark, sf):
 
 def q_sim_l2_topk(spark, sf):
     """Exact Euclidean top-k (the third FAISS flat metric): 10 query
-    vectors, k=5, via the Arrow per-partition reduction plan —
-    bit-equal to the rank-window reference; oracle is the plain
-    ranked distance with the identical (dist asc, neighbor asc) tie
-    order."""
+    vectors, k=5; the oracle is the plain ranked distance with the
+    identical (dist asc, neighbor asc) tie order."""
     e = _t(spark, sf, "embeddings")
-    return ops.l2_topk(e, e.filter(F.col("vec_id") < 10), k=5, scale=True)
+    return ops.l2_topk(e, e.filter(F.col("vec_id") < 10), k=5)
 
 
 def q_sim_maxsim_topk(spark, sf):
@@ -3759,17 +3744,6 @@ def q_sim_binary_rerank(spark, sf):
     e = _t(spark, sf, "embeddings")
     return ops.binary_rerank_topk(
         e, e.filter(F.col("vec_id") < 10), dim=64, k=5, prefilter_factor=4
-    )
-
-
-def q_sim_hamming_topk_scale(spark, sf):
-    """The binary Hamming search on the cluster plan: per-partition
-    Arrow top-k before the exchange, k·partitions-row final window —
-    bit-identical to the reference path (integer distances + id
-    tie-break), so it shares its oracle verbatim."""
-    e = _t(spark, sf, "embeddings")
-    return ops.hamming_topk(
-        e, e.filter(F.col("vec_id") < 10), dim=64, k=5, scale=True
     )
 
 
@@ -4666,7 +4640,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "graph_louvain_multilevel": q_graph_louvain_multilevel,
         "sim_mmr_rerank": q_sim_mmr_rerank,
         "sim_hamming_topk": q_sim_hamming_topk,
-        "sim_hamming_topk_scale": q_sim_hamming_topk_scale,
         "events_ab_cuped": q_events_ab_cuped,
         "sim_hybrid_rrf": q_sim_hybrid_rrf,
         "dedup_ngram_novelty": q_dedup_ngram_novelty,
@@ -4762,7 +4735,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "range_join_parts": q_range_join_parts,
         "rollup_lineitem": q_rollup_lineitem,
         "sim_cosine_topk": q_sim_cosine_topk,
-        "sim_cosine_topk_scale": q_sim_cosine_topk_scale,
         "sim_ivf_topk": q_sim_ivf_topk,
         "sim_ivf_trained_topk": q_sim_ivf_trained_topk,
         "sim_kmeans_assign": q_sim_kmeans_assign,
@@ -6258,10 +6230,6 @@ def oracle_sql() -> dict[str, str]:
         )
         SELECT query_id, neighbor_id, cos_sim, rank FROM ranked WHERE rank <= 5
     """
-
-    # the scale-path variant is exact and deterministic, so it shares
-    # the reference path's oracle verbatim
-    sql["sim_cosine_topk_scale"] = sql["sim_cosine_topk"]
 
     # Oracle for the LSH-bucketed near-dup query: exact all-pairs over
     # the SAME augmented corpus (50 planted 2×-scaled copies, cosine
@@ -10688,10 +10656,6 @@ def oracle_sql() -> dict[str, str]:
         SELECT query_id, neighbor_id, hamming, rank FROM ranked
         WHERE rank <= 5
     """
-
-    # the scale-path variant is bit-identical (integer distances, id
-    # tie-break), so it shares the reference oracle verbatim
-    sql["sim_hamming_topk_scale"] = sql["sim_hamming_topk"]
 
     # binary-prefilter -> exact-rerank cascade: the hamming CTE chain
     # is the sim_hamming_topk oracle at the 20-candidate shortlist,

@@ -81,7 +81,6 @@ HEADLINE = [
     # from the official record (VERDICT r5 #3), plus the new
     # per-source quota cap
     "sim_semantic_dedup_pairs",
-    "sim_cosine_topk_scale",
     "quality_source_quota",
     # round-7: RAG-style overlapping-window chunking + the streaming
     # admission filter's batch twin
@@ -221,7 +220,6 @@ HEADLINE = [
     "graph_modularity",
     "sim_mmr_rerank",
     "sim_hamming_topk",
-    "sim_hamming_topk_scale",
     "events_ab_cuped",
     "sim_hybrid_rrf",
     "dedup_ngram_novelty",

@@ -122,7 +122,6 @@ def range_join(
     lower: str,
     upper: str,
     how: str = "inner",
-    broadcast_right: bool = True,
 ) -> DataFrame:
     """Rows where left.point ∈ [right.lower, right.upper), optionally
     with equal ``on`` keys.
@@ -141,8 +140,7 @@ def range_join(
     if on is not None:
         cond = (F.col(f"l.{on}") == F.col(f"r.{on}")) & cond
         return l.join(r, cond, how).drop(F.col(f"r.{on}"))
-    rr = F.broadcast(r) if broadcast_right else r
-    return l.join(rr, cond, how)
+    return l.join(F.broadcast(r), cond, how)
 
 
 def rolling_median(

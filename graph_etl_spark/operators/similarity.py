@@ -13,11 +13,10 @@ IVF cuts the scanned fraction to ~1/nlist per probe.
 Every per-query top-k here ranks through ONE primitive, ``_topk``. It
 fixes the tie order (score, then neighbor id ascending) and the
 NULL/NaN contract (a row whose score is NULL or NaN never takes a
-rank). It has two strategies with bit-identical results: the reference
-plan, one rank window over every scored row of a query; and the
-partial plan, which first cuts each map partition to k rows per query
-with an Arrow-batched ``mapInPandas`` reducer and then runs the same
-window over those survivors.
+rank). It is one rank window per query; Catalyst plans a partial
+``WindowGroupLimit`` below the window's exchange, so each map
+partition is already cut to k rows per query before the shuffle and no
+single reducer ranks every scored row of a query.
 """
 
 from __future__ import annotations
@@ -59,7 +58,6 @@ def _topk(
     score: str,
     asc: bool,
     *,
-    partial: bool = False,
     rank: str = "rank",
 ) -> DataFrame:
     """The k best rows of ``scored`` per ``query_id``, numbered 1..k in
@@ -83,34 +81,13 @@ def _topk(
     force scan), and every pair's kernel then runs twice. A filter
     over a window's output is not pushed below it.
 
-    ``partial=False`` ranks every scored row of a query in one window
-    partitioned by query_id: the reference plan, one reducer per
-    query. ``partial=True`` first reduces each map partition to k rows
-    per query with ``mapInPandas`` (a running per-batch top-k, so state
-    is bounded at queries × k rows whatever the partition size); the
-    exchange then carries partitions × queries × k rows and the same
-    window ranks them. Both stages use the same tie order, so the two
-    strategies return bit-identical rows."""
+    The window is a ``row_number`` bounded by a ``<=`` filter, so
+    Catalyst inserts a partial ``WindowGroupLimit`` below the
+    exchange: each map partition keeps k rows per query, and the
+    exchange carries at most partitions × queries × k rows."""
     kk = int(k)
     # NULL counts as NaN, so one test covers both
     bad = F.isnan(F.coalesce(F.col(score).cast("double"), F.lit(float("nan"))))
-    if partial:
-        by = ["query_id", score, "neighbor_id"]
-
-        def local_topk(batches):
-            import pandas as pd
-
-            acc = None
-            for pdf in batches:
-                # pandas reads a NULL and a NaN score both as NA
-                pdf = pdf[pdf[score].notna()]
-                both = pdf if acc is None else pd.concat((acc, pdf), ignore_index=True)
-                both = both.sort_values(by, ascending=[True, asc, True])
-                acc = both.groupby("query_id", sort=False).head(kk)
-            if acc is not None and len(acc):
-                yield acc
-
-        scored = scored.mapInPandas(local_topk, scored.schema)
     w = Window.partitionBy("query_id").orderBy(
         bad.asc(),
         F.col(score).asc() if asc else F.col(score).desc(),
@@ -133,26 +110,6 @@ def _hoisted_cosine(round_to: int) -> Column:
     )
 
 
-def _cosine_scored(
-    data: DataFrame, queries: DataFrame, id_col: str, vec_col: str, round_to: int
-) -> DataFrame:
-    """Every query × data pair except a vector with itself, scored by
-    rounded ``cos_sim``: the exact cosine scan both brute-force
-    strategies rank. The query side is broadcast (small by
-    construction); the data side streams map-side."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
-    ).withColumn("__qn", norm(F.col("__qvec")))
-    d = fan_out(data).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__dvec")
-    ).withColumn("__dn", norm(F.col("__dvec")))
-    return (
-        d.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos_sim", _hoisted_cosine(round_to))
-    )
-
-
 def brute_force_topk(
     data: DataFrame,
     queries: DataFrame,
@@ -170,7 +127,17 @@ def brute_force_topk(
     The queries side is broadcast (small by construction); the heavy
     side streams map-side.
     """
-    scored = _cosine_scored(data, queries, id_col, vec_col, round_to)
+    q = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
+    ).withColumn("__qn", norm(F.col("__qvec")))
+    d = fan_out(data).select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__dvec")
+    ).withColumn("__dn", norm(F.col("__dvec")))
+    scored = (
+        d.crossJoin(F.broadcast(q))
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .withColumn("cos_sim", _hoisted_cosine(round_to))
+    )
     return _topk(scored, k, "cos_sim", asc=False).select(
         "query_id", "neighbor_id", "cos_sim", "rank"
     )
@@ -453,28 +420,6 @@ def clip_score_filter(
         F.coalesce(F.col("clip_score") >= F.col("__thr"), F.lit(False)).alias(
             "keep"
         ),
-    )
-
-
-def brute_force_topk_scale(
-    data: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 4,
-) -> DataFrame:
-    """Exact cosine top-k, cluster-scale plan — identical results to
-    ``brute_force_topk``, different physical strategy: the same scan
-    ranked by ``_topk``'s partial strategy, so no single reducer ranks
-    all scored rows of a query. Scoring stays JVM-side; only the
-    3-column (query_id, neighbor_id, cos_sim) candidates cross the
-    Arrow boundary."""
-    scored = _cosine_scored(data, queries, id_col, vec_col, round_to).select(
-        "query_id", "neighbor_id", "cos_sim"
-    )
-    return _topk(scored, k, "cos_sim", asc=False, partial=True).select(
-        "query_id", "neighbor_id", "cos_sim", "rank"
     )
 
 
@@ -1511,9 +1456,8 @@ def pq_adc_topk(
     (m × k_codes rounded lookups over literal codebooks), queries
     broadcast, the encoded corpus streams map-side (no shuffle until
     the per-query ranking window, which partitions on query_id —
-    n_queries × corpus candidate rows, the same posture as
-    brute_force_topk, with the per-partition Arrow top-k reduction of
-    ``brute_force_topk_scale`` as the documented scale path)."""
+    n_queries × corpus candidate rows cut to k per query and map
+    partition by the window's partial limit, as in brute_force_topk)."""
     books = _collect_books(codebooks)
     m = len(books)
     if m == 0:
@@ -2109,7 +2053,6 @@ def mips_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_to: int = 4,
-    scale: bool = False,
 ) -> DataFrame:
     """Exact maximum-inner-product top-k (MIPS — the retrieval scoring
     used by dual-encoder/DPR-style models, where vector magnitude
@@ -2117,9 +2060,6 @@ def mips_topk(
     each query vector, the k data vectors with the largest dot
     product, self excluded. Deterministic ranking: rounded dot desc,
     then neighbor id asc.
-
-    ``scale`` picks ``_topk``'s strategy: ``False`` the reference rank
-    window, ``True`` the partial per-partition reduction — bit-equal.
 
     At 100 TB the standard ANN reduction applies: augment each data
     vector with sqrt(M² − ‖x‖²) (M = max norm) and each query with 0,
@@ -2140,9 +2080,8 @@ def mips_topk(
             "dot_sim",
             F.round(dot(F.col("__qvec"), F.col("__dvec")), round_to),
         )
-        .select("query_id", "neighbor_id", "dot_sim")
     )
-    return _topk(scored, k, "dot_sim", asc=False, partial=scale).select(
+    return _topk(scored, k, "dot_sim", asc=False).select(
         "query_id", "neighbor_id", "dot_sim", "rank"
     )
 
@@ -2247,17 +2186,13 @@ def l2_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_to: int = 4,
-    scale: bool = False,
 ) -> DataFrame:
     """Exact Euclidean (L2) top-k — the third FAISS metric alongside
     cosine (``brute_force_topk``) and inner product (``mips_topk``),
     completing the trio so a FAISS user can port any flat index:
     for each query, the k data vectors at smallest L2 distance, self
     excluded. Deterministic ranking: rounded distance ASC, then
-    neighbor id ASC.
-
-    ``scale`` picks ``_topk``'s strategy: ``False`` the reference rank
-    window, ``True`` the partial per-partition reduction — bit-equal."""
+    neighbor id ASC."""
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
     )
@@ -2280,9 +2215,8 @@ def l2_topk(
         d.crossJoin(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("l2_dist", F.round(dist, round_to))
-        .select("query_id", "neighbor_id", "l2_dist")
     )
-    return _topk(scored, k, "l2_dist", asc=True, partial=scale).select(
+    return _topk(scored, k, "l2_dist", asc=True).select(
         "query_id", "neighbor_id", "l2_dist", "rank"
     )
 
@@ -2363,11 +2297,10 @@ def mmr_candidate_pool(
     round_to: int = 4,
 ) -> DataFrame:
     """mmr_rerank's pool stage, exposed so the plan guard tests the
-    exact frame the rerank executes: the distributed exact top-``pool``
-    via ``brute_force_topk_scale`` (per-partition Arrow top-k BEFORE
-    the exchange; bit-identical to the reference window path, which
-    the oracle unrolls)."""
-    return brute_force_topk_scale(
+    exact frame the rerank executes: the exact top-``pool`` of
+    ``brute_force_topk``, cut to ``pool`` rows per query and map
+    partition BEFORE the exchange by the window's partial limit."""
+    return brute_force_topk(
         data, queries, k=int(pool), id_col=id_col, vec_col=vec_col,
         round_to=round_to,
     ).select("query_id", "neighbor_id", "cos_sim")
@@ -2398,12 +2331,11 @@ def mmr_rerank(
     neighbor_id; λ arithmetic is written λ·rel − (1.0 − λ)·penalty in
     BOTH engines (the oracle unrolls the same k steps).
 
-    Scale: the candidate pool is the distributed exact top-``pool``
-    via ``brute_force_topk_scale`` — every map partition Arrow-reduces
-    its candidates to ``pool`` per query BEFORE the exchange, so the
+    Scale: the candidate pool is the exact top-``pool`` of
+    ``brute_force_topk`` — the window's partial limit cuts every map
+    partition to ``pool`` rows per query BEFORE the exchange, so the
     ranking window sees partitions × queries × pool rows instead of
-    the full scored stream (bit-identical to the reference path, which
-    the oracle unrolls). After the pool, EVERYTHING is bounded per
+    the full scored stream. After the pool, EVERYTHING is bounded per
     query: the pairwise-sim frame is pool² rows/query, each greedy
     step is one equi-join + one query-keyed window over ≤pool
     rows/query, all queries advancing in parallel — the k-step loop
@@ -2540,7 +2472,6 @@ def hamming_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scale: bool = False,
 ) -> DataFrame:
     """Binary-embedding top-k: binarize both sides (sign bits packed
     32/long) and rank by HAMMING distance — popcount(xor) summed over
@@ -2550,10 +2481,7 @@ def hamming_topk(
 
     Output: (query_id, neighbor_id, hamming, rank).
 
-    Scale: packing is map-side and the query side broadcasts either
-    way. ``scale`` picks ``_topk``'s strategy: ``False`` the reference
-    rank window (the oracle shape), ``True`` the partial per-partition
-    reduction — bit-identical."""
+    Scale: packing is map-side and the query side broadcasts."""
     d = binarize_embeddings(data, dim, id_col=id_col, vec_col=vec_col).select(
         F.col(id_col).alias("neighbor_id"), F.col("words").alias("__dw")
     )
@@ -2573,9 +2501,8 @@ def hamming_topk(
         d.crossJoin(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("hamming", ham)
-        .select("query_id", "neighbor_id", "hamming")
     )
-    return _topk(scored, k, "hamming", asc=True, partial=scale).select(
+    return _topk(scored, k, "hamming", asc=True).select(
         "query_id", "neighbor_id", "hamming", "rank"
     )
 
@@ -2718,9 +2645,9 @@ def matryoshka_recall(
     ``brute_force_topk`` (rounded cosine, id tie-break); recall is an
     integer ratio.
 
-    Scale: two broadcast-query scans (swap in the partial-reduction
-    scale variant per side for cluster-scale candidate counts) + one
-    k-row-per-query equi-join."""
+    Scale: two broadcast-query scans, each cut to k rows per query and
+    map partition before its exchange, + one k-row-per-query
+    equi-join."""
     if int(prefix_dim) < 1:
         raise ValueError(
             f"matryoshka_recall: prefix_dim must be >= 1 (got {prefix_dim})"

@@ -495,8 +495,9 @@ def bm25_rank(
     ``orderBy(...).limit(k)`` — Spark compiles that to
     TakeOrderedAndProject, a per-partition top-k reduction followed
     by a k·partitions-row merge, so a common query term never
-    funnels the whole posting set through one ranking reducer (the
-    ``brute_force_topk_scale`` discipline); the rank column is then
+    funnels the whole posting set through one ranking reducer (as
+    the similarity top-k's partial ``WindowGroupLimit`` does per
+    query); the rank column is then
     assigned by a window over the k surviving rows only.
 
     Determinism: dl/avgdl evaluates as (dl·N)/total_len — integer

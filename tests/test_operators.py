@@ -217,29 +217,41 @@ def test_stream_save_nodes(spark, output_dir, tmp_path):
     assert sum(f["count"] for f in files.values()) == 10
 
 
-def test_topk_scale_matches_reference_path(spark, sf_dir, nan_null_vectors):
-    """brute_force_topk_scale is the same exact operator under a
-    different physical plan — results must be bit-identical, also
-    when some cosines are NaN or NULL (both drop them)."""
+# brute_force_topk at sf0.001, queries vec_id < 10, k=5: per query the
+# (neighbor_id, cos_sim) rows in rank order; query 3's 0.3197 tie
+# ranks the smaller id first
+_COSINE_TOP5_SF0001 = {
+    0: [(17, 0.3345), (225, 0.3151), (12, 0.311), (483, 0.3005), (260, 0.2987)],
+    1: [(257, 0.3918), (209, 0.3815), (129, 0.3515), (376, 0.3048), (440, 0.2993)],
+    2: [(443, 0.3576), (62, 0.29), (246, 0.2898), (185, 0.2829), (91, 0.2789)],
+    3: [(223, 0.3409), (205, 0.3366), (84, 0.3197), (212, 0.3197), (426, 0.3151)],
+    4: [(345, 0.3749), (98, 0.3398), (143, 0.3297), (343, 0.3124), (57, 0.2987)],
+    5: [(113, 0.3644), (440, 0.3093), (234, 0.3044), (298, 0.2991), (448, 0.2792)],
+    6: [(141, 0.3459), (434, 0.3057), (78, 0.2941), (280, 0.2859), (467, 0.2649)],
+    7: [(382, 0.3499), (466, 0.324), (209, 0.3062), (329, 0.3051), (220, 0.2994)],
+    8: [(20, 0.3301), (385, 0.3266), (190, 0.3242), (231, 0.324), (132, 0.3099)],
+    9: [(381, 0.3567), (107, 0.3297), (365, 0.3211), (261, 0.2797), (396, 0.2795)],
+}
+
+
+def test_brute_force_topk_expected_rows(spark, sf_dir, nan_null_vectors):
+    """brute_force_topk returns the known sf0.001 rows, and drops the
+    pairs whose cosine is NaN or NULL."""
     from graph_etl_spark import operators as ops
     from pyspark.sql import functions as F
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = e.filter(F.col("vec_id") < 10)
-    ref = ops.brute_force_topk(e, q, k=5).orderBy("query_id", "rank").collect()
-    scale = ops.brute_force_topk_scale(e, q, k=5).orderBy("query_id", "rank").collect()
-    assert ref == scale
+    got = ops.brute_force_topk(e, q, k=5).orderBy("query_id", "rank").collect()
+    assert [tuple(r) for r in got] == [
+        (qid, nid, sim, rank)
+        for qid, rows in _COSINE_TOP5_SF0001.items()
+        for rank, (nid, sim) in enumerate(rows, 1)
+    ]
 
     df, q = nan_null_vectors
-    ref = ops.brute_force_topk(df, q, k=3).orderBy("query_id", "rank").collect()
-    scale = ops.brute_force_topk_scale(df, q, k=3).orderBy("query_id", "rank").collect()
-    # no NULL or NaN score is ranked (NaN != NaN)
-    assert all(
-        r["cos_sim"] is not None and r["cos_sim"] == r["cos_sim"]
-        for r in ref + scale
-    )
-    assert ref == scale
-    assert [r["neighbor_id"] for r in ref] == [1, 2, 3]
+    got = ops.brute_force_topk(df, q, k=3).orderBy("query_id", "rank").collect()
+    assert [tuple(r) for r in got] == [(0, 1, 0.9939, 1), (0, 2, 0.0, 2), (0, 3, -1.0, 3)]
 
 
 def test_read_table_and_queries_are_conf_neutral(spark, sf_dir):

@@ -11,7 +11,9 @@ noop-writes the result. The jobs and stages of build plus write (one
 the query's entry in ``tests/registry_counters.json`` (``_TOLERANCE``
 names the one exception). A change that
 moves a count re-pins that entry to the value the failure message
-prints, and says why.
+prints, and says why. The same sweep records every frame a query ranks
+through the similarity top-k primitive ``_topk`` and checks that its
+plan prunes each map partition to k rows per query before the shuffle.
 """
 
 from __future__ import annotations
@@ -26,6 +28,7 @@ sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry  # noqa: E402
 from graph_etl_spark.metrics import measure  # noqa: E402
+from graph_etl_spark.operators import similarity  # noqa: E402
 from graph_etl_spark.plans import plan_string  # noqa: E402
 
 COUNTERS = os.path.join(ROOT, "tests", "registry_counters.json")
@@ -107,6 +110,39 @@ def _unpartitioned_windows(plan: str) -> list[str]:
     ]
 
 
+def _unpruned_topk(plan: str) -> str | None:
+    """Why a ``_topk`` frame's physical plan lets one reducer rank every
+    scored row of a query, or None when it does not.
+
+    A rank window bounded by ``rank <= k`` plans as WindowGroupLimit
+    twice: Final above the query_id exchange and Partial below it, so
+    each map partition keeps k rows per query before the shuffle. The
+    frame's own window is the first one its plan prints. Where its
+    input is already partitioned by query_id, Spark drops the exchange
+    and the Partial; that input must then be an earlier top-k's
+    output, which is itself a recorded frame."""
+    if "MapInPandas" in plan:
+        return "ranks through a Python reducer (MapInPandas)"
+    ops = [
+        line.lstrip(" :+-")
+        for line in plan.splitlines()
+        if not line.lstrip(" :+-").startswith("Sort [")
+    ]
+    limits = [
+        i for i, op in enumerate(ops) if op.startswith("WindowGroupLimit [query_id#")
+    ]
+    if not limits or not ops[limits[0]].endswith("Final"):
+        return "no WindowGroupLimit on its rank window"
+    top = limits[0]
+    if ops[top + 1].startswith("Exchange hashpartitioning(query_id#"):
+        if top + 2 in limits and ops[top + 2].endswith("Partial"):
+            return None
+        return "no partial WindowGroupLimit below its query_id exchange"
+    if len(limits) > 1:
+        return None
+    return "ranks an input no earlier top-k has pruned"
+
+
 def _release(spark) -> None:
     """Drop what a query left pinned or cached, as bench.py does
     between queries, so the next query starts from a clean session."""
@@ -132,15 +168,29 @@ def _query_counters(spark, fn, sf_dir: str) -> tuple[str, dict[str, int]]:
     return plan, counts
 
 
-def test_registry_sweep(spark, sf_dir):
+def test_registry_sweep(spark, sf_dir, monkeypatch):
     """Every registered query: no unpartitioned window (VERDICT r9 #4)
-    outside the allowlist, and counters equal to the committed ones."""
+    outside the allowlist, counters equal to the committed ones, and
+    every top-k it ranks pruned before its exchange."""
     with open(COUNTERS) as f:
         pinned = json.load(f)
-    offenders, moved = {}, []
+    topk, topk_frames = similarity._topk, []
+
+    def recording_topk(*args, **kwargs):
+        topk_frames.append(topk(*args, **kwargs))
+        return topk_frames[-1]
+
+    monkeypatch.setattr(similarity, "_topk", recording_topk)
+    offenders, moved, unpruned, ranked = {}, [], {}, set()
     _release(spark)
     for name, fn in entry.queries().items():
+        topk_frames.clear()
         plan, counts = _query_counters(spark, fn, sf_dir)
+        if topk_frames:
+            ranked.add(name)
+            faults = {_unpruned_topk(plan_string(df)) for df in topk_frames} - {None}
+            if faults:
+                unpruned[name] = sorted(faults)
         _release(spark)
         bad = _unpartitioned_windows(plan)
         if bad and name not in _UNPARTITIONED_WINDOW_OK:
@@ -155,6 +205,8 @@ def test_registry_sweep(spark, sf_dir):
             moved.append(f"{name}: {', '.join(diff)}; counts {json.dumps(counts)}")
     stale = sorted(set(pinned) - set(entry.queries()))
     assert not offenders, f"unpartitioned windows: {offenders}"
+    assert {"sim_cosine_topk", "sim_mmr_rerank"} <= ranked, sorted(ranked)
+    assert not unpruned, f"top-k not pruned before its exchange: {unpruned}"
     assert not moved and not stale, (
         "registry counters moved (re-pin in tests/registry_counters.json):\n"
         + "\n".join(moved + [f"{name}: pinned but not registered" for name in stale])

@@ -520,32 +520,33 @@ def test_domain_shift_properties(spark):
         ops.domain_shift(a, b, n_buckets=0)
 
 
-def test_hamming_scale_path_bit_identical(spark, nan_null_vectors):
+def test_hamming_topk_matches_popcount_reference(spark, nan_null_vectors):
+    """hamming_topk equals a Python popcount of the sign bits (bit j set
+    iff component j > 0), ranked by (distance, neighbor id), self
+    excluded."""
+    vecs = [[float(((i * 13 + j * 7) % 17) - 8) for j in range(64)] for i in range(40)]
     emb = spark.createDataFrame(
-        [(i, [float(((i * 13 + j * 7) % 17) - 8) for j in range(64)]) for i in range(40)],
-        "vec_id long, embedding array<float>",
+        list(enumerate(vecs)), "vec_id long, embedding array<float>"
     ).repartition(6)
     q = emb.filter(F.col("vec_id") < 4)
-    ref = sorted(
+    got = sorted(
         (r["query_id"], r["rank"], r["neighbor_id"], r["hamming"])
         for r in ops.hamming_topk(emb, q, dim=64, k=5).collect()
     )
-    sc = sorted(
-        (r["query_id"], r["rank"], r["neighbor_id"], r["hamming"])
-        for r in ops.hamming_topk(emb, q, dim=64, k=5, scale=True).collect()
-    )
-    assert ref == sc
+    bits = [sum(1 << j for j, x in enumerate(v) if x > 0) for v in vecs]
+    want = []
+    for qid in range(4):
+        dists = sorted(
+            (bin(bits[qid] ^ bits[n]).count("1"), n) for n in range(40) if n != qid
+        )
+        want += [(qid, rank, n, d) for rank, (d, n) in enumerate(dists[:5], 1)]
+    assert got == want
 
+    # Spark orders NaN above every number, so a NaN component sets its
+    # bit (id 4 is [1, 1]); the distance stays an integer
     df, q = nan_null_vectors
-    ref = ops.hamming_topk(df, q, dim=2, k=3).collect()
-    sc = ops.hamming_topk(df, q, dim=2, k=3, scale=True).collect()
-    # no NULL or NaN score is ranked (NaN != NaN)
-    assert all(
-        r["hamming"] is not None and r["hamming"] == r["hamming"]
-        for r in ref + sc
-    )
-    key = lambda r: (r["query_id"], r["rank"], r["neighbor_id"], r["hamming"])
-    assert sorted(map(key, ref)) == sorted(map(key, sc))
+    got = ops.hamming_topk(df, q, dim=2, k=3).orderBy("rank").collect()
+    assert [tuple(r) for r in got] == [(0, 1, 1, 1), (0, 3, 1, 2), (0, 4, 1, 3)]
 
 
 def test_as_of_join_directions(spark):

@@ -56,7 +56,7 @@ def driver_like_spark():
     session masked exactly that class of bug in round 1."""
     from pyspark.sql import SparkSession
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     return (
         SparkSession.builder.appName("oracle-check-driverlike")
         .master(f"local[{cpus}]")

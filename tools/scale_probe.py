@@ -181,11 +181,9 @@ PROBE_TO_REGISTRY = {
     "cdc_chunks": "dedup_cdc_chunks",
     "image_ahash": "mm_image_ahash_dedup",
     "incremental_dedup": "dedup_incremental",
-    "l2_topk_scale": "sim_l2_topk",
     "mad_outliers": "quality_mad_outliers",
     "lsh_cosine_neardup": "sim_cosine_neardup_pairs",
     "mg_heavy_hitters": "approx_heavy_hitters",
-    "mips_topk_scale": "sim_mips_topk",
     "normalize_text": "text_normalize",
     "numeric_histogram": "quality_histogram",
     "passage_dedup": "dedup_passages",
@@ -1192,13 +1190,13 @@ def main() -> None:
             coarse_iter=1,
             pq_iter=1,
         ),
-        # r10: exact MIPS / L2 via the Arrow partial-reduction plan —
-        # candidates 10x, exchange stays partitions x queries x k
-        "mips_topk_scale": lambda e: ops.mips_topk(
-            e, e.filter(F.col("vec_id") < 10), k=5, scale=True
+        # r10: exact MIPS / L2 — candidates 10x, the window's partial
+        # limit keeps the exchange at partitions x queries x k
+        "mips_topk": lambda e: ops.mips_topk(
+            e, e.filter(F.col("vec_id") < 10), k=5
         ),
-        "l2_topk_scale": lambda e: ops.l2_topk(
-            e, e.filter(F.col("vec_id") < 10), k=5, scale=True
+        "l2_topk": lambda e: ops.l2_topk(
+            e, e.filter(F.col("vec_id") < 10), k=5
         ),
         # r10: norm-augmented IVF MIPS — one M2 agg + the IVF plan
         "mips_ivf_topk": lambda e: ops.mips_ivf_topk(
