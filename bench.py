@@ -407,10 +407,13 @@ def main() -> None:
     # steady heap growth across the run, i.e. rising GC pressure late
     # in the session. The bench JVM doesn't need a web UI; the
     # statusTracker API the tests use lives in the app status store and
-    # keeps working. Driver heap default also goes 8g → 16g here
-    # (local-mode driver hosts all 32 executor threads; the box has
-    # 128 GiB) so full GCs stay rare. Both env-overridable.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
+    # keeps working. The driver heap defaults to half the host's
+    # memory, at most 16g (the local-mode driver hosts every executor
+    # thread, so full GCs stay rare on a large host, and a small one
+    # keeps room for the Python workers and the OS).
+    # SPARK_GRAFT_DRIVER_MEM overrides it.
+    host_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{min(16, max(1, int(host_gib // 2)))}g")
     spark = get_spark(
         "graph-etl-bench",
         extra_confs={

@@ -3,12 +3,17 @@
 Brute-force cosine top-k as the exact baseline; LSH-bucketed and
 IVF variants as the approximate scale path.
 
-Scale design: dot products are JVM array expressions
-(``zip_with`` + ``aggregate``) — no Python, no explode. The query side
-of a top-k search is small by construction and broadcast; brute force
-is then a map-side cross of every data partition with the broadcast
-queries followed by a per-query top-k (one shuffle on query id).
-IVF cuts the scanned fraction to ~1/nlist per probe.
+Scale design: the three exact scans (``brute_force_topk``,
+``mips_topk``, ``l2_topk``) collect the query side once, small by
+construction, and score every data partition against it in numpy
+blocks (``_exact_topk``, one ``mapInPandas``, no cross join). The
+block scorer folds in ``dot``/``norm``'s order, so raw scores are
+bit-equal to the JVM kernels, and emits per Arrow batch only the rows
+that can rank; Spark then rounds them and takes the per-query top-k
+(one shuffle on query id). Every other kernel is a JVM array
+expression (``zip_with`` + ``aggregate``): the public ``dot``, ``norm``
+and ``cosine``, and the candidate re-scoring of the IVF, PQ and
+re-rank paths. IVF cuts the scanned fraction to ~1/nlist per probe.
 
 Every per-query top-k here ranks through ONE primitive, ``_topk``. It
 fixes the tie order (score, then neighbor id ascending) and the
@@ -21,12 +26,14 @@ single reducer ranks every scored row of a query.
 
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401 — resolves pandas_udf type hints under `from __future__ import annotations`
+import numpy as np
+import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
-from ..session import Pins
+from ..session import Pins, _archive_reuse
 from ..sources import fan_out
 
 
@@ -103,10 +110,153 @@ def _hoisted_cosine(round_to: int) -> Column:
     already hoisted into per-row columns ``__qn`` and ``__dn``: the
     per-pair cosine is dot/(qn·dn), identical arithmetic in identical
     order to ``cosine``, so it is bit-equal while the O(dim) norm fold
-    runs once per row instead of once per pair."""
+    runs once per row instead of once per pair. A zero norm makes the
+    cosine NULL (``try_divide``), with ANSI on as well as off, so the
+    pair never ranks."""
     return F.round(
-        dot(F.col("__qvec"), F.col("__dvec")) / (F.col("__qn") * F.col("__dn")),
+        F.try_divide(
+            dot(F.col("__qvec"), F.col("__dvec")), F.col("__qn") * F.col("__dn")
+        ),
         round_to,
+    )
+
+
+# cells of one (query block x Arrow batch) score matrix: 8 MiB of
+# float64, and each fold step holds a few temporaries of that size
+_BLOCK_CELLS = 1 << 20
+# the exact scans' score column, and whether a larger score ranks first
+_EXACT = {"cos": ("cos_sim", True), "dot": ("dot_sim", True), "l2": ("l2_dist", False)}
+
+
+def _block_scorer(qids: list, qvecs: list, k: int, metric: str, slack: float, install):
+    """The pandas function of ``_exact_topk``'s scan: for each Arrow
+    batch of (neighbor_id, __dvec) rows, the (query_id, neighbor_id,
+    __raw) rows that can rank among a query's ``k`` best. A closure,
+    so it pickles by value with the query matrix it holds.
+
+    Scores are float64 left folds from 0.0 over the components in
+    order, the arithmetic of ``dot``/``norm`` (and of the L2 kernel,
+    ``(x - y)²``), vectorized across pairs: ``acc = acc + q[j] * d[j]``
+    for each j. That is the order of Spark's ``aggregate``, so a raw
+    score is bit-equal to the ``zip_with`` form; a BLAS product sums in
+    another order and is not. A pair scores nothing where Spark's
+    kernel is NULL or NaN: a NULL vector, a NULL or NaN component
+    (NULL arrives as NaN), vectors of unequal length (``zip_with``
+    pads the shorter with NULL), a zero norm product for ``cos``, and
+    the self pair (``neighbor_id != query_id``); no id is NULL.
+
+    Per batch and query, only rows whose raw score is within ``slack``
+    of the query's k-th best raw score are kept. ``slack`` is two
+    rounding steps: a row more than one step below the k-th rounds
+    strictly below it, so the k rows at or above the k-th outrank it
+    globally, and the second step absorbs the float error of the
+    subtraction. Queries are scored in blocks of at most
+    ``_BLOCK_CELLS`` pairs per batch."""
+    larger_first = _EXACT[metric][1]
+
+    def by_length(ids, vecs):
+        """{length: (ids, components as a length x rows float64
+        matrix)} over the rows whose vector is not NULL."""
+        lens = np.array([-1 if v is None else len(v) for v in vecs], dtype=np.int64)
+        out = {}
+        for n in np.unique(lens[lens >= 0]):
+            at = np.flatnonzero(lens == n)
+            rows = np.array([vecs[i] for i in at], dtype=np.float64)
+            out[int(n)] = (ids[at], rows.reshape(len(at), n).T.copy())
+        return out
+
+    def fold(terms, shape):
+        acc = np.zeros(shape)
+        for t in terms:
+            acc += t
+        return acc
+
+    def sq(x):
+        return x * x
+
+    def norm(m):
+        return np.sqrt(fold((sq(m[j]) for j in range(len(m))), m.shape[1]))
+
+    def block(qid, q, qn, nid, d, dn):
+        shape, dim = (len(qid), len(nid)), len(d)
+        with np.errstate(all="ignore"):
+            if metric == "l2":
+                raw = np.sqrt(fold((sq(q[j][:, None] - d[j]) for j in range(dim)), shape))
+            else:
+                raw = fold((q[j][:, None] * d[j] for j in range(dim)), shape)
+            valid = qid[:, None] != nid
+            if metric == "cos":
+                den = qn[:, None] * dn
+                raw = raw / den
+                valid &= den != 0
+        valid &= ~np.isnan(raw)
+        good = np.where(valid, raw if larger_first else -raw, -np.inf)
+        if 0 < k < len(nid):
+            kth = np.partition(good, -k, axis=1)[:, -k]
+            valid &= good >= (kth - slack)[:, None]
+        qi, ni = np.nonzero(valid)
+        return pd.DataFrame({"query_id": qid[qi], "neighbor_id": nid[ni], "__raw": raw[qi, ni]})
+
+    queries = {
+        n: (qid, q, norm(q) if metric == "cos" else None)
+        for n, (qid, q) in by_length(np.array(qids), qvecs).items()
+    }
+
+    def score(batches):
+        install()
+        for batch in batches:
+            parts = []
+            data = by_length(batch["neighbor_id"].to_numpy(), list(batch["__dvec"]))
+            for n, (nid, d) in data.items():
+                if n not in queries:
+                    continue
+                qid, q, qn = queries[n]
+                dn = norm(d) if metric == "cos" else None
+                step = max(1, _BLOCK_CELLS // len(nid))
+                for lo in range(0, len(qid), step):
+                    at = slice(lo, lo + step)
+                    qn_at = None if qn is None else qn[at]
+                    parts.append(block(qid[at], q[:, at], qn_at, nid, d, dn))
+            if parts:
+                yield pd.concat(parts, ignore_index=True)
+
+    return score
+
+
+def _exact_topk(data, queries, k, id_col, vec_col, round_to, metric) -> DataFrame:
+    """The exact top-k scan of ``brute_force_topk``, ``mips_topk`` and
+    ``l2_topk``: (query_id, neighbor_id, <score>, rank), the score
+    rounded to ``round_to`` places and named by ``_EXACT``.
+
+    The query side is collected once and scored against every
+    partition of ``fan_out(data)`` in numpy blocks (``_block_scorer``,
+    a ``mapInPandas``), which emits per Arrow batch only the rows that
+    can rank. ``F.round`` and ``_topk``'s window, with its partial
+    ``WindowGroupLimit`` below the exchange, then round and rank the
+    survivors in Spark, so rounding and tie order are Spark's own."""
+    name, larger_first = _EXACT[metric]
+    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec"))
+    d = fan_out(data).select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__dvec")
+    )
+    schema = StructType([
+        StructField("query_id", q.schema["query_id"].dataType),
+        StructField("neighbor_id", d.schema["neighbor_id"].dataType),
+        StructField("__raw", DoubleType()),
+    ])
+    # a NULL id never passes neighbor_id != query_id, nor a NULL
+    # vector a kernel
+    rows = q.filter(F.col("query_id").isNotNull()).collect()
+    d = d.filter(F.col("neighbor_id").isNotNull() & F.col("__dvec").isNotNull())
+    score = _block_scorer(
+        [r["query_id"] for r in rows], [r["__qvec"] for r in rows], int(k), metric,
+        2 * 10.0 ** -int(round_to), _archive_reuse(),
+    )
+    scored = d.mapInPandas(score, schema).select(
+        "query_id", "neighbor_id", F.round("__raw", int(round_to)).alias(name)
+    )
+    return _topk(scored, k, name, asc=not larger_first).select(
+        "query_id", "neighbor_id", name, "rank"
     )
 
 
@@ -121,26 +271,14 @@ def brute_force_topk(
     """Exact cosine top-k: for each query vector, the k nearest data
     vectors (excluding itself). Deterministic ranking: rounded cosine
     desc, then neighbor id asc — engine-stable even at float-precision
-    ties. Pairs with an undefined cosine (zero-norm or NULL side) are
-    dropped (``_topk``'s NULL/NaN contract).
+    ties. Pairs with an undefined cosine (zero-norm, NULL or NaN side,
+    vectors of unequal length) are dropped, with ANSI on as well as off.
 
-    The queries side is broadcast (small by construction); the heavy
-    side streams map-side.
+    The query side is collected once; every data partition is scored
+    against it in numpy blocks, bit-equal to ``cosine``, and emits only
+    its candidates before Spark rounds and ranks them (``_exact_topk``).
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
-    ).withColumn("__qn", norm(F.col("__qvec")))
-    d = fan_out(data).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__dvec")
-    ).withColumn("__dn", norm(F.col("__dvec")))
-    scored = (
-        d.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos_sim", _hoisted_cosine(round_to))
-    )
-    return _topk(scored, k, "cos_sim", asc=False).select(
-        "query_id", "neighbor_id", "cos_sim", "rank"
-    )
+    return _exact_topk(data, queries, k, id_col, vec_col, round_to, "cos")
 
 
 def packed_max_by(
@@ -436,7 +574,7 @@ def cosine_neardup_pairs(
     ``lsh_bucketed_neardup_pairs`` (random-hyperplane buckets) so only
     within-bucket pairs are scored.
     """
-    # per-row norm hoist (see brute_force_topk) — bit-identical cosine,
+    # per-row norm hoist (see _hoisted_cosine) — bit-identical cosine,
     # O(dim) norm fold once per row instead of once per pair
     a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va")).withColumn(
         "__na", norm(F.col("__va"))
@@ -959,7 +1097,7 @@ def _ivf_prepare(
         )
     cent_rows = centroids.select("cent_id", "cent_vec").collect()  # nlist rows — tiny, deliberate
     cent_arr = _ivf_cent_arr(cent_rows)
-    # per-row norm hoist (see brute_force_topk) — bit-identical cosine,
+    # per-row norm hoist (see _hoisted_cosine) — bit-identical cosine,
     # the O(dim) norm fold runs once per row, not once per candidate
     assigned = (
         fan_out(data)
@@ -2065,25 +2203,12 @@ def mips_topk(
     vector with sqrt(M² − ‖x‖²) (M = max norm) and each query with 0,
     and MIPS becomes cosine over the augmented space — the IVF/PQ
     scale paths then drop in unchanged. The exact path here is the
-    oracle those approximate paths are graded against.
+    oracle those approximate paths are graded against: the numpy block
+    scan of ``_exact_topk``, whose raw dot is bit-equal to ``dot``.
+    Pairs with a NULL or NaN dot (a NULL vector or component, vectors
+    of unequal length) are dropped.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
-    )
-    d = fan_out(data).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__dvec")
-    )
-    scored = (
-        d.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "dot_sim",
-            F.round(dot(F.col("__qvec"), F.col("__dvec")), round_to),
-        )
-    )
-    return _topk(scored, k, "dot_sim", asc=False).select(
-        "query_id", "neighbor_id", "dot_sim", "rank"
-    )
+    return _exact_topk(data, queries, k, id_col, vec_col, round_to, "dot")
 
 
 def mips_ivf_topk(
@@ -2192,33 +2317,11 @@ def l2_topk(
     completing the trio so a FAISS user can port any flat index:
     for each query, the k data vectors at smallest L2 distance, self
     excluded. Deterministic ranking: rounded distance ASC, then
-    neighbor id ASC."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
-    )
-    d = fan_out(data).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__dvec")
-    )
-    dist = F.sqrt(
-        F.aggregate(
-            F.zip_with(
-                F.col("__qvec"),
-                F.col("__dvec"),
-                lambda x, y: (x.cast("double") - y.cast("double"))
-                * (x.cast("double") - y.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-    scored = (
-        d.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("l2_dist", F.round(dist, round_to))
-    )
-    return _topk(scored, k, "l2_dist", asc=True).select(
-        "query_id", "neighbor_id", "l2_dist", "rank"
-    )
+    neighbor id ASC. The distance is the square root of the left fold
+    of ``(x - y)²`` over the components, scored in numpy blocks by
+    ``_exact_topk``; pairs with a NULL or NaN distance (a NULL vector
+    or component, vectors of unequal length) are dropped."""
+    return _exact_topk(data, queries, k, id_col, vec_col, round_to, "l2")
 
 
 def maxsim_topk(

@@ -262,6 +262,57 @@ def observed_checkpoint(df, what: str, probes=None):
     return snap, values
 
 
+def _archive_reuse():
+    """A function that a Python task calls first, so that PySpark's
+    per-task set-up stops re-reading unchanged archives in this worker.
+
+    Before every task, PySpark's ``setup_spark_files`` calls
+    ``importlib.invalidate_caches()``, and on CPython 3.11 each
+    ``zipimporter`` then re-reads its whole archive directory:
+    ``pyspark.zip`` (1,328 entries, one importer per imported
+    subpackage) and the 5,359-entry ``spark-core`` jar that Spark puts
+    on every worker's path. That took 115-290 ms per task on a 4-vCPU
+    host (BENCH_NOTES.md, "Python task set-up"). Once per worker
+    process, the function swaps in an ``invalidate_caches`` that
+    re-reads an archive only when its ``(st_mtime_ns, st_size)``
+    changed; a changed or new archive is still read. The keys start
+    from the archives' state at the call: this task's own set-up
+    re-read every archive just before. The swap is process-wide, so
+    every later Python task in the worker gains, whatever its code.
+    A closure, so it pickles by value and a worker needs no import of
+    this package."""
+
+    def install():
+        import os
+        import sys
+        import zipimport
+
+        reread = zipimport.zipimporter.invalidate_caches
+        if getattr(reread, "reads_changed_archives_only", False):
+            return
+
+        def stat_key(importer):
+            try:
+                st = os.stat(importer.archive)
+            except OSError:
+                return None
+            return st.st_mtime_ns, st.st_size
+
+        def invalidate_caches(self):
+            key = stat_key(self)
+            if key is None or self.__dict__.get("_archive_key") != key:
+                reread(self)
+                self._archive_key = key
+
+        for importer in list(sys.path_importer_cache.values()):
+            if isinstance(importer, zipimport.zipimporter):
+                importer._archive_key = stat_key(importer)
+        invalidate_caches.reads_changed_archives_only = True
+        zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+    return install
+
+
 class Pins:
     """The checkpoint scope of one iterative operator call: every frame
     the call pins goes through it, and it frees them.
@@ -283,8 +334,9 @@ class Pins:
       task: ``coalesce(1).mapInPandas``, no shuffle, checkpointed in
       one job. Callers take it once the ``rows`` their last
       ``advance`` observed are at most ``LOCAL_FINISH_ROWS``, so the
-      check costs no job. It logs one DEBUG line: ``what``, ``rows``
-      and the milliseconds.
+      check costs no job. Its task first calls ``_archive_reuse``'s
+      installer. It logs one DEBUG line: ``what``, ``rows`` and the
+      milliseconds.
     - ``result(df)`` releases every pin ``df`` does not read (all of
       them for None, before a raise) and returns ``df``, so a lazy
       result keeps exactly the pins it needs. It logs one DEBUG line
@@ -322,9 +374,12 @@ class Pins:
         return snap, self._last
 
     def finish(self, frame, fn, schema, rows):
+        install = _archive_reuse()
+
         def run(batches):
             import pandas as pd
 
+            install()
             parts = list(batches)
             if parts:
                 yield fn(pd.concat(parts, ignore_index=True))

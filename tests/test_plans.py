@@ -570,18 +570,30 @@ def test_rake_wordstats_broadcast(spark, entry):
     assert st.broadcast_hash_joins >= 1
 
 
+def _assert_scorer_below_partial(plan: str, partial: str) -> None:
+    """The plan's one Python stage sits below its partial limit and
+    reads no query_id: it scores data rows into pairs, and does not
+    rank scored rows as a per-partition reducer would."""
+    stage = [line for line in plan.splitlines() if "MapInPandas" in line]
+    assert len(stage) == 1 and plan.index("MapInPandas") > plan.index(partial), plan[:3000]
+    assert "query_id#" not in stage[0].split(")#")[0], stage[0]
+
+
 def test_topk_scores_each_pair_once(spark, entry):
     """The top-k NULL/NaN guard sits above the rank window, so the
     optimized plan evaluates the similarity kernel once per pair: no
-    copy of it inlined into a join condition."""
-    for q in (
-        entry.q_sim_cosine_topk,
-        entry.q_sim_mips_topk,
-        entry.q_sim_l2_topk,
-        entry.q_sim_hamming_topk,
-    ):
-        opt = q(spark, SF)._jdf.queryExecution().optimizedPlan().toString()
-        assert opt.count("zip_with(") == 1, opt[:3000]
+    copy of it inlined into a join condition. The exact scans score in
+    one Python stage, below the partial limit of their rank window;
+    hamming keeps its one ``zip_with`` kernel."""
+    scans = (entry.q_sim_cosine_topk, entry.q_sim_mips_topk, entry.q_sim_l2_topk)
+    for q in (*scans, entry.q_sim_hamming_topk):
+        df = q(spark, SF)
+        opt = df._jdf.queryExecution().optimizedPlan().toString()
+        if q in scans:
+            assert "zip_with(" not in opt and opt.count("MapInPandas") == 1, opt[:3000]
+            _assert_scorer_below_partial(plan_string(df), ", Partial")
+        else:
+            assert opt.count("zip_with(") == 1, opt[:3000]
         joins = [line for line in opt.splitlines() if "Join" in line]
         assert not any("isnan" in line for line in joins), joins
 
@@ -674,10 +686,10 @@ def test_mmr_pool_partial_reduction(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").limit(200)
     qs = emb.limit(5)
     p = plan_string(ops.mmr_candidate_pool(emb, qs, pool=10))
-    assert "MapInPandas" not in p, p[:2000]
     final = p.index("row_number(), 10, Final")
     shuffle = p.index("Exchange hashpartitioning(query_id", final)
     assert shuffle < p.index("row_number(), 10, Partial", shuffle), p[:2000]
+    _assert_scorer_below_partial(p, "row_number(), 10, Partial")
 
 
 def test_hll_distinct_register_agg_is_bounded_and_no_cartesian(spark, entry):

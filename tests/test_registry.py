@@ -110,6 +110,29 @@ def _unpartitioned_windows(plan: str) -> list[str]:
     ]
 
 
+def _python_ranks(plan: str) -> bool:
+    """Whether a MapInPandas of ``plan`` can rank a query's scored
+    rows: it lies outside the subtree of every Partial
+    ``WindowGroupLimit`` on query_id (a node's subtree is the run of
+    lines after it that are indented deeper), or it reads a query_id
+    column, as a per-partition reducer of scored rows does. The exact
+    scans' scorer reads only data rows and emits the pairs."""
+    partial = None  # indent of the Partial whose subtree we are in
+    for line in plan.splitlines():
+        op = line.lstrip(" :+-")
+        indent = len(line) - len(op)
+        if partial is not None and indent <= partial:
+            partial = None
+        is_partial = op.startswith("WindowGroupLimit [query_id#") and op.endswith("Partial")
+        if partial is None and is_partial:
+            partial = indent
+        elif op.startswith("MapInPandas") and (
+            partial is None or "query_id#" in op.split(")#")[0]
+        ):
+            return True
+    return False
+
+
 def _unpruned_topk(plan: str) -> str | None:
     """Why a ``_topk`` frame's physical plan lets one reducer rank every
     scored row of a query, or None when it does not.
@@ -120,9 +143,11 @@ def _unpruned_topk(plan: str) -> str | None:
     frame's own window is the first one its plan prints. Where its
     input is already partitioned by query_id, Spark drops the exchange
     and the Partial; that input must then be an earlier top-k's
-    output, which is itself a recorded frame."""
-    if "MapInPandas" in plan:
-        return "ranks through a Python reducer (MapInPandas)"
+    output, which is itself a recorded frame. A Python stage may only
+    score pairs below a Partial limit (the exact scans' numpy scorer);
+    one at or above it, or one that reads query_id, ranks them."""
+    if _python_ranks(plan):
+        return "ranks through a Python stage (MapInPandas)"
     ops = [
         line.lstrip(" :+-")
         for line in plan.splitlines()
